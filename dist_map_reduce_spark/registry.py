@@ -386,31 +386,24 @@ def load_all() -> None:
     """
     # --- inside the WINDOW-slot correctness window ---
     pristine = not QUERIES  # tests may import operator modules first
-    # 21 modules holding 48 post-cascade r12-cohort names +
-    # zorder_events_keys (r15 cascade, stalest stamp on the board) +
-    # the r16-promoted streaming_postcompaction_neardup_flags
-    # (nothing else; text_entropy hopped OUT to the r13 cohort)
-    from dist_map_reduce_spark.functions import ann_recall  # noqa: F401
-    from dist_map_reduce_spark.functions import curation_ext  # noqa: F401
-    from dist_map_reduce_spark.functions import graph  # noqa: F401
-    from dist_map_reduce_spark.functions import multimodal_audio  # noqa: F401
-    from dist_map_reduce_spark.functions import packing  # noqa: F401
-    from dist_map_reduce_spark.functions import sampling_aes  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivf_kmeans  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivfadc_query  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivfpq  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_pq  # noqa: F401
-    from dist_map_reduce_spark.operators import approx  # noqa: F401
-    from dist_map_reduce_spark.operators import json_ops  # noqa: F401
-    from dist_map_reduce_spark.operators import linkage  # noqa: F401
-    from dist_map_reduce_spark.operators import timeseries_fill  # noqa: F401
-    from dist_map_reduce_spark.operators import tpch_full  # noqa: F401
-    from dist_map_reduce_spark.operators import tpch_partsupp  # noqa: F401
-    from dist_map_reduce_spark.operators import wordcount  # noqa: F401
-    from dist_map_reduce_spark.operators import zorder  # noqa: F401
-    from dist_map_reduce_spark.streaming import ingest_index_compaction  # noqa: F401
-    from dist_map_reduce_spark.streaming import postcompaction_flags  # noqa: F401
+    # r17 rotation: the r13 cohort with the cascades applied —
+    # clustering 3, dedup 4, semdedup 2, text_bpe 2, text_bpe_encode
+    # 4, histogram 3, scalar_fns 4, setops 4, sources_sinks 5, stats
+    # 5, timeseries 6, windows 6 + snapshot_diff 1 + text_entropy 1
+    from dist_map_reduce_spark.functions import clustering  # noqa: F401
+    from dist_map_reduce_spark.functions import dedup  # noqa: F401
+    from dist_map_reduce_spark.functions import semdedup  # noqa: F401
+    from dist_map_reduce_spark.functions import text_bpe  # noqa: F401
+    from dist_map_reduce_spark.functions import text_bpe_encode  # noqa: F401
+    from dist_map_reduce_spark.functions import text_entropy  # noqa: F401
+    from dist_map_reduce_spark.operators import histogram  # noqa: F401
+    from dist_map_reduce_spark.operators import scalar_fns  # noqa: F401
+    from dist_map_reduce_spark.operators import setops  # noqa: F401
+    from dist_map_reduce_spark.operators import snapshot_diff  # noqa: F401
+    from dist_map_reduce_spark.operators import sources_sinks  # noqa: F401
+    from dist_map_reduce_spark.operators import stats  # noqa: F401
+    from dist_map_reduce_spark.operators import timeseries  # noqa: F401
+    from dist_map_reduce_spark.operators import windows  # noqa: F401
 
     # the window cut-line guard only holds in a fresh process (the
     # driver's import path); when a test pre-imports operator
@@ -423,62 +416,69 @@ def load_all() -> None:
             f"register {len(QUERIES)} queries, expected {WINDOW}"
         )
 
-    # --- outside the window: driver-green in r13-r15, unchanged ---
+    # --- outside the window ---
     from dist_map_reduce_spark.functions import (  # noqa: F401
+        ann_recall,
         chunking,
-        clustering,
         curation,
+        curation_ext,
         curation_funnel,
-        dedup,
         dedup_simhash,
         embedding_pca,
+        graph,
         lm_bigram,
         lm_score,
         multimodal,
+        multimodal_audio,
         multimodal_ext,
         multimodal_image,
+        packing,
         python_udfs,
         quality_ccnet_buckets,
         quality_model,
         resample_weighted,
-        semdedup,
+        sampling_aes,
         shard_export,
+        similarity,
+        similarity_ivf_kmeans,
+        similarity_ivfadc_query,
+        similarity_ivfpq,
+        similarity_pq,
         text,
         text_bm25,
         text_boilerplate,
-        text_bpe,
-        text_bpe_encode,
         text_dupngrams,
-        text_entropy,
         text_winnow,
     )
     from dist_map_reduce_spark.operators import (  # noqa: F401
+        approx,
         arrays_maps,
         bucketing,
         cohorts,
         contribution,
         delta_merge,
         etl,
-        histogram,
         intervals,
+        json_ops,
+        linkage,
         profiling,
         relational,
-        scalar_fns,
         scd,
         sequences,
-        setops,
         skew,
         skyline,
-        snapshot_diff,
-        sources_sinks,
         sources_sinks_orc,
-        stats,
         stats_robust,
         subqueries,
-        timeseries,
+        timeseries_fill,
+        tpch_full,
         tpch_more,
-        windows,
+        tpch_partsupp,
+        wordcount,
+        zorder,
     )
     from dist_map_reduce_spark.streaming import ingest_dedup_query  # noqa: F401
+    from dist_map_reduce_spark.streaming import ingest_index_compaction  # noqa: F401
     from dist_map_reduce_spark.streaming import pipelines  # noqa: F401
+    from dist_map_reduce_spark.streaming import postcompaction_flags  # noqa: F401
     from dist_map_reduce_spark.streaming import wordcount_stream  # noqa: F401

@@ -19,7 +19,6 @@ from dist_map_reduce_spark import registry
 from dist_map_reduce_spark.session import get_spark
 
 registry.load_all()
-registry.load_staged()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -47,16 +46,12 @@ HEADLINE = [
     "text_tf_idf_top_terms",
     "text_repetition_signals",
     "q21_suppliers_who_kept_waiting",
-    # r5 additions: the at-scale ANN entry points, one streaming
-    # pipeline (availableNow wall-time, full read->window->sink),
-    # and the three new r5 operators
     "similarity_ann_ivf_topk",
     "ann_lsh_topk_scaled",
     "streaming_tumbling_1h",
     "simhash_hamming_neardup",
     "sink_orc_roundtrip_agg",
     "events_resample_5m_locf",
-    # r6 additions: corpus-statistic + robust-stats operators
     "events_resample_5m_interp",
     "contribution_abc_customers",
     "similarity_ann_ivf_kmeans_topk",
@@ -79,9 +74,6 @@ HEADLINE = [
     "scd2_point_in_time_revenue",
     "event_transition_matrix",
     "supplier_triangles",
-    # r7 additions: the partsupp-derived TPC-H tail, the ANN recall
-    # harness (runs all five variant searches + exact), and the real
-    # WAV encode->decode pipeline
     "q2_min_cost_supplier",
     "q9_product_type_profit",
     "q11_important_stock",
@@ -100,8 +92,6 @@ HEADLINE = [
     "fuzzy_match_pairs",
     "weighted_sample_aes",
     "snapshot_diff_customers",
-    # r8 additions: O(log n) star-contraction components, SemDeDup,
-    # BPE learn+encode, approx equi-depth, char entropy
     "dedup_clusters_logn",
     "semdedup_prune_list",
     "text_bpe_merge_table",
@@ -110,11 +100,6 @@ HEADLINE = [
     "text_char_entropy",
     "text_bpe_token_ids_fingerprint",
     "text_winnow_fingerprints",
-    # r8-late STAGED additions (registry.STAGED_QUERIES — the r9
-    # promotion set, perf-tracked a round early): bigram LM,
-    # shard-export round-trip, gramian PCA, winnow pair/decontam
-    # detectors, the streaming ingest-dedup replay, and the
-    # end-to-end curation funnel
     "lm_bigram_doc_scores",
     "corpus_shard_manifest",
     "embedding_gramian",
@@ -123,161 +108,52 @@ HEADLINE = [
     "streaming_ingest_dedup",
     "curation_funnel",
     "multimodal_image_resize",
-    # r11 STAGED additions (promoted to @query in r12): the
-    # oracle-checked IVFADC search and the band-index compaction
-    # maintenance query
     "similarity_ann_ivfadc_topk",
     "streaming_ingest_index_compaction",
-    # r12 STAGED additions (promoted to @query in r13): CCNet
-    # perplexity bucketing and the CDC MERGE
     "quality_ccnet_buckets",
     "cdc_merge_upsert_orders",
-    # r13 STAGED-FOREVER additions (saturation policy —
-    # registry.load_all docstring): the compacted-index flag
-    # certification and BM25 ranked retrieval, perf-tracked like
-    # every staged query
     "streaming_postcompaction_neardup_flags",
     "text_bm25_topk",
-    # r14 STAGED-FOREVER additions: count-min-sketch heavy hitters
-    # (exact count vs CMS estimate + overcount for the top-10 words)
-    # and the Bloom decontamination pre-filter (no-false-negative
-    # contract + visible false positives)
     "text_cms_heavy_hitters",
     "text_bloom_decontaminate",
-    # and KMV source-overlap, completing the r14 sketch trio
     "text_kmv_source_jaccard",
-    # r15 RETIREE: demoted to @staged_query in the displacement that
-    # promoted text_bm25_topk — staged queries stay bench-tracked
     "join_semi_active_customers",
-    # r15 STAGED-FOREVER addition: t-digest quantile merge (per-group
-    # digests -> merged global digest -> 7-probe panel graded against
-    # the exact interpolated quantiles)
     "tdigest_quantile_merge",
-    # r15 STAGED-FOREVER addition: theta-sketch set algebra (union /
-    # intersection / difference cardinalities from the shared KMV
-    # signatures, exact arms alongside)
     "text_theta_set_ops",
-    # r15 STAGED-FOREVER addition: native HLL with exact cross-engine
-    # parity (register table + in-plan merge + estimate, graded
-    # against exact count-distinct per group)
     "hll_native_customer_cardinality",
-    # r15 EXTRA (library twin, like the skew pair): the zero-shuffle
-    # mapInPandas t-digest build next to its certified per-group form
     "tdigest_partition_path",
-    # r15 STAGED-FOREVER addition: length-bucketed padding waste
-    # (power-of-two classes + truncation accounting + total row)
     "length_bucket_padding_waste",
-    # r16 RETIREE: demoted to @staged_query in the displacement that
-    # promoted streaming_postcompaction_neardup_flags — staged
-    # queries stay bench-tracked
     "rollup_lineitem_flags",
-    # r16 STAGED-FOREVER addition: mergeable reservoir sample
-    # (per-source bottom-K reservoirs -> certified merge == direct
-    # global bottom-K, deterministic md5 race)
     "reservoir_merge_sample",
-    # r16 EXTRA (library twin, like tdigest_partition_path): the
-    # zero-shuffle per-Arrow-batch reservoir build
     "reservoir_partition_path",
-    # r16 STAGED-FOREVER addition: bounded-window EWMA smoothing per
-    # event series (one window, exact power-of-two weights)
     "events_ewma_smooth",
-    # r16 STAGED-FOREVER addition: recursive CTE hierarchy traversal
-    # (Spark 4 WITH RECURSIVE over the parent(k)=k DIV 2 order
-    # forest, log-bounded depth)
     "recursive_order_lineage",
-    # r16 STAGED-FOREVER addition: watermarked stream-stream LEFT
-    # OUTER join (state-expiry-driven null emission, min-policy
-    # watermark cut mirrored by the oracle)
     "streaming_stream_stream_left_join",
-    # r16 STAGED-FOREVER addition: streaming HLL — per-micro-batch
-    # registers max-merged across 4 real replay batches, one-pass
-    # oracle certifies the mergeability contract
     "streaming_hll_merge",
-    # r16 STAGED-FOREVER addition: custom Python Data Source
-    # (SPARK-44076) — md5-derived synthetic table, oracle replays
-    # the generation spec with generate_series
     "python_datasource_synth",
-    # r16 STAGED-FOREVER addition: AMS / count-sketch F2 moment
-    # (signed counter grids per source, element-wise-sum merge,
-    # exact rank-3-of-5 median graded against the exact F2)
     "text_ams_f2_moment",
-    # r16 STAGED-FOREVER addition: incremental aggregate maintenance
-    # (signed CDC deltas folded into the per-group aggregate,
-    # certified against the full recompute with exact DECIMALs)
     "ivm_orders_agg_maintenance",
-    # r16 STAGED-FOREVER addition: exact-budget stratified sampling
-    # (Hamilton largest-remainder quotas + md5 bottom-quota per
-    # stratum, sample content certified by the sampled-id sum)
     "stratified_hamilton_sample",
-    # r16 STAGED-FOREVER addition: streaming reservoir sample
-    # (bottom-K race tags as micro-batch state; parity vs the
-    # one-pass bottom-K IS the mergeability certification)
     "streaming_reservoir_sample",
-    # r16 STAGED-FOREVER addition: LATERAL correlated top-N with
-    # LIMIT, decorrelated to WindowGroupLimit + one equi-join
     "lateral_topn_orders_per_customer",
-    # r16 STAGED-FOREVER addition: mapInArrow text statistics
-    # (pyarrow.compute kernels, zero pandas; JVM twin pinned)
     "arrow_text_stats_per_source",
-    # r16 STAGED-FOREVER addition: PSI distribution-drift monitor
-    # (integer equi-width buckets, Laplace smoothing, round-after-ln;
-    # the bucket=-1 row is the drift scalar)
     "drift_psi_orders",
-    # r16 STAGED-FOREVER addition: PPJoin exact set-similarity join
-    # (prefix-filtered lossless index, cross-multiplied integer
-    # threshold, in-output cap counter certifying completeness)
     "ppjoin_jaccard_pairs",
-    # r16 STAGED-FOREVER addition: Misra-Gries mergeable heavy
-    # hitters (per-source batch-MG counters, PODS-2012 merge, the
-    # one-sided error theorem certified as within_bound)
     "text_mg_heavy_hitters",
-    # r16 STAGED-FOREVER addition: market-basket association rules
-    # (bitmask baskets -> composition table, integer-certified
-    # lift > 1, rule universe bounded by the brand dimension)
     "basket_brand_rules",
-    # r16 STAGED-FOREVER addition: strictly-ordered conversion
-    # funnel (pushdown-filtered per-step scans, shrinking user-scale
-    # frontiers, K-row output)
     "funnel_conversion_events",
-    # r16 STAGED-FOREVER addition: bigram PMI collocations (one
-    # corpus-scale pair count, vocabulary-scale margins, exact
-    # decimal positivity certification)
     "text_pmi_bigrams",
-    # r16 STAGED-FOREVER addition: chi-square independence test
-    # (complete contingency grid, dimension-bounded algebra)
     "chisq_segment_priority",
-    # r16 STAGED-FOREVER addition: Benford first-digit audit
-    # (integer-cents digit extraction, ln-only expectations)
     "benford_order_totals",
-    # r16 STAGED-FOREVER addition: last-touch attribution (one
-    # user-keyed window, channel-bounded output)
     "attribution_last_touch",
-    # r16 STAGED-FOREVER addition: funnel time-to-convert (exact
-    # microsecond deltas over the shared funnel frontiers)
     "funnel_time_to_convert",
-    # r16 STAGED-FOREVER addition: process-mining eventually-follows
-    # matrix (existential ordering via per-(user,type) min/max)
     "event_eventually_follows",
-    # r16 STAGED-FOREVER addition: session path mining (packed-
-    # bigint path state, independent string_agg oracle)
     "session_path_counts",
-    # r16 STAGED-FOREVER addition: RFM segmentation (cutpoint
-    # quintiles, map-side scoring, no global ntile sort)
     "rfm_customer_segments",
-    # r16 STAGED-FOREVER addition: two-proportion A/B z-test
-    # (exact-count arms, IEEE-exact sqrt algebra, 1-row output)
     "abtest_purchase_conversion",
-    # r16 STAGED-FOREVER addition: weekly seasonality profile
-    # (168-cell ANOVA decomposition, R2 variance-explained)
     "events_seasonality_dow_hour",
-    # r16 STAGED-FOREVER addition: Lorenz curve + Gini (shared RFM
-    # rollup slot, integer-rank deciles)
     "lorenz_gini_customer_spend",
-    # r16 STAGED-FOREVER addition: Welch unequal-variance t-test on
-    # purchase value (the z-test's magnitude companion)
     "abtest_purchase_value_welch",
-    # r16 STAGED-FOREVER addition: mutual information + NMI over
-    # the shared contingency slot
     "mutual_info_segment_priority",
 ]
 
@@ -389,11 +265,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = (
-            registry.QUERIES.get(name)
-            or registry.STAGED_QUERIES.get(name)
-            or EXTRA.get(name)
-        )
+        fn = registry.QUERIES.get(name) or EXTRA.get(name)
         if fn is None:
             continue
         best = float("inf")

@@ -29,10 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
+
 # importing the variant modules registers their queries AND their
 # oracle SQL, which this module composes into the recall oracle
-# (similarity_ivfadc_query is @staged_query until the r12 window —
-# its oracle lives in STAGED_ORACLES until the promotion flips it)
 from dist_map_reduce_spark.functions import (  # noqa: F401
     similarity,
     similarity_ivfadc_query,
@@ -40,12 +40,7 @@ from dist_map_reduce_spark.functions import (  # noqa: F401
     similarity_ivfpq,
     similarity_pq,
 )
-from dist_map_reduce_spark.registry import (
-    ORACLES,
-    STAGED_ORACLES,
-    query,
-    resolve_oracle,
-)
+from dist_map_reduce_spark.registry import ORACLES, QUERIES, query
 
 # variant label -> (registered query name, callable)
 _VARIANTS: dict[str, str] = {
@@ -66,7 +61,7 @@ def _recall_oracle() -> str:
     inside a FROM subquery)."""
     union = "\n      UNION ALL ".join(
         f"SELECT '{label}' AS variant, query_id, vec_id\n"
-        f"      FROM ({resolve_oracle((ORACLES | STAGED_ORACLES)[name])})"
+        f"      FROM ({ORACLES[name]})"
         f" AS {label}_t"
         for label, name in _VARIANTS.items()
     )
@@ -77,7 +72,7 @@ def _recall_oracle() -> str:
                row_number() OVER (
                  PARTITION BY query_id ORDER BY cos DESC, vec_id ASC
                ) AS rn
-        FROM ({resolve_oracle(ORACLES[_EXACT])}) AS exact_t
+        FROM ({ORACLES[_EXACT]}) AS exact_t
       ) r WHERE rn <= 5
     ),
     variants AS (
@@ -101,9 +96,6 @@ def exact_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     every recall consumer — this query, the OPQ comparison, the
     report tool — reads the same cached set."""
     from pyspark.sql import Window as W
-
-    from dist_map_reduce_spark.caching import get_or_build
-    from dist_map_reduce_spark.registry import QUERIES
 
     def build() -> DataFrame:
         w = W.partitionBy("query_id").orderBy(
@@ -149,13 +141,10 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-pair set feeds BOTH the overlap join and the denominator,
     so it is persisted through the bounded cache slot — otherwise
     the full exact scan runs twice per invocation."""
-    from dist_map_reduce_spark.registry import QUERIES, STAGED_QUERIES
-
     exact5 = exact_top5(spark, sf_dir)
     variants = None
     for label, name in _VARIANTS.items():
-        fn = QUERIES.get(name) or STAGED_QUERIES[name]
-        v = fn(spark, sf_dir).select(
+        v = QUERIES[name](spark, sf_dir).select(
             F.lit(label).alias("variant"), "query_id", "vec_id"
         )
         variants = v if variants is None else variants.unionAll(v)

@@ -1,4 +1,4 @@
-"""Arrow-native mapInArrow text statistics (staged-forever, r16) —
+"""Arrow-native mapInArrow text statistics —
 the UDF surface's missing member. The engine exercises pandas_udf,
 applyInPandas, mapInPandas, applyInPandasWithState and the UDTF
 (SURVEY §2.2 UDF row); ``mapInArrow`` (SPARK-37227) is the
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _VOWEL_RE = "[aeiou]"
 _WORD_RE = "[a-zA-Z]+"
@@ -108,15 +108,14 @@ def jvm_stats_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-@staged_query("arrow_text_stats_per_source", oracle=_ORACLE)
+@query("arrow_text_stats_per_source", oracle=_ORACLE)
 def arrow_text_stats_per_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(source, n_docs, n_chars, n_vowels, n_words): corpus text
     statistics whose per-document projection runs as a mapInArrow
     stage (pyarrow.compute kernels, zero pandas), aggregated
-    JVM-side. STAGED-FOREVER under the saturation policy
-    (registry.load_all)."""
+    JVM-side."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         arrow_stats_rows(docs)

@@ -53,9 +53,8 @@ from dist_map_reduce_spark.registry import query
 # S-curve empirically).
 
 # Constants, shingling, hot-key cap/pair generation, and the minhash
-# oracle-SQL builders live in dedup_common (registration-free) so
-# sibling modules (dedup_simhash, curation, graph) reuse them without
-# importing this module's registrations; re-exported here for
+# oracle-SQL builders live in dedup_common, shared with sibling
+# modules (dedup_simhash, curation, graph); re-exported here for
 # existing importers.
 from dist_map_reduce_spark.functions.dedup_common import (  # noqa: E402,F401
     _CANDIDATE_PAIRS_SQL,

@@ -1,10 +1,5 @@
-"""Shared dedup primitives (registration-free).
-
-Extracted from ``functions/dedup.py`` so sibling modules
-(``dedup_simhash``) can reuse the hot-key cap and pair generation
-WITHOUT triggering dedup's query registrations at import time — the
-registry's 50-slot correctness window is ordered by first import
-(registry.load_all), so helper reuse must not drag registrations in.
+"""Shared dedup primitives: the hot-key cap, pair generation and the
+minhash oracle-SQL builders used by ``dedup`` and its sibling modules.
 """
 
 from __future__ import annotations

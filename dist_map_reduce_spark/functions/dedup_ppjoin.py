@@ -1,5 +1,5 @@
 """Exact set-similarity join via prefix filtering — the All-Pairs /
-PPJoin family (staged-forever, r16). Bayardo, Ma & Srikant (WWW '07)
+PPJoin family. Bayardo, Ma & Srikant (WWW '07)
 "Scaling Up All Pairs Similarity Search"; Xiao et al. (WWW '08)
 PPJoin. The dedup family's pair generators are all APPROXIMATE
 recalls (MinHash-LSH bands, SimHash radius, the frequency-CAPPED
@@ -62,7 +62,7 @@ from dist_map_reduce_spark.functions.dedup_common import (
     _shingle_sql,
     shingles,
 )
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 T_NUM, T_DEN = 4, 5  # threshold t = 4/5 = 0.8, kept rational
 
@@ -145,14 +145,13 @@ def prefix_postings(sh: DataFrame) -> DataFrame:
     )
 
 
-@staged_query("ppjoin_jaccard_pairs", oracle=_ORACLE)
+@query("ppjoin_jaccard_pairs", oracle=_ORACLE)
 def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_inter, sz_a, sz_b, jaccard, n_capped_postings)
     — every document pair with shingle Jaccard >= 0.8, found through
     the prefix-filtered inverted index and verified exactly with the
     cross-multiplied integer predicate. n_capped_postings certifies
-    the safety valve stayed closed (0 => provably complete answer).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    the safety valve stayed closed (0 => provably complete answer)."""
     docs = load_table(spark, sf_dir, "documents")
     # the shingle table feeds five consumers (df counts, sizes, rank,
     # and both verification arms) — one tracked persist slot

@@ -30,9 +30,6 @@ SUM association order differs, and the 6-dp round absorbs those ULPs
 (values are O(n) diagonal / O(√n) off-diagonal — double precision
 leaves ~9 digits of headroom at sf0.01). `+ 0` normalizes −0.0 on
 near-zero off-diagonals in both engines (the profiling.py fix).
-
-Promotion state: PROMOTED to @query in the r11 window (see
-registry.load_all's rotation arithmetic).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Length-bucketed padding-waste certification (staged-forever, r15)
+"""Length-bucketed padding-waste certification
 — the batch-provisioning datum a training/inference pipeline computes
 before it packs anything.
 
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 MIN_BUCKET = 16
 MAX_BUCKET = 4096
@@ -104,14 +104,13 @@ FROM per_bucket
 """
 
 
-@staged_query("length_bucket_padding_waste", oracle=_ORACLE)
+@query("length_bucket_padding_waste", oracle=_ORACLE)
 def length_bucket_padding_waste(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(bucket_len, n_docs, used_tokens, capacity, truncated_tokens,
     waste_frac) per populated power-of-two length class, plus the
-    bucket_len = -1 TOTAL row. STAGED-FOREVER under the saturation
-    policy (registry.load_all)."""
+    bucket_len = -1 TOTAL row."""
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(F.split("text", " "))
     classed = docs.select(

@@ -194,8 +194,7 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real image RESIZE through the same two-stage pipeline (staged r9,
-# PROMOTED to @query in the r11 window).
+# Real image RESIZE through the same two-stage pipeline.
 # The brief's multimodal op list is decode / feature-extract / RESIZE
 # / frame-sample; this adds the resize leg with the same no-codec
 # realism: box-average downsampling (the standard area-interpolation

@@ -27,14 +27,8 @@ interpolate identical doubles, and assignment is a pure comparison;
 per-bucket avg is rounded to 6 dp to absorb sum-order ULPs (the
 lm_score discipline).
 
-Promoted into the r13 correctness window (registry.load_all
-docstring has the arithmetic: 48 r9 re-stamps + 2 promotions =
-50). Module scope imports
-only registration-free modules; the lm_bigram dependency is imported
-lazily inside the callable and the oracle is a LAZY composer over the
-registered lm_bigram oracle (the curation_funnel pattern — a
-module-scope import here would drag lm_bigram_doc_scores into
-whatever window a pristine importer is building).
+The oracle wraps the registered lm_bigram oracle (the
+curation_funnel composition pattern).
 
 Reference parity: the reference's only text op is word count
 (/root/reference/src/worker/worker.go:270-288); this belongs to the
@@ -46,18 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import query
+from dist_map_reduce_spark.functions.lm_bigram import bigram_scores
+from dist_map_reduce_spark.registry import ORACLES, query
 
-
-def _oracle() -> str:
-    """Lazy composer: wraps the registered lm_bigram oracle (importing
-    it here at compose time — after load_all — not at module scope)."""
-    from dist_map_reduce_spark.registry import ORACLES, resolve_oracle
-
-    base = resolve_oracle(ORACLES["lm_bigram_doc_scores"])
-    return f"""
-    WITH s AS ({base}),
+_ORACLE = f"""
+    WITH s AS ({ORACLES["lm_bigram_doc_scores"]}),
     thr AS (
       SELECT quantile_cont(bits_per_token, [1.0/3, 2.0/3]) AS q FROM s
     )
@@ -74,14 +63,11 @@ def _oracle() -> str:
     """
 
 
-@query("quality_ccnet_buckets", oracle=_oracle)
+@query("quality_ccnet_buckets", oracle=_ORACLE)
 def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_docs, total_bigrams, avg_bpt, min_bpt, max_bpt):
     CCNet head/middle/tail partition of the corpus by bits-per-token
     terciles of the interpolated-bigram LM score."""
-    from dist_map_reduce_spark.caching import persist_tracked
-    from dist_map_reduce_spark.functions.lm_bigram import bigram_scores
-
     docs = load_table(spark, sf_dir, "documents")
     # the per-doc score table feeds TWO consumers (the threshold
     # aggregate and the bucket assignment) — persist it so the LM

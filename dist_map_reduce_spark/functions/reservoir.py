@@ -1,5 +1,5 @@
 """Mergeable reservoir sampling with a certified merge step
-(staged-forever, r16) — the bounded-uniform-sample member of the
+ — the bounded-uniform-sample member of the
 mergeable-summaries family (CMS = frequency, Bloom = membership,
 KMV/theta/HLL = cardinality, t-digest = quantiles, THIS = sample).
 
@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 K = 64  # reservoir size — per stratum AND global (the merge-
 # equals-direct certification needs per-stratum K >= global K)
@@ -117,15 +117,14 @@ FROM merged m, cert c, scalars s
 """
 
 
-@staged_query("reservoir_merge_sample", oracle=_ORACLE)
+@query("reservoir_merge_sample", oracle=_ORACLE)
 def reservoir_merge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-row global uniform sample built THROUGH per-source
     reservoirs plus the merge certification: (sample_rank, doc_id,
     source, prio, src_rank) per sampled row, with broadcast scalars
     merged_matches_direct (must equal the sample size — the merged
     reservoir is rank-for-rank the direct global bottom-K),
-    n_strata, corpus_rows. STAGED-FOREVER under the saturation
-    policy (registry.load_all)."""
+    n_strata, corpus_rows."""
     base = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source")

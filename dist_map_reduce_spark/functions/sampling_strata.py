@@ -1,5 +1,5 @@
 """Exact-budget stratified sampling via Hamilton largest-remainder
-apportionment (staged-forever, r16).
+apportionment.
 
 The sampling family covers per-stratum RATE sampling
 (stratified_sample_by_lang — keep p% of each language), weighted
@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 BUDGET = 97  # prime: uniform strata still yield positive remainders
 
@@ -184,7 +184,7 @@ def hamilton_quotas(sizes: DataFrame, budget: int) -> DataFrame:
     )
 
 
-@staged_query("stratified_hamilton_sample", oracle=_ORACLE)
+@query("stratified_hamilton_sample", oracle=_ORACLE)
 def stratified_hamilton_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -192,8 +192,7 @@ def stratified_hamilton_sample(
     sample_id_sum) per stratum plus the '__total__' row whose quota
     and n_sampled must equal BUDGET exactly — proportional allocation
     by largest remainder with the sampled-id sum certifying the
-    sample content. STAGED-FOREVER under the saturation policy
-    (registry.load_all)."""
+    sample content."""
     base = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source")

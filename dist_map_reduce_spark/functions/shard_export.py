@@ -35,9 +35,6 @@ identical in JVM and DuckDB; the sort key is the hex string itself
 (lexicographic order on hex = numeric order on the 128-bit value),
 and conv()'s 32-bit slice parses to the same BIGINT both sides — the
 dedup_common discipline.
-
-Promotion state: PROMOTED to @query in the r11 window (see
-registry.load_all's rotation arithmetic).
 """
 
 from __future__ import annotations

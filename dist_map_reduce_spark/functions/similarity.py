@@ -18,10 +18,8 @@ registered fixture queries pin ``N_PLANES = 8`` so their oracles stay
 static.
 
 The geometry/index math (hyperplanes, cosine, k-means fit, the IVF
-cell-restricted search) lives registration-free in
-``similarity_common`` so other modules — the k-means IVF variant in
-``similarity_ivf_kmeans`` — can reuse it without dragging this
-module's seven registrations into the correctness window. Names are
+cell-restricted search) lives in ``similarity_common``, shared with
+the k-means IVF variant in ``similarity_ivf_kmeans``. Names are
 re-imported here for compatibility (tests and SCALE.md reference
 them via this module).
 """

@@ -25,14 +25,6 @@ LUTs → ADC sum → top-5 per query with (adist asc, vec_id asc)
 tie-breaks. ~K_CELLS× more codebook CTE rows than the shared-book
 IVF-PQ oracle, but structurally the same mechanical mirror.
 
-Window discipline (registry.load_all contract): module scope imports
-ONLY registration-free modules (registry, similarity_common); the
-registering modules (similarity_pq for M_SUB/SUBDIM/_d2_sql,
-similarity_ivfpq for the search itself and IVFADC_K_CODES) are
-imported lazily inside the callables, and the oracle is a LAZY
-zero-arg composer — so when this module moves into the r12
-correctness window it registers exactly ONE query, no riders.
-
 Reference parity: the reference engine has no ANN surface (its only
 query is word count — /root/reference/src/worker/worker.go:270-288);
 this is part of the training-data-pipeline extension surface.
@@ -47,25 +39,20 @@ from dist_map_reduce_spark.functions.similarity_common import (
     NPROBE,
     kmeans_ctes,
 )
+from dist_map_reduce_spark.functions.similarity_ivfpq import (
+    IVFADC_K_CODES,
+    ivfadc_residual_topk,
+)
+from dist_map_reduce_spark.functions.similarity_pq import M_SUB, SUBDIM, _d2_sql
 from dist_map_reduce_spark.registry import query
 
 # per-cell Lloyd rounds — MUST equal similarity_ivfpq._pq_fit_percell's
-# default (pinned by the parity test; imported lazily there)
+# default (pinned by the parity test)
 _PERCELL_ROUNDS = 2
 
 
 def ivfadc_oracle_sql() -> str:
-    """The full IVFADC pipeline as one DuckDB query (lazy composer —
-    see the module docstring for why the imports live here)."""
-    from dist_map_reduce_spark.functions.similarity_ivfpq import (
-        IVFADC_K_CODES,
-    )
-    from dist_map_reduce_spark.functions.similarity_pq import (
-        M_SUB,
-        SUBDIM,
-        _d2_sql,
-    )
-
+    """The full IVFADC pipeline as one DuckDB query."""
     # L2-normalized embeddings — the engine's `emb`. NOT rounded:
     # see ivfadc_residual_topk's normalization comment (rounding here
     # decimal-aligns every downstream average onto .5e-6 round
@@ -202,14 +189,10 @@ def ivfadc_oracle_sql() -> str:
     )
 
 
-@query("similarity_ann_ivfadc_topk", oracle=ivfadc_oracle_sql)
+@query("similarity_ann_ivfadc_topk", oracle=ivfadc_oracle_sql())
 def similarity_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC top-5 (query_id, vec_id, adist): per-cell residual-PQ
     compressed-domain search — normalize, probe the NPROBE nearest
     k-means cells, score candidates by summed lookups against their
     home cell's residual codebook."""
-    from dist_map_reduce_spark.functions.similarity_ivfpq import (
-        ivfadc_residual_topk,
-    )
-
     return ivfadc_residual_topk(spark, sf_dir)

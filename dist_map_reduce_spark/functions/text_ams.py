@@ -1,4 +1,4 @@
-"""AMS / count-sketch second frequency moment (staged-forever, r16).
+"""AMS / count-sketch second frequency moment.
 
 The mergeable-summaries family covers frequency point queries (CMS),
 membership (Bloom), cardinality (KMV / theta / native HLL), quantiles
@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 AMS_ROWS = 5  # independent hash rows (odd -> exact median at rank 3)
 AMS_WIDTH = 128  # signed counters per row (std/row ~ sqrt(2/B) ~ 12.5%)
@@ -190,13 +190,12 @@ def _median_f2(all_grid: DataFrame) -> DataFrame:
     )
 
 
-@staged_query("text_ams_f2_moment", oracle=_ORACLE)
+@query("text_ams_f2_moment", oracle=_ORACLE)
 def text_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(grp, f2_exact, f2_est, rel_err) per documents.source plus the
     '__merged__' corpus row whose counters are the element-wise SUM
     of the source grids — the AMS merge certified in-plan, graded
-    against the exact second moment both per source and merged.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    against the exact second moment both per source and merged."""
     docs = load_table(spark, sf_dir, "documents")
     # NO pre-explode repartition, deliberately (the curation_ext /
     # text_winnow precedent was tested and did NOT reproduce here):

@@ -1,4 +1,4 @@
-"""Bloom-filter decontamination pre-filter (staged-forever, r14).
+"""Bloom-filter decontamination pre-filter.
 
 Winnowing decontamination (functions/text_winnow.py) is the exact
 substring-level pass; at 100 TB nobody runs it against every train
@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 BLOOM_K = 3  # hash rows
 BITS_PER_MEMBER = 8  # m = 8·n — deliberately collision-prone (see above)
@@ -70,7 +70,7 @@ def _bit_sql(fp_expr: str, seed: int) -> str:
     )
 
 
-@staged_query(
+@query(
     "text_bloom_decontaminate",
     oracle=f"""
     WITH mem AS (

@@ -38,13 +38,6 @@ decides broadcast); the probe panel and its term table are constants;
 candidate scoring is posting-bounded per term (see above). Nothing is
 quadratic and no global ordering exists anywhere (per-query top-5
 windows over the candidate set).
-
-PROMOTED to a driver slot in r15 via the first executed displacement
-(registry.load_all docstring): ``join_semi_active_customers`` retired
-under criterion (i) — ``join_semi_anti_balance`` strictly subsumes
-its LeftSemi plan coverage — and this query took the opened slot in
-the r15 correctness window (record: PLANS.md r15). Staged-forever
-r13–r14; parity held at sf0.001/0.01/0.1 throughout.
 """
 
 from __future__ import annotations

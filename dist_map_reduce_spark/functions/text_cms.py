@@ -1,4 +1,4 @@
-"""Count-min sketch heavy hitters (staged-forever, r14).
+"""Count-min sketch heavy hitters.
 
 The approximate-aggregates family (operators/approx.py: HLL distinct,
 GK quantiles) lacks the third classic streaming sketch: the count-min
@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 CMS_DEPTH = 4  # independent hash rows (md5-salted)
 CMS_WIDTH = 64  # buckets per row
@@ -75,7 +75,7 @@ def _bucket_sql(seed: int) -> str:
     )
 
 
-@staged_query(
+@query(
     "text_cms_heavy_hitters",
     oracle=f"""
     WITH words AS (

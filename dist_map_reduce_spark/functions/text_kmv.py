@@ -1,6 +1,6 @@
 """KMV (k-minimum-values / bottom-k theta) source-overlap sketch
-(staged-forever, r14 — the third of the round's classic sketches:
-CMS = frequency, Bloom = membership, KMV = cardinality/overlap).
+(the third classic sketch here: CMS = frequency, Bloom = membership,
+KMV = cardinality/overlap).
 
 "How much content do two crawl sources share?" at 100 TB is a set
 problem over per-source shingle sets that don't fit anywhere. The
@@ -49,7 +49,7 @@ from dist_map_reduce_spark.functions.dedup_common import (
     _shingle_sql,
     shingles,
 )
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 KMV_K = 64  # signature size (bottom-k hashes per source)
 
@@ -201,7 +201,7 @@ def merged_signature_flags(
 
 
 
-@staged_query(
+@query(
     "text_kmv_source_jaccard",
     oracle=f"""
     WITH ss AS (

@@ -1,4 +1,4 @@
-"""Misra-Gries mergeable heavy hitters (staged-forever, r16).
+"""Misra-Gries mergeable heavy hitters.
 
 The summary family so far covers the SKETCH classes — frequency via
 count-min (text_cms.py), membership via Bloom, cardinality via
@@ -61,7 +61,7 @@ from pyspark.sql.window import Window
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 MG_K = 8  # counters per summary
 _N_BUCKETS = 32  # tournament fan-in per source (engine-only)
@@ -175,14 +175,13 @@ def _kth_plus_one(df: DataFrame, keys: list, val: str) -> DataFrame:
     )
 
 
-@staged_query("text_mg_heavy_hitters", oracle=_ORACLE)
+@query("text_mg_heavy_hitters", oracle=_ORACLE)
 def text_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n_mg, n_exact, undercount, err_budget, within_bound)
     for the ≤ MG_K survivors of the merged per-source Misra-Gries
     summaries: n_mg never exceeds n_exact, undercount never exceeds
     the theorem's budget Σ_s λ_s + λ_m, and both facts ship as the
-    certified within_bound column. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    certified within_bound column."""
     from dist_map_reduce_spark.caching import get_or_build
 
     counts = _source_word_counts(spark, sf_dir)

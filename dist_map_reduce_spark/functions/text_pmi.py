@@ -1,4 +1,4 @@
-"""Adjacent-bigram PMI collocation extraction (staged-forever, r16).
+"""Adjacent-bigram PMI collocation extraction.
 
 The classic collocation statistic (Church & Hanks 1990's "word
 association ratio"; Manning & Schuetze ch. 5) the text family
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 MIN_CO = 5  # minimum bigram count for an emitted collocation
 
@@ -104,12 +104,10 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query("text_pmi_bigrams", oracle=_ORACLE)
+@query("text_pmi_bigrams", oracle=_ORACLE)
 def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, n_ab, n_a, n_b, n_bigrams, pmi) for every adjacent
-    bigram with n_ab ≥ MIN_CO and decimal-certified pmi > 0.
-    STAGED-FOREVER under the saturation policy (registry.load_all
-    docstring)."""
+    bigram with n_ab ≥ MIN_CO and decimal-certified pmi > 0."""
     pair = bigram_counts(spark, sf_dir)
     lm = pair.groupBy("w1").agg(
         F.sum("n_ab").cast("bigint").alias("n_a")

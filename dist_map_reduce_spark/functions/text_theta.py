@@ -1,5 +1,5 @@
 """Theta-sketch set algebra over the KMV source signatures
-(staged-forever, r15) — union / intersection / difference
+ — union / intersection / difference
 CARDINALITIES per source pair, from the same bottom-K signatures the
 Jaccard sketch (text_kmv.py) ships — imported from it, not copied:
 the hash, shingle subtree, signature, pair and flag builders are
@@ -65,7 +65,7 @@ from dist_map_reduce_spark.functions.text_kmv import (
     source_shingles,
     source_sizes,
 )
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 # hash space: 12 hex chars = 48 bits; double-exact (2^48 < 2^53)
 _HSPACE = float(1 << 48)
@@ -163,7 +163,7 @@ JOIN est e
 """
 
 
-@staged_query("text_theta_set_ops", oracle=_ORACLE)
+@query("text_theta_set_ops", oracle=_ORACLE)
 def text_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source_a, source_b, n_union, est_union, rel_err_union,
     n_inter, est_inter, n_diff_ab, est_diff_ab) for every unordered

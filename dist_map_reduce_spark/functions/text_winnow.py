@@ -302,9 +302,8 @@ def winnow_decontaminate(
 
 
 # ---------------------------------------------------------------------------
-# Queries over the library functions above (staged r9, PROMOTED to
-# @query in the r11 window after every-run parity coverage — see
-# registry.load_all). The fixture corpus is synthetic word soup with
+# Queries over the library functions above. The fixture corpus is
+# synthetic word soup with
 # essentially no organic >=23-char verbatim overlaps, so each query
 # deterministically PLANTS a shared passage into a doc_id-keyed
 # subset before detection — the pii_redact_docs discipline: the

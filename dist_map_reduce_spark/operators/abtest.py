@@ -1,4 +1,4 @@
-"""Two-proportion A/B test (staged-forever, r16).
+"""Two-proportion A/B test.
 
 The experimentation-analytics primitive every growth dashboard
 computes (the classic two-sample z-test for proportions, pooled
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH users AS (
@@ -134,7 +134,7 @@ FROM calc
 """
 
 
-@staged_query("abtest_purchase_value_welch", oracle=_WELCH_ORACLE)
+@query("abtest_purchase_value_welch", oracle=_WELCH_ORACLE)
 def abtest_purchase_value_welch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -148,8 +148,7 @@ def abtest_purchase_value_welch(
     discipline — through fixed-shape IEEE algebra (sqrt IEEE-exact);
     zero pooled variance NULL-guards t and df. One corpus-scale
     stage: the pushdown-filtered purchase scan into a 2-row arm
-    aggregate (map-side partial). STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    aggregate (map-side partial)."""
     purchases = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -219,14 +218,12 @@ def abtest_purchase_value_welch(
     )
 
 
-@staged_query("abtest_purchase_conversion", oracle=_ORACLE)
+@query("abtest_purchase_conversion", oracle=_ORACLE)
 def abtest_purchase_conversion(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(n_a, x_a, n_b, x_b, p_a, p_b, diff, se, z) — one row: the
-    pooled two-proportion z-test between the user_id-parity arms.
-    STAGED-FOREVER under the saturation policy (registry.load_all
-    docstring)."""
+    pooled two-proportion z-test between the user_id-parity arms."""
     users = (
         load_table(spark, sf_dir, "events")
         .select(

@@ -1,4 +1,4 @@
-"""Incremental aggregate maintenance / IVM (staged-forever, r16).
+"""Incremental aggregate maintenance / IVM.
 
 The lakehouse family covers applying a CDC batch to base ROWS
 (cdc_merge_upsert_orders, delta_merge.py) and diffing snapshots
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _N_CDC_BUCKETS = 10  # delta_merge.py's bucketing, verbatim
 _DEC = "DECIMAL(18,2)"
@@ -219,7 +219,7 @@ def recomputed_agg(b: DataFrame) -> DataFrame:
     )
 
 
-@staged_query("ivm_orders_agg_maintenance", oracle=_ORACLE)
+@query("ivm_orders_agg_maintenance", oracle=_ORACLE)
 def ivm_orders_agg_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -227,8 +227,7 @@ def ivm_orders_agg_maintenance(
     maintained_matches) per o_orderstatus: the incrementally
     maintained aggregate next to the full recompute over the merged
     table, with the IVM identity (maintained == recomputed, exact
-    DECIMAL equality) as a certified output column.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    DECIMAL equality) as a certified output column."""
     b = _bucketed(spark, sf_dir)
     m = maintained_agg(b)
     r = recomputed_agg(b).select(

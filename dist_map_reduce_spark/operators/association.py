@@ -1,4 +1,4 @@
-"""Market-basket association rules (staged-forever, r16).
+"""Market-basket association rules.
 
 The classic retail-analytics family (Agrawal, Imielinski & Swami,
 SIGMOD 1993) the relational surface lacked: frequent itemset PAIRS
@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 MIN_CO = 2  # minimum co-occurrence count for a rule
 
@@ -166,12 +166,11 @@ _BITS = (
 )
 
 
-@staged_query("basket_brand_rules", oracle=_ORACLE)
+@query("basket_brand_rules", oracle=_ORACLE)
 def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ante, cons, n_ante, n_cons, n_both, n_baskets, support,
     confidence, lift) for every directed brand rule with
-    n_both ≥ MIN_CO and integer-certified lift > 1. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    n_both ≥ MIN_CO and integer-certified lift > 1."""
     comps = compositions(spark, sf_dir)
     dim = brand_dim(spark, sf_dir)
     n = comps.agg(F.sum("cnt").cast("bigint").alias("n_baskets"))

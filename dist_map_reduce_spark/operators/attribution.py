@@ -1,4 +1,4 @@
-"""Last-touch revenue attribution (staged-forever, r16).
+"""Last-touch revenue attribution.
 
 The marketing-analytics primitive event warehouses pair with
 funnels (single-touch "last non-direct click" attribution — the GA /
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH seq AS (
@@ -70,13 +70,12 @@ FROM per_channel c, tot t
 """
 
 
-@staged_query("attribution_last_touch", oracle=_ORACLE)
+@query("attribution_last_touch", oracle=_ORACLE)
 def attribution_last_touch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(channel, n_purchases, attributed_value, value_share) — one
-    row per last-touch channel (incl. '(none)'). STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    row per last-touch channel (incl. '(none)')."""
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )

@@ -1,4 +1,4 @@
-"""Benford first-significant-digit audit (staged-forever, r16).
+"""Benford first-significant-digit audit.
 
 The classic forensic/data-quality screen (Benford 1938; Nigrini's
 fraud-audit practice; standard in warehouse DQ suites next to
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH cents AS (
@@ -103,13 +103,12 @@ def first_digit_counts(
     )
 
 
-@staged_query("benford_order_totals", oracle=_ORACLE)
+@query("benford_order_totals", oracle=_ORACLE)
 def benford_order_totals(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(digit, n_obs, n_total, p_obs, p_exp, deviation, mad_total)
-    — one row per first digit 1..9, complete grid. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    — one row per first digit 1..9, complete grid."""
     obs = first_digit_counts(spark, sf_dir)
     grid = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
     tot = obs.agg(F.sum("n_obs").cast("bigint").alias("n_total"))

@@ -27,9 +27,7 @@ fresh: fixture keys are positive). The merged result is fully
 checkable: every row carries ``src`` (kept/updated/inserted) and the
 oracle re-derives the whole merge relationally.
 
-Promoted into the r13 correctness window (48 r9 re-stamps + 2
-promotions — registry.load_all docstring). Module scope imports only
-registration-free modules. 100 TB posture: SCALE.md §CDC merge.
+100 TB posture: SCALE.md §CDC merge.
 """
 
 from __future__ import annotations

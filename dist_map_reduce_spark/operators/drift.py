@@ -1,5 +1,5 @@
 """Distribution drift monitoring: Population Stability Index
-(staged-forever, r16). Every production training pipeline watches
+. Every production training pipeline watches
 "did this feed's distribution move?" between corpus versions; the
 industry-standard scalar is PSI — the symmetrized KL divergence
 sum_i (p_i - q_i) * ln(p_i / q_i) over a fixed bucketing — with the
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 N_BUCKETS = 10
 _N_CDC_BUCKETS = 10  # delta_merge.py's change-feed bucketing
@@ -146,13 +146,12 @@ def _hist(df: DataFrame, bounds: DataFrame, out: str) -> DataFrame:
     )
 
 
-@staged_query("drift_psi_orders", oracle=_ORACLE)
+@query("drift_psi_orders", oracle=_ORACLE)
 def drift_psi_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(bucket, n_base, n_merged, p_base, p_merged, psi) over 10
     equi-width price buckets (base-table bounds) plus the bucket=-1
     total row whose psi is THE drift scalar — base orders vs the
-    cdc_merge-applied version, Laplace-smoothed, round-after-ln.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    cdc_merge-applied version, Laplace-smoothed, round-after-ln."""
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )

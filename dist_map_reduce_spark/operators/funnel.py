@@ -1,4 +1,4 @@
-"""Ordered multi-step conversion funnel (staged-forever, r16).
+"""Ordered multi-step conversion funnel.
 
 The product-analytics primitive every event warehouse ships
 (Mixpanel/Amplitude "funnels"; SQL formulations in e.g. the
@@ -51,7 +51,7 @@ from pyspark.sql.window import Window
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 STEPS = ("signup", "view", "click", "purchase")
 
@@ -184,14 +184,13 @@ def funnel_frontiers(
     return frontiers
 
 
-@staged_query("funnel_conversion_events", oracle=_ORACLE)
+@query("funnel_conversion_events", oracle=_ORACLE)
 def funnel_conversion_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(step, event_type, n_users, conv_from_prev, conv_from_start)
     — one row per funnel step, counts exact, ratios single IEEE
-    divisions rounded at the seam. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    divisions rounded at the seam."""
     frontiers = funnel_frontiers(spark, sf_dir)
     counts = None
     for k, (step, frontier) in enumerate(zip(STEPS, frontiers), 1):
@@ -221,7 +220,7 @@ def funnel_conversion_events(
     )
 
 
-@staged_query("funnel_time_to_convert", oracle=_TIMING_ORACLE)
+@query("funnel_time_to_convert", oracle=_TIMING_ORACLE)
 def funnel_time_to_convert(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -239,8 +238,7 @@ def funnel_time_to_convert(
     min/max are exact. All rounded 6 dp at the seam. Joins are
     user-scale frontier⋈frontier on the SAME persist slots the
     count query uses — invoking both funnel queries builds each
-    frontier once. STAGED-FOREVER under the saturation policy
-    (registry.load_all docstring)."""
+    frontier once."""
     frontiers = funnel_frontiers(spark, sf_dir)
     transitions = [(1, 2), (2, 3), (3, 4), (1, 4)]
     out = None

@@ -1,5 +1,4 @@
-"""Native HyperLogLog with EXACT cross-engine parity (staged-forever,
-r15) — count-distinct as a mergeable register table, certified
+"""Native HyperLogLog with EXACT cross-engine parity — count-distinct as a mergeable register table, certified
 end-to-end instead of contract-banded.
 
 The existing approx_count_distinct_users (operators/approx.py) runs
@@ -59,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 M_REG = 64  # registers
 _REST_BITS = 42  # 48-bit hash minus 6 bucket bits
@@ -147,7 +146,7 @@ FROM est e JOIN exact x ON e.g = x.g
 """
 
 
-@staged_query("hll_native_customer_cardinality", oracle=_ORACLE)
+@query("hll_native_customer_cardinality", oracle=_ORACLE)
 def hll_native_customer_cardinality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -158,8 +157,7 @@ def hll_native_customer_cardinality(
     OVERLAP WITHOUT COINCIDING (every event_type shares the exact
     same user set, which would make the merged row identical to the
     group rows and the merge demo vacuous), so the merged estimate
-    differs from every group estimate for real.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    differs from every group estimate for real."""
     ev = load_table(spark, sf_dir, "orders")
     h = (
         F.conv(

@@ -1,4 +1,4 @@
-"""Lorenz curve + Gini coefficient (staged-forever, r16).
+"""Lorenz curve + Gini coefficient.
 
 The concentration statistic that completes the contribution family:
 `contribution_abc_customers` classifies WHO covers the measure;
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dist_map_reduce_spark.operators.rfm import rfm_rollup
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH spend AS (
@@ -93,14 +93,12 @@ FROM curve c, tot t
 """
 
 
-@staged_query("lorenz_gini_customer_spend", oracle=_ORACLE)
+@query("lorenz_gini_customer_spend", oracle=_ORACLE)
 def lorenz_gini_customer_spend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(decile, n_customers, decile_share, cum_share, n_total, gini)
-    — the decile Lorenz curve with the Gini scalar on each row.
-    STAGED-FOREVER under the saturation policy (registry.load_all
-    docstring)."""
+    — the decile Lorenz curve with the Gini scalar on each row."""
     spend = rfm_rollup(spark, sf_dir).select("o_custkey", "m_cents")
     ranked = spend.select(
         "m_cents",

@@ -1,5 +1,5 @@
 """LATERAL correlated derived table — top-N-per-key as the SQL
-surface writes it (staged-forever, r16). Completes the engine's
+surface writes it. Completes the engine's
 Spark 4 extension-surface story next to the UDTF
 (functions/python_udfs.py), VARIANT (operators/json_ops.py),
 WITH RECURSIVE (operators/recursion.py) and the Python Data Source
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 TOP_N = 2
 N_BUCKETS = 16  # customer md5 buckets; bucket 0 is the audit slice
@@ -76,7 +76,7 @@ _CUST_VIEW = "lateral_customer_v"
 _ORD_VIEW = "lateral_orders_v"
 
 
-@staged_query(
+@query(
     "lateral_topn_orders_per_customer",
     oracle=_lateral_sql("customer", "orders", _DUCK_HASH),
 )
@@ -86,8 +86,7 @@ def lateral_topn_orders_per_customer(
     """(c_custkey, o_orderkey, o_totalprice, rk): each audit-slice
     customer's top-2 orders by price via a correlated LATERAL
     subquery with LIMIT — decorrelated by Spark into WindowGroupLimit
-    + one equi-join (plan-pinned). STAGED-FOREVER under the
-    saturation policy (registry.load_all)."""
+    + one equi-join (plan-pinned)."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         _CUST_VIEW
     )

@@ -1,4 +1,4 @@
-"""Custom Python Data Source (staged-forever, r16) — the engine's
+"""Custom Python Data Source — the engine's
 first exercise of Spark 4's Python Data Source API (SPARK-44076):
 a user-defined `pyspark.sql.datasource.DataSource` registered with
 `spark.dataSource.register` and read with `spark.read.format(...)`,
@@ -28,8 +28,6 @@ documented cost (it runs OUTSIDE the JVM), which is why the source
 emits coarse partitions and the downstream aggregate is JVM-side.
 At 100 TB the same class streams Arrow batches per partition — the
 shape is identical, only the batch materialization changes.
-
-STAGED-FOREVER under the saturation policy (registry.load_all).
 """
 
 from __future__ import annotations
@@ -39,7 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 N_PARTS = 8  # InputPartition count — the parallel-read grain
 _SALT = "synth:"
@@ -109,7 +107,7 @@ def _make_source():
     return SynthSource
 
 
-@staged_query("python_datasource_synth", oracle=_ORACLE)
+@query("python_datasource_synth", oracle=_ORACLE)
 def python_datasource_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket rollup of the custom-source table: (bucket, n_rows,
     sum_h) over N generated rows, N = the fixture's events row count

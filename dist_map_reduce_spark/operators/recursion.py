@@ -1,4 +1,4 @@
-"""Recursive CTE hierarchy traversal (staged-forever, r16) — the
+"""Recursive CTE hierarchy traversal — the
 engine's first exercise of Spark 4's ``WITH RECURSIVE`` SQL surface
 (SPARK-24497, new in 4.0), the declarative form of iterative
 fixpoint computation that the graph family (pagerank / star-
@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.money import sum_money
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 
 def _lineage_sql(table: str, intdiv: str, hint: str = "MERGE(l)") -> str:
@@ -121,7 +121,7 @@ def _orders_rows(sf_dir: str) -> int:
 _VIEW = "recursion_orders_v"  # query-private temp view name
 
 
-@staged_query(
+@query(
     "recursive_order_lineage",
     oracle=_lineage_sql("orders", "//"),
 )
@@ -130,8 +130,7 @@ def recursive_order_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     a Spark recursive CTE: (depth, n_orders, n_roots, depth_revenue)
     for every depth reached. Roots are keys whose halved key is
     absent from orders; every order appears at exactly one depth, so
-    sum(n_orders) == |orders| and depth 0 carries one row per root.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    sum(n_orders) == |orders| and depth 0 carries one row per root."""
     # Spark guards recursive CTEs with TWO safety valves: a level
     # limit (spark.sql.cteRecursionLevelLimit, default 100) and a
     # TOTAL-ROW limit (spark.sql.cteRecursionRowLimit, default 1e6).

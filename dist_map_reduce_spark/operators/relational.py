@@ -29,7 +29,7 @@ from dist_map_reduce_spark.money import (
     sum_money,
     sum_price_times_disc,
 )
-from dist_map_reduce_spark.registry import query, staged_query
+from dist_map_reduce_spark.registry import query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -255,7 +255,7 @@ def join_left_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@staged_query(
+@query(
     "join_semi_active_customers",
     oracle="""
     SELECT c_custkey, c_name, c_mktsegment
@@ -269,17 +269,7 @@ def join_left_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def join_semi_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join = EXISTS. Only the key column of orders crosses
-    the network; no row multiplication.
-
-    RETIRED from its driver slot in r15 (displacement criterion (i),
-    registry.load_all docstring; record: PLANS.md r15):
-    ``join_semi_anti_balance`` exercises the same LeftSemi on the
-    same tables in a strictly larger plan and
-    ``join_anti_dormant_customers`` keeps the anti single alive. The
-    opened slot went to ``text_bm25_topk``. As a staged query the
-    oracle parity here is still tested every run
-    (tests/test_staged_parity.py) and the LeftSemi plan pin stays in
-    tests/test_plans.py — only the driver stamp is gone."""
+    the network; no row multiplication."""
     cust = _t(spark, sf_dir, "customer")
     recent = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
@@ -375,7 +365,7 @@ def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
 
 
-@staged_query(
+@query(
     "rollup_lineitem_flags",
     oracle="""
     SELECT l_returnflag, l_linestatus,
@@ -386,13 +376,7 @@ def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP: hierarchical subtotals incl. grand total (NULL rows).
-
-    r16 RETIREE (displacement criterion (i), PLANS.md r16):
-    ``grouping_sets_orders`` + ``cube_orders_status_priority`` pin
-    the same Expand machinery in general/sugared form; the ROLLUP
-    keyword round-trip stays parity-tested here, staged-forever.
-    """
+    """ROLLUP: hierarchical subtotals incl. grand total (NULL rows)."""
     return _t(spark, sf_dir, "lineitem").rollup("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.count("*").alias("n"),

@@ -1,4 +1,4 @@
-"""RFM customer segmentation (staged-forever, r16).
+"""RFM customer segmentation.
 
 The retention-marketing workhorse (Hughes 1994; the default
 segmentation of every CRM/CDP): score each customer 1–5 on Recency
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _QS = (0.2, 0.4, 0.6, 0.8)
 
@@ -128,13 +128,12 @@ def rfm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query("rfm_customer_segments", oracle=_ORACLE)
+@query("rfm_customer_segments", oracle=_ORACLE)
 def rfm_customer_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(r_score, f_score, m_score, segment, n_customers, avg_spend)
-    — the populated cells of the 5×5×5 RFM grid. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    — the populated cells of the 5×5×5 RFM grid."""
     rollup_c = rfm_rollup(spark, sf_dir)
     cuts = rollup_c.agg(
         *[

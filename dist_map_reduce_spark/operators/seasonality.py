@@ -1,4 +1,4 @@
-"""Day-of-week × hour seasonality profile (staged-forever, r16).
+"""Day-of-week × hour seasonality profile.
 
 The capacity-planning / anomaly-baseline table every metrics
 warehouse maintains (the "weekly seasonality heatmap"): per
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH cells AS (
@@ -77,13 +77,12 @@ FROM cells c, r2
 """
 
 
-@staged_query("events_seasonality_dow_hour", oracle=_ORACLE)
+@query("events_seasonality_dow_hour", oracle=_ORACLE)
 def events_seasonality_dow_hour(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(dow, hr, n, mean_value, std_value, n_total, r2_seasonal) —
-    one row per populated ISO-dow × hour cell. STAGED-FOREVER under
-    the saturation policy (registry.load_all docstring)."""
+    one row per populated ISO-dow × hour cell."""
     cells = (
         load_table(spark, sf_dir, "events")
         .select(

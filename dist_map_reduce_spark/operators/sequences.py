@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import query, staged_query
+from dist_map_reduce_spark.registry import query
 
 
 @query(
@@ -231,12 +231,11 @@ LEFT JOIN follows f
 """
 
 
-@staged_query("event_eventually_follows", oracle=_EF_ORACLE)
+@query("event_eventually_follows", oracle=_EF_ORACLE)
 def event_eventually_follows(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Process-mining eventually-follows matrix (staged-forever,
-    r16): for every ordered type pair (a, b) — self-loops included —
+    """Process-mining eventually-follows matrix: for every ordered type pair (a, b) — self-loops included —
     the exact number of users with SOME b-event strictly after SOME
     a-event, i.e. max_ts(b) > min_ts(a) per user, plus both margins
     and follow_rate = n_follow / n_users_from. This is the van der
@@ -252,8 +251,7 @@ def event_eventually_follows(
     follows join is user-scale with ≤ |types|² per-user fan-out;
     margins and the complete |types|² grid (constant-key equi-join,
     not a Cartesian) are type-dimension-bounded. Output is
-    |types|² rows at any corpus size. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    |types|² rows at any corpus size."""
     per_ut = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")

@@ -1,4 +1,4 @@
-"""Session path mining (staged-forever, r16).
+"""Session path mining.
 
 The clickstream-analytics staple ("top user journeys"): split each
 user's event stream into gap-based sessions (a new session starts
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 GAP_MINUTES = 30
 MAX_STEPS = 4
@@ -120,14 +120,12 @@ def type_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged_query("session_path_counts", oracle=_ORACLE)
+@query("session_path_counts", oracle=_ORACLE)
 def session_path_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(path, n_steps, n_sessions) — exact session counts per
-    first-MAX_STEPS event-type path, path rendered 'a>b>c'.
-    STAGED-FOREVER under the saturation policy (registry.load_all
-    docstring)."""
+    first-MAX_STEPS event-type path, path rendered 'a>b>c'."""
     # NULL types excluded BEFORE sessionization on BOTH engines —
     # an inner dim join after rn assignment would silently drop the
     # row from the path while the oracle's count(*) kept it

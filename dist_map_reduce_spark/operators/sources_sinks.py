@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
-# scratch helpers live in the registration-free scratch module;
-# re-exported here for existing importers (tests, streaming)
+# scratch helpers live in the scratch module; re-exported here for
+# existing importers (tests, streaming)
 from dist_map_reduce_spark.scratch import (  # noqa: E402,F401
     SCRATCH,
     scratch_path as _scratch,

@@ -1,5 +1,5 @@
 """Chi-square test of independence over a contingency table
-(staged-forever, r16).
+.
 
 The categorical-association statistic (Pearson 1900; the workhorse
 of warehouse A/B dashboards and of feature selection for text
@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 _ORACLE = """
 WITH joined AS (
@@ -168,7 +168,7 @@ FROM tot t, mi, hs, hp
 """
 
 
-@staged_query("mutual_info_segment_priority", oracle=_MI_ORACLE)
+@query("mutual_info_segment_priority", oracle=_MI_ORACLE)
 def mutual_info_segment_priority(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -183,9 +183,7 @@ def mutual_info_segment_priority(
     Zero-observation cells contribute 0 by the p·ln(p) → 0
     convention (the filter drops them — ln of 0 never evaluates);
     ln-only per the lm_score identical-ln precedent; ≤25-addend
-    sums under the seam round; zero entropy NULL-guards nmi.
-    STAGED-FOREVER under the saturation policy (registry.load_all
-    docstring)."""
+    sums under the seam round; zero entropy NULL-guards nmi."""
     cells = contingency_cells(spark, sf_dir).filter(
         F.col("n_obs") > 0
     )
@@ -234,14 +232,13 @@ def mutual_info_segment_priority(
     )
 
 
-@staged_query("chisq_segment_priority", oracle=_ORACLE)
+@query("chisq_segment_priority", oracle=_ORACLE)
 def chisq_segment_priority(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(seg, prio, n_obs, n_seg, n_prio, n_total, expected,
     contribution, chi2_total, df) — one row per contingency cell on
-    the complete grid. STAGED-FOREVER under the saturation policy
-    (registry.load_all docstring)."""
+    the complete grid."""
     cells = contingency_cells(spark, sf_dir)
     tot = cells.agg(
         F.sum("n_obs").cast("bigint").alias("n_total")

@@ -81,7 +81,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 # digest compression: max clusters per digest. 64 gives ~1% relative
 # error at p99 on the fixture while the error stays honestly non-zero
@@ -460,13 +460,12 @@ def tdigest_partition_quantiles(
     ).select("p", "n_centroids", "tdigest_v")
 
 
-@staged_query("tdigest_quantile_merge", oracle=_ORACLE)
+@query("tdigest_quantile_merge", oracle=_ORACLE)
 def tdigest_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(p, n_centroids, exact_v, tdigest_v, abs_err) for the 7-probe
     panel: per-event_type t-digests, merged into one global digest,
     read out at each probe, graded against the exact interpolated
-    quantile. STAGED-FOREVER under the saturation policy unless a
-    displacement opens a slot (registry.load_all docstring)."""
+    quantile."""
     ev = load_table(spark, sf_dir, "events")
     cent = group_digests(ev, "event_type", "value")
     gcent = merge_digests(cent, "event_type")

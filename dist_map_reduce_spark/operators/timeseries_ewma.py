@@ -1,5 +1,5 @@
 """Exponentially-weighted moving average over event series
-(staged-forever, r16) — the smoothing / drift-detection member of the
+ — the smoothing / drift-detection member of the
 time-series family (resample+LOCF/interp = regularization, windows =
 bucketing, as-of/range = alignment, THIS = recency-weighted level).
 
@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 
 W_EWMA = 32  # truncation window: tail weight <= 2^-32, below 6-dp
 
@@ -77,15 +77,14 @@ FROM framed
 """
 
 
-@staged_query("events_ewma_smooth", oracle=_ORACLE)
+@query("events_ewma_smooth", oracle=_ORACLE)
 def events_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event EWMA of ``value`` within its event_type series:
     (event_type, event_id, ts, value, n_window, ewma) for every
     event, where ewma is the W=32-truncated adjust=True exponential
     moving average with a = 1/2 (weights are exact powers of two on
     both engines; see module docstring). n_window = rows actually in
-    the frame (< 32 during series warm-up). STAGED-FOREVER under the
-    saturation policy (registry.load_all)."""
+    the frame (< 32 during series warm-up)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", "ts", "value"
     )

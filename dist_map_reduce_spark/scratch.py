@@ -1,9 +1,5 @@
-"""Repo-local scratch directory (registration-free).
-
-Extracted from ``operators/sources_sinks.py`` so modules that only
-need a scratch path (streaming bindings, the ORC round-trip) don't
-drag that module's query registrations into the registry's 50-slot
-correctness window at import time.
+"""Repo-local scratch directory for streaming replays, sink
+round-trips and other per-fixture artifacts.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Streaming HyperLogLog: sketch state merged across micro-batches
-(staged-forever, r16) — the composition the mergeable-summaries
+ — the composition the mergeable-summaries
 family exists FOR. A streaming count-distinct cannot keep the seen
 set (state = cardinality); it keeps a mergeable sketch whose state
 is CONSTANT-SIZE and whose merge is associative, commutative and
@@ -58,7 +58,7 @@ from dist_map_reduce_spark.operators.hll_native import (
     _rank_sql,
     rank_col,
 )
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.scratch import scratch_path
 from dist_map_reduce_spark.streaming.pipelines import FileSource
 
@@ -201,14 +201,13 @@ def stream_hll_registers(
     return registers, batches[0]
 
 
-@staged_query("streaming_hll_merge", oracle=_ORACLE)
+@query("streaming_hll_merge", oracle=_ORACLE)
 def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_batches, n_filled_buckets, n_exact, hll_est, rel_err) — the
     user-cardinality HLL built by max-merging per-micro-batch
     registers across 4 real replay batches, graded against the exact
     distinct count; the oracle rebuilds the registers in one batch
-    pass, certifying merge == one-pass (the mergeability contract).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    pass, certifying merge == one-pass (the mergeability contract)."""
     import shutil
 
     # fresh replay every run: a surviving checkpoint would mark the

@@ -1,4 +1,4 @@
-"""Staged query binding for the incremental corpus-ingestion dedup
+"""Query binding for the incremental corpus-ingestion dedup
 pipeline (streaming/ingest_dedup.py).
 
 The pipeline itself is the foreachBatch replay harness: three REAL
@@ -29,9 +29,6 @@ streaming path breaks the value hash. This is the strongest check a
 streaming pipeline gets here: engine-vs-engine on the final sink
 state, same discipline as streaming/pipelines.py's stream-vs-batch
 comparisons plus a foreign oracle.
-
-Promoted to @query in round 10 (the r10 window's one free slot —
-registry.load_all docstring has the rotation arithmetic).
 """
 
 from __future__ import annotations

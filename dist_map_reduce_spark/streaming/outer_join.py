@@ -1,4 +1,4 @@
-"""Watermarked stream-stream LEFT OUTER join (staged-forever, r16).
+"""Watermarked stream-stream LEFT OUTER join.
 
 The inner stream-stream join (`streaming_stream_stream_join`,
 pipelines.py) emits matches as they arrive; the LEFT OUTER variant
@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.streaming.pipelines import (
     read_events_stream,
     run_sink,
@@ -90,7 +90,7 @@ WHERE c.event_id NOT IN (SELECT m_click FROM matched)
 """
 
 
-@staged_query("streaming_stream_stream_left_join", oracle=_ORACLE)
+@query("streaming_stream_stream_left_join", oracle=_ORACLE)
 def streaming_stream_stream_left_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -99,8 +99,7 @@ def streaming_stream_stream_left_join(
     purchase_id, delay_sec) with NULL purchase columns for clicks
     the watermark has proven unconvertible — clicks still inside
     their possible-match window at end of input remain buffered and
-    are NOT emitted (mirrored by the oracle's watermark cut).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    are NOT emitted (mirrored by the oracle's watermark cut)."""
     clicks = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")

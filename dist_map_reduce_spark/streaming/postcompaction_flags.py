@@ -29,11 +29,7 @@ is one semi-join of 4·|probe| band rows against the compacted index
 — a table of short strings orders of magnitude smaller than the
 corpus that a production deployment would broadcast per delivery;
 everything else is the compaction query's own posture (SCALE.md
-§Streaming). Window discipline: module scope imports only
-registration-free modules; PROMOTED to @query in the r16
-displacement (retiree: rollup_lineitem_flags, PLANS.md r16) after
-two rounds staged-forever — its import now lives in
-registry.load_all's window section.
+§Streaming).
 
 Reference parity: the reference engine has no streaming or index
 surface (/root/reference/src/worker/worker.go:131-218); this belongs

@@ -1,5 +1,5 @@
 """Streaming bounded uniform sample: a bottom-K reservoir as
-micro-batch state (staged-forever, r16) — the second composition of
+micro-batch state — the second composition of
 a mergeable summary with the streaming replay harness (the first is
 streaming_hll_merge): "keep a uniform K-row sample of everything
 that ever flowed through this stream" with state that NEVER grows.
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import staged_query
+from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.scratch import scratch_path
 from dist_map_reduce_spark.streaming.pipelines import FileSource
 
@@ -141,7 +141,7 @@ def stream_reservoir(
     return state, batches[0]
 
 
-@staged_query("streaming_reservoir_sample", oracle=_ORACLE)
+@query("streaming_reservoir_sample", oracle=_ORACLE)
 def streaming_reservoir_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -149,8 +149,7 @@ def streaming_reservoir_sample(
     the K-row uniform sample carried as micro-batch state across 4
     real replay batches. The oracle computes the one-pass global
     bottom-K — full value-hash parity IS the mergeability
-    certification (stream merge == one-pass, row for row).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    certification (stream merge == one-pass, row for row)."""
     import shutil
 
     # fresh replay every run: a surviving checkpoint would mark the

@@ -77,7 +77,7 @@ def assert_parity(spark, duck, name: str, sf_dir: str = SF_ORACLE) -> None:
     sdf = registry.QUERIES[name](spark, sf_dir)
     spdf = sdf.toPandas()
     duck_views(duck, sf_dir)
-    opdf = duck.execute(registry.oracle_for(name)).fetchdf()
+    opdf = duck.execute(registry.ORACLES[name]).fetchdf()
 
     assert sorted(spdf.columns) == sorted(opdf.columns), (
         f"{name}: column mismatch spark={sorted(spdf.columns)} "

@@ -16,7 +16,7 @@ import math
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_abtest_matches_python_reference(spark):

@@ -14,7 +14,7 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_arrow_stage_matches_jvm_twin(spark):
@@ -44,7 +44,7 @@ def test_arrow_stage_matches_jvm_twin(spark):
 
 
 def test_query_shape(spark):
-    pdf = registry.STAGED_QUERIES["arrow_text_stats_per_source"](
+    pdf = registry.QUERIES["arrow_text_stats_per_source"](
         spark, SF_SMOKE
     ).toPandas()
     assert len(pdf) == 20

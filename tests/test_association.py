@@ -19,7 +19,7 @@ from itertools import combinations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_rules_match_pandas_reference(spark):

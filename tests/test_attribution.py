@@ -20,7 +20,7 @@ from collections import defaultdict
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _python_attribution(ev_rows):

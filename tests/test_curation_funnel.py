@@ -1,5 +1,5 @@
 """Curation funnel invariants (oracle parity is in
-tests/test_staged_parity.py — including the composed recursive-CTE
+tests/test_parity.py — including the composed recursive-CTE
 near-dup chain; these pin the funnel-shape properties the count
 comparison alone doesn't name)."""
 
@@ -13,7 +13,7 @@ from dist_map_reduce_spark.functions.curation_funnel import (
 )
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_funnel_monotone_and_named(spark):

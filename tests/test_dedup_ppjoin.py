@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _brute_force(spark, sf_dir):
@@ -58,7 +58,7 @@ def _brute_force(spark, sf_dir):
 
 def test_completeness_vs_brute_force(spark):
     got = (
-        registry.STAGED_QUERIES["ppjoin_jaccard_pairs"](spark, SF_SMOKE)
+        registry.QUERIES["ppjoin_jaccard_pairs"](spark, SF_SMOKE)
         .select("doc_a", "doc_b", "n_inter")
         .toPandas()
         .sort_values(["doc_a", "doc_b"])
@@ -86,7 +86,7 @@ def test_prefix_reduction_and_closed_cap(spark):
     # p(x) = sz - ceil(0.8 sz) + 1 ~ 0.2 sz + 1
     assert pref < 0.35 * full, (pref, full)
 
-    pdf = registry.STAGED_QUERIES["ppjoin_jaccard_pairs"](
+    pdf = registry.QUERIES["ppjoin_jaccard_pairs"](
         spark, SF_SMOKE
     ).toPandas()
     assert (pdf.n_capped_postings == 0).all()

@@ -19,7 +19,7 @@ import math
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _cdc_bucket(k: int) -> int:

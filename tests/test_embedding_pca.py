@@ -1,7 +1,7 @@
 """Distributed PCA: two-arm gramian equivalence + numpy ground truth.
 
 The gramian query's correctness vs DuckDB is covered by
-tests/test_staged_parity.py; these tests pin the BLAS Arrow arm
+tests/test_parity.py; these tests pin the BLAS Arrow arm
 against the independent pure-JVM arm and the whole fit/project path
 against a single-machine numpy PCA on the collected fixture — the
 strongest available oracle for an iterative-free linear-algebra op.

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _pandas_funnel(ev: pd.DataFrame, steps) -> list[set]:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 # 3 * 1.04/sqrt(64) — the HLL paper's standard error, tripled
 _REL_BAND = 0.39
@@ -134,7 +134,7 @@ def test_hll_linear_counting_branch_on_tiny_corpus(tmp_path, spark):
         pa.Table.from_pandas(orders), os.path.join(sf_dir, "orders.parquet")
     )
     sp = (
-        registry.STAGED_QUERIES["hll_native_customer_cardinality"](
+        registry.QUERIES["hll_native_customer_cardinality"](
             spark, sf_dir
         )
         .toPandas()
@@ -148,9 +148,7 @@ def test_hll_linear_counting_branch_on_tiny_corpus(tmp_path, spark):
     )
     od = (
         con.execute(
-            registry.resolve_oracle(
-                registry.STAGED_ORACLES["hll_native_customer_cardinality"]
-            )
+            registry.ORACLES["hll_native_customer_cardinality"]
         )
         .fetchdf()
         .sort_values("grp")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _direct_registers(spark) -> dict[int, int]:
@@ -58,7 +58,7 @@ def _direct_registers(spark) -> dict[int, int]:
 
 
 def test_query_output_and_multibatch(spark):
-    pdf = registry.STAGED_QUERIES["streaming_hll_merge"](
+    pdf = registry.QUERIES["streaming_hll_merge"](
         spark, SF_SMOKE
     ).toPandas()
     assert len(pdf) == 1

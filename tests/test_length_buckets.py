@@ -15,12 +15,12 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _panel(spark, sf_dir):
     return (
-        registry.STAGED_QUERIES["length_bucket_padding_waste"](spark, sf_dir)
+        registry.QUERIES["length_bucket_padding_waste"](spark, sf_dir)
         .toPandas()
         .sort_values("bucket_len")
         .reset_index(drop=True)
@@ -77,9 +77,7 @@ def test_truncation_branch_on_overlength_doc(tmp_path, spark):
     )
     od = (
         con.execute(
-            registry.resolve_oracle(
-                registry.STAGED_ORACLES["length_bucket_padding_waste"]
-            )
+            registry.ORACLES["length_bucket_padding_waste"]
         )
         .fetchdf()
         .sort_values("bucket_len")

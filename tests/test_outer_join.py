@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 _Q = "streaming_stream_stream_left_join"
 
@@ -39,7 +39,7 @@ def _canon(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def _run_single_batch(spark) -> pd.DataFrame:
-    return registry.STAGED_QUERIES[_Q](spark, SF_SMOKE).toPandas()
+    return registry.QUERIES[_Q](spark, SF_SMOKE).toPandas()
 
 
 def test_matched_rows_equal_batch_join_and_null_consistency(spark):
@@ -112,6 +112,6 @@ def test_time_ordered_multibatch_replay_same_final_set(spark, tmp_path):
 
     with use_binding(bind(source=FileSource(path=staged, max_files_per_trigger=1))):
         multi = _canon(
-            registry.STAGED_QUERIES[_Q](spark, SF_SMOKE).toPandas()
+            registry.QUERIES[_Q](spark, SF_SMOKE).toPandas()
         )
     assert multi == single

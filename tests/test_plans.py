@@ -69,16 +69,7 @@ def test_q1_has_partial_aggregation(spark):
 
 
 def test_semi_anti_join_types(spark):
-    # join_semi_active_customers was retired to @staged_query in the
-    # r15 displacement; its LeftSemi pin stays (parity still tested
-    # every run), looked up via the staged dict.
-    registry.load_staged()
-    semi_plan = (
-        registry.STAGED_QUERIES["join_semi_active_customers"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    semi_plan = _plan(spark, "join_semi_active_customers")
     assert "LeftSemi" in semi_plan
     assert "LeftSemi" in _plan(spark, "join_semi_anti_balance")
     assert "LeftAnti" in _plan(spark, "join_anti_dormant_customers")
@@ -478,7 +469,7 @@ def test_semdedup_is_cell_bounded_join(spark):
 
 
 def test_cdc_merge_plan_pushes_bucket_filters(spark):
-    """The CDC MERGE (promoted r13) is one join tree — LeftAnti
+    """The CDC MERGE is one join tree — LeftAnti
     deletes + LeftOuter updates + union'd inserts — and every
     change-set scan must carry its md5-bucket predicate in the scan's
     DataFilters (derived columns can't reach PushedFilters, but they
@@ -496,7 +487,7 @@ def test_cdc_merge_plan_pushes_bucket_filters(spark):
 
 
 def test_ccnet_buckets_plan_shape(spark):
-    """The CCNet bucketing (promoted r13) must stay aggregate-shaped:
+    """The CCNet bucketing must stay aggregate-shaped:
     exact percentile as ONE ObjectHashAggregate riding a 1-row
     broadcast (BroadcastNestedLoopJoin Cross is the sanctioned scalar
     pattern), a 3-key partial+final HashAggregate for the buckets,
@@ -509,21 +500,13 @@ def test_ccnet_buckets_plan_shape(spark):
 
 
 def test_postcompaction_flags_plan_shape(spark):
-    """The post-compaction flag query's read path (PROMOTED to
-    @query in the r16 displacement): zero-shuffle row-wise probe
+    """The post-compaction flag query's read path: zero-shuffle row-wise probe
     banding feeding ONE semi-join against the compacted index
     (broadcast at fixture scale; a production delivery would
     broadcast the index side too), a keyed distinct — no Cartesian,
     no SortAggregate, and no Window (the flag is a membership
     semi-join, not a ranked scan)."""
-    plan = (
-        registry.QUERIES["streaming_postcompaction_neardup_flags"](
-            spark, SF_SMOKE
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "streaming_postcompaction_neardup_flags")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "Window" not in plan
@@ -531,18 +514,12 @@ def test_postcompaction_flags_plan_shape(spark):
 
 
 def test_bm25_plan_shape(spark):
-    """The staged-forever BM25 panel: probe selection is
+    """The BM25 panel: probe selection is
     TakeOrderedAndProject (never a global sort), the tiny query-term
     table broadcasts onto the corpus tf table, scalars ride the
     sanctioned 1-row cross, and nothing plans a CartesianProduct or
     SortAggregate."""
-    registry.load_staged()
-    plan = (
-        registry.QUERIES["text_bm25_topk"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "text_bm25_topk")
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
@@ -550,7 +527,7 @@ def test_bm25_plan_shape(spark):
 
 
 def test_cms_plan_shape(spark):
-    """The staged-forever count-min sketch: the corpus-scale word
+    """The count-min sketch: the corpus-scale word
     aggregate is persisted and every CMS consumer reads the cache
     (one FileScan worth of corpus I/O total), the seed fan-out is a
     Generate-free union of narrow selects, the 256-cell grid
@@ -559,14 +536,8 @@ def test_cms_plan_shape(spark):
     anywhere."""
     from dist_map_reduce_spark import caching
 
-    registry.load_staged()
     caching.clear()
-    plan = (
-        registry.STAGED_QUERIES["text_cms_heavy_hitters"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "text_cms_heavy_hitters")
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
@@ -578,7 +549,7 @@ def test_cms_plan_shape(spark):
 
 
 def test_bloom_plan_shape(spark):
-    """The staged-forever Bloom decontamination pre-filter: the eval
+    """The Bloom decontamination pre-filter: the eval
     side (fingerprints, bit table, scalar) broadcasts everywhere, the
     train side is one scan + one aggregate (fp rides through the
     groupBy so there is NO corpus-corpus join-back), the k=3 bit
@@ -587,14 +558,8 @@ def test_bloom_plan_shape(spark):
     Window."""
     from dist_map_reduce_spark import caching
 
-    registry.load_staged()
     caching.clear()
-    plan = (
-        registry.STAGED_QUERIES["text_bloom_decontaminate"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "text_bloom_decontaminate")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "SortMergeJoin" not in plan
@@ -606,7 +571,7 @@ def test_bloom_plan_shape(spark):
 
 
 def test_kmv_plan_shape(spark):
-    """The staged-forever KMV source-overlap sketch: the per-source
+    """The KMV source-overlap sketch: the per-source
     shingle table persists once (every arm reads the cache), windows
     are signature-scale ranks, the pair fan-out is a broadcast
     non-equi join over the bounded source dimension, and nothing
@@ -616,14 +581,8 @@ def test_kmv_plan_shape(spark):
     shingle set at 100 TB)."""
     from dist_map_reduce_spark import caching
 
-    registry.load_staged()
     caching.clear()
-    plan = (
-        registry.STAGED_QUERIES["text_kmv_source_jaccard"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "text_kmv_source_jaccard")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "Window" in plan  # the bottom-k signature ranks
@@ -631,7 +590,7 @@ def test_kmv_plan_shape(spark):
 
 
 def test_tdigest_plan_shape(spark):
-    """The staged-forever t-digest quantile merge (r15): the only
+    """The t-digest quantile merge: the only
     corpus-scale stages are the per-group rank window and the
     centroid hash aggregate (map-side combined); the merge and
     read-out stages run on centroid-scale rows (their global windows
@@ -640,13 +599,7 @@ def test_tdigest_plan_shape(spark):
     sanctioned BroadcastNestedLoopJoins (both sides sketch-sized /
     1-row); nothing plans a Cartesian or SortAggregate and the scan
     prunes to the three used columns."""
-    registry.load_staged()
-    plan = (
-        registry.STAGED_QUERIES["tdigest_quantile_merge"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "tdigest_quantile_merge")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 2
@@ -659,7 +612,7 @@ def test_tdigest_plan_shape(spark):
 
 
 def test_theta_set_ops_plan_shape(spark):
-    """The staged-forever theta set algebra (r15): shares text_kmv's
+    """The theta set algebra: shares text_kmv's
     exact plan economy — the per-source shingle subtree persists once
     (every arm reads the cache), the pair fan-out is a broadcast
     non-equi join over the bounded source dimension, per-pair windows
@@ -669,14 +622,8 @@ def test_theta_set_ops_plan_shape(spark):
     convention)."""
     from dist_map_reduce_spark import caching
 
-    registry.load_staged()
     caching.clear()
-    plan = (
-        registry.STAGED_QUERIES["text_theta_set_ops"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "text_theta_set_ops")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "Window" in plan  # signature ranks + union top-K
@@ -685,21 +632,13 @@ def test_theta_set_ops_plan_shape(spark):
 
 
 def test_hll_native_plan_shape(spark):
-    """The staged-forever native HLL (r15): corpus-scale work is one
+    """The native HLL: corpus-scale work is one
     distinct + one register aggregate (both map-side combined); the
     merge and estimate stages run on <= groups x 64 register rows;
     the generated integer-CASE rank keeps everything in whole-stage
     codegen (no SortAggregate, no Cartesian) and the scan prunes to
     the two used columns."""
-    registry.load_staged()
-    plan = (
-        registry.STAGED_QUERIES["hll_native_customer_cardinality"](
-            spark, SF_SMOKE
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "hll_native_customer_cardinality")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "partial_max" in plan  # register build combines map-side
@@ -712,20 +651,12 @@ def test_hll_native_plan_shape(spark):
 
 
 def test_length_buckets_plan_shape(spark):
-    """The staged-forever padding-waste query (r15): ONE corpus scan
+    """The padding-waste query: ONE corpus scan
     projected to the text column, one map-side-combined <=10-key
     aggregate, a tiny total-row aggregate — nothing else. No
     Cartesian, no SortAggregate, no Window, and the scan must not
     read columns the length measure never uses."""
-    registry.load_staged()
-    plan = (
-        registry.STAGED_QUERIES["length_bucket_padding_waste"](
-            spark, SF_SMOKE
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _plan(spark, "length_bucket_padding_waste")
     assert "CartesianProduct" not in plan
     assert "SortAggregate" not in plan
     assert "Window" not in plan

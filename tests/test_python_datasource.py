@@ -18,13 +18,13 @@ import pyarrow.parquet as pq
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 _Q = "python_datasource_synth"
 
 
 def test_partition_completeness_and_domain(spark):
-    pdf = registry.STAGED_QUERIES[_Q](spark, SF_SMOKE).toPandas()
+    pdf = registry.QUERIES[_Q](spark, SF_SMOKE).toPandas()
     total = pq.ParquetFile(
         os.path.join(SF_SMOKE, "events.parquet")
     ).metadata.num_rows
@@ -36,13 +36,13 @@ def test_partition_completeness_and_domain(spark):
 
 def test_reregistration_is_idempotent(spark):
     a = (
-        registry.STAGED_QUERIES[_Q](spark, SF_SMOKE)
+        registry.QUERIES[_Q](spark, SF_SMOKE)
         .toPandas()
         .sort_values("bucket")
         .reset_index(drop=True)
     )
     b = (
-        registry.STAGED_QUERIES[_Q](spark, SF_SMOKE)
+        registry.QUERIES[_Q](spark, SF_SMOKE)
         .toPandas()
         .sort_values("bucket")
         .reset_index(drop=True)

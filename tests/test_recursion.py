@@ -22,12 +22,12 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _out(spark):
     return (
-        registry.STAGED_QUERIES["recursive_order_lineage"](spark, SF_SMOKE)
+        registry.QUERIES["recursive_order_lineage"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("depth")
         .reset_index(drop=True)

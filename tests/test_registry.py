@@ -1,84 +1,20 @@
-"""Registration-order guard, derived from driver evidence on disk.
-
-The verify harness records correctness rows for the FIRST 50
-registered queries each round; the round's rotation decides which
-queries get fresh driver-side evidence. These tests derive the
-expected properties from the ``CORRECTNESS_r*.json`` files instead of
-hand-pinned literals (round-3's pins were shipped stale in round 4),
-so they stay valid across rotations:
-
-- a query with NO driver row yet must be inside the window (it can
-  never earn a stamp otherwise);
-- with N registered queries and 50 slots the steady-state refresh
-  cadence is ceil(N/50) rounds (derived from the live registry, not
-  hard-coded), so no query OUTSIDE the window may carry a stamp more
-  than that many rounds older than the newest evidence on disk.
-"""
+"""Registry contract: unique names, SQL oracles, and the pinned
+surface that ``__spark_entry__`` exposes."""
 
 from __future__ import annotations
 
-import glob
+import hashlib
 import json
-import os
-import re
 
+import __spark_entry__
 from dist_map_reduce_spark import registry
 
 registry.load_all()
 
-WINDOW_SIZE = 50
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _latest_stamps() -> tuple[dict[str, int], int]:
-    """(query -> newest round with a driver row, newest round on disk)."""
-    latest: dict[str, int] = {}
-    newest = 0
-    for path in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest = max(newest, rnd)
-        with open(path) as f:
-            for name in json.load(f):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest, newest
-
-
-def test_never_stamped_queries_inside_window():
-    latest, _ = _latest_stamps()
-    window = set(list(registry.QUERIES)[:WINDOW_SIZE])
-    missing = [n for n in registry.QUERIES if n not in latest and n not in window]
-    assert not missing, (
-        "queries with no driver correctness row registered outside the "
-        f"{WINDOW_SIZE}-slot window and can never be stamped: {missing}"
-    )
-
-
-def test_no_stale_query_outside_window():
-    latest, newest = _latest_stamps()
-    if newest == 0:
-        return  # no driver evidence yet (fresh clone) — nothing to enforce
-    window = set(list(registry.QUERIES)[:WINDOW_SIZE])
-    cadence = -(-len(registry.QUERIES) // WINDOW_SIZE)  # ceil
-    floor = newest - cadence
-    stale = [
-        f"{n} (r{latest[n]})"
-        for n in registry.QUERIES
-        if n not in window and n in latest and latest[n] < floor
-    ]
-    assert not stale, (
-        f"queries outside the {WINDOW_SIZE}-slot window carry driver stamps "
-        f"older than r{floor} (newest evidence r{newest}) — rotate "
-        f"registry.load_all(): {stale}"
-    )
-
-
-def test_window_is_full():
-    # fewer than WINDOW_SIZE registrations would silently shrink the
-    # driver's evidence per round
-    assert len(registry.QUERIES) >= WINDOW_SIZE
+# sha256 of the sorted queries() names and of the sorted oracle_sql()
+# items, so a change to either surface is deliberate
+QUERIES_SHA = "93ba565869bc9c2eedc3aed9714b2a29dc60b1b238240cfcd5e20d4a78f2e4bd"
+ORACLES_SHA = "6ad3eb220e1ebcdeb1ab65bb0c96332d89d73bbd24cce9a262fa402bf47d6bd2"
 
 
 def test_every_query_has_unique_name_and_callable():
@@ -90,125 +26,14 @@ def test_every_query_has_unique_name_and_callable():
 
 
 def test_every_oracle_resolves_to_sql_text():
-    """Lazy (callable) oracles must resolve to non-empty SQL once
-    everything is loaded — this is exactly what the driver's
-    oracle_sql() contract does, so a lazy composer that throws or
-    returns junk fails here instead of at stamp time."""
-    registry.load_staged()
-    for name in registry.ORACLES:
-        sql = registry.oracle_for(name)
+    for name, sql in registry.ORACLES.items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
-    for name, v in registry.STAGED_ORACLES.items():
-        sql = registry.resolve_oracle(v)
-        assert isinstance(sql, str) and "SELECT" in sql.upper(), name
-    assert registry.oracle_for("no_such_query") is None
 
 
-def test_staged_modules_register_no_unexpected_riders():
-    """The r13 window arithmetic (registry.load_all docstring)
-    assumes each module registers exactly its KNOWN queries when
-    imported in the driver's pristine order: curation_funnel exactly
-    itself (its composed oracle stays LAZY — a reintroduced
-    module-scope import of a registering component module breaks the
-    rotation), and the two r13-PROMOTED single-query modules exactly
-    ONE @query entry each (their heavyweight deps — lm_bigram — must
-    stay inside the callables/lazy oracle). Catch drift here, not at
-    stamp time."""
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from dist_map_reduce_spark import registry\n"
-        "from dist_map_reduce_spark.functions import curation_funnel\n"
-        "a = set(registry.QUERIES)\n"
-        "from dist_map_reduce_spark.functions import quality_ccnet_buckets\n"
-        "b = set(registry.QUERIES) - a\n"
-        "from dist_map_reduce_spark.operators import delta_merge\n"
-        "c = set(registry.QUERIES) - a - b\n"
-        # the staged-forever modules must register ZERO @query entries
-        # at import, even in a pristine pre-load_all process
-        # (postcompaction_flags left this list when the r16
-        # displacement promoted it to @query)
-        "from dist_map_reduce_spark.functions import text_bloom\n"
-        "from dist_map_reduce_spark.functions import text_cms\n"
-        "d = set(registry.QUERIES) - a - b - c\n"
-        "assert not d, f'staged modules registered @query riders: {d}'\n"
-        "s = set(registry.STAGED_QUERIES)\n"
-        "print(sorted(a), '|', sorted(b), '|', sorted(c), '|', sorted(s))\n"
-        % REPO_ROOT
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert out.returncode == 0, out.stderr
-    funnel, ccnet, merge, staged = (
-        out.stdout.strip().splitlines()[-1].split("|")
-    )
-    assert funnel.strip() == "['curation_funnel']", (
-        f"curation_funnel's import registers riders: {funnel} — "
-        "its component imports must stay inside _ensure_components()"
-    )
-    assert ccnet.strip() == "['quality_ccnet_buckets']", ccnet
-    assert merge.strip() == "['cdc_merge_upsert_orders']", merge
-    # the staged-forever probe set (text_bm25 / postcompaction_flags
-    # were PROMOTED in the r15/r16 displacements, so two sketch
-    # modules stand in as the registration-free staged exemplars)
-    assert staged.strip() == (
-        "['text_bloom_decontaminate', 'text_cms_heavy_hitters']"
-    ), staged
-
-
-def test_registry_holds_at_saturation_ceiling():
-    """SATURATION POLICY pin (registry.load_all docstring): the
-    registered surface is capped at exactly 200 queries = 4 windows
-    x 50, keeping the staleness cadence at ceil(200/50) = 4 rounds
-    with module-pure cohorts. An unpaired 201st registration would
-    silently stretch the cadence to 5 and break the rotation — a new
-    operator must either DISPLACE a retired query (net zero, criteria
-    in the docstring) or ship as a staged-forever parity-tested
-    query. If you changed this number, you executed a displacement
-    wrong or bypassed the policy."""
-    assert len(registry.QUERIES) == 4 * WINDOW_SIZE, sorted(registry.QUERIES)
-
-
-def test_window_count_pins_in_fresh_subprocess():
-    """The load_all cut-line guard (RuntimeError) only fires in a
-    pristine process; run one to prove the window imports register
-    exactly WINDOW queries under the driver's import path — and that
-    the guard also holds under python -O (assert-stripped)."""
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from dist_map_reduce_spark import registry\n"
-        "registry.load_all()\n"
-        "print(len(registry.QUERIES))\n" % REPO_ROOT
-    )
-    for flags in ([], ["-O"]):
-        out = subprocess.run(
-            [sys.executable, *flags, "-c", code],
-            capture_output=True,
-            text=True,
-            timeout=120,
-        )
-        assert out.returncode == 0, out.stderr
-        n_total = int(out.stdout.strip().splitlines()[-1])
-        assert n_total == len(registry.QUERIES)
-
-
-def test_staged_queries_are_bench_tracked():
-    """Every staged query must be in bench.HEADLINE — the
-    perf-track-a-round-early discipline (r8/r11/r12 precedent), so a
-    promotion never lands with zero bench history."""
-    import bench
-
-    registry.load_staged()
-    missing = [
-        n for n in registry.STAGED_QUERIES if n not in bench.HEADLINE
-    ]
-    assert not missing, missing
+def test_entry_contract_is_pinned():
+    names = sorted(__spark_entry__.queries())
+    assert len(names) == 200
+    assert hashlib.sha256("\n".join(names).encode()).hexdigest() == QUERIES_SHA
+    oracles = json.dumps(sorted(__spark_entry__.oracle_sql().items()))
+    assert hashlib.sha256(oracles.encode()).hexdigest() == ORACLES_SHA
+    assert len(registry.QUERIES) == 239

@@ -21,12 +21,12 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _sample(spark):
     return (
-        registry.STAGED_QUERIES["reservoir_merge_sample"](spark, SF_SMOKE)
+        registry.QUERIES["reservoir_merge_sample"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("sample_rank")
         .reset_index(drop=True)
@@ -76,7 +76,7 @@ def test_reservoir_plan_windowgrouplimit_no_full_sort(spark):
     bottom-K arms as TakeOrderedAndProject; no Cartesian beyond the
     two sanctioned 1-row scalar broadcasts, no SortAggregate."""
     plan = (
-        registry.STAGED_QUERIES["reservoir_merge_sample"](spark, SF_SMOKE)
+        registry.QUERIES["reservoir_merge_sample"](spark, SF_SMOKE)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _direct_bottom_k(spark) -> list[tuple]:
@@ -50,7 +50,7 @@ def _direct_bottom_k(spark) -> list[tuple]:
 def test_query_output_shape(spark):
     from dist_map_reduce_spark.streaming.reservoir_stream import K
 
-    pdf = registry.STAGED_QUERIES["streaming_reservoir_sample"](
+    pdf = registry.QUERIES["streaming_reservoir_sample"](
         spark, SF_SMOKE
     ).toPandas()
     assert len(pdf) == K

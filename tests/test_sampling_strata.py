@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _py_hamilton(sizes: dict[str, int], budget: int) -> dict[str, int]:

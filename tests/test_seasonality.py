@@ -19,7 +19,7 @@ from collections import defaultdict
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_profile_matches_python_reference(spark):
@@ -88,9 +88,7 @@ def test_fp_negative_variance_clamped(spark, tmp_path, duck):
         f"'{tmp_path}/events.parquet/*.parquet'"
     )
     od = duck.execute(
-        registry.resolve_oracle(
-            registry.STAGED_ORACLES["events_seasonality_dow_hour"]
-        )
+        registry.ORACLES["events_seasonality_dow_hour"]
     ).fetchdf()
     assert od.iloc[0].std_value == 0.0
 

@@ -18,7 +18,7 @@ from collections import Counter, defaultdict
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _python_paths(rows, gap_us, max_steps):

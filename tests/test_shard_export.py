@@ -1,6 +1,6 @@
 """Deterministic shuffle-shard export: layout, order, determinism.
 
-Manifest-vs-oracle parity is covered by tests/test_staged_parity.py;
+Manifest-vs-oracle parity is covered by tests/test_parity.py;
 these tests pin the physical layout properties the manifest alone
 cannot see: within-file sort order, write determinism, and shard
 balance.

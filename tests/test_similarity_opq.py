@@ -131,45 +131,3 @@ def test_opq_gate_serves_measured_winner_per_scale(spark):
     finally:
         caching.clear()
 
-
-def test_ungated_helpers_cannot_shift_window_in_pristine_process():
-    """ADVICE r14: opq_pq_topk / opq_rotation / rotated_corpus /
-    eigenvalue_allocation also lazily import @query-registering
-    modules, so they carry the same pristine-process hazard as the
-    two gate entry points — every one now calls
-    _ensure_canonical_registry() first. Pin the cheapest of them
-    end-to-end: in a fresh process, calling eigenvalue_allocation
-    with the default M_SUB (the rider-importing branch) BEFORE any
-    load_all must leave the first-WINDOW cut identical to the
-    canonical registration order."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from dist_map_reduce_spark.functions.similarity_opq import "
-        "eigenvalue_allocation\n"
-        "perm = eigenvalue_allocation(list(range(64, 0, -1)))\n"
-        "assert sorted(perm) == list(range(64))\n"
-        "from dist_map_reduce_spark import registry\n"
-        "print(','.join(list(registry.QUERIES)[:50]))\n" % repo
-    )
-    canon = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from dist_map_reduce_spark import registry\n"
-        "registry.load_all()\n"
-        "print(','.join(list(registry.QUERIES)[:50]))\n" % repo
-    )
-    outs = []
-    for c in (code, canon):
-        r = subprocess.run(
-            [sys.executable, "-c", c],
-            capture_output=True,
-            text=True,
-            timeout=120,
-        )
-        assert r.returncode == 0, r.stderr
-        outs.append(r.stdout.strip().splitlines()[-1])
-    assert outs[0] == outs[1], "rider import shifted the window cut"

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import caching, registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_cms_never_undercounts_any_word(spark):
@@ -77,7 +77,7 @@ def test_bloom_contract_on_fixture(spark):
     """Planted members are all flagged (no false negatives); false
     positives exist but stay far below degenerate-full."""
     caching.clear()
-    pdf = registry.STAGED_QUERIES["text_bloom_decontaminate"](
+    pdf = registry.QUERIES["text_bloom_decontaminate"](
         spark, SF_SMOKE
     ).toPandas()
     members = pdf[pdf.exact_member]
@@ -96,7 +96,7 @@ def test_kmv_contract_on_fixture(spark):
     calibration), and the K=64 estimate tracks the exact Jaccard
     within a loose-but-meaningful band on the off-diagonal pairs."""
     caching.clear()
-    pdf = registry.STAGED_QUERIES["text_kmv_source_jaccard"](
+    pdf = registry.QUERIES["text_kmv_source_jaccard"](
         spark, SF_SMOKE
     ).toPandas()
     selfp = pdf[pdf.source_a == pdf.source_b]
@@ -136,7 +136,7 @@ def test_bloom_degrades_gracefully_on_empty_eval_split(tmp_path, spark):
     caching.clear()
     try:
         sp = (
-            registry.STAGED_QUERIES["text_bloom_decontaminate"](spark, sf_dir)
+            registry.QUERIES["text_bloom_decontaminate"](spark, sf_dir)
             .toPandas()
         )
     finally:
@@ -147,9 +147,7 @@ def test_bloom_degrades_gracefully_on_empty_eval_split(tmp_path, spark):
         f"'{os.path.join(sf_dir, 'documents.parquet')}'"
     )
     od = con.execute(
-        registry.resolve_oracle(
-            registry.STAGED_ORACLES["text_bloom_decontaminate"]
-        )
+        registry.ORACLES["text_bloom_decontaminate"]
     ).fetchdf()
     assert len(sp) == len(od)
     # empty filter flags nothing, on both engines
@@ -172,7 +170,7 @@ def test_theta_set_ops_contracts(spark):
     caching.clear()
     try:
         pdf = (
-            registry.STAGED_QUERIES["text_theta_set_ops"](spark, SF_SMOKE)
+            registry.QUERIES["text_theta_set_ops"](spark, SF_SMOKE)
             .toPandas()
         )
     finally:
@@ -234,7 +232,7 @@ def test_theta_exact_mode_below_k(tmp_path, spark):
     caching.clear()
     try:
         sp = (
-            registry.STAGED_QUERIES["text_theta_set_ops"](spark, sf_dir)
+            registry.QUERIES["text_theta_set_ops"](spark, sf_dir)
             .toPandas()
             .sort_values(["source_a", "source_b"])
             .reset_index(drop=True)
@@ -248,7 +246,7 @@ def test_theta_exact_mode_below_k(tmp_path, spark):
     )
     od = (
         con.execute(
-            registry.resolve_oracle(registry.STAGED_ORACLES["text_theta_set_ops"])
+            registry.ORACLES["text_theta_set_ops"]
         )
         .fetchdf()
         .sort_values(["source_a", "source_b"])

@@ -20,7 +20,7 @@ from collections import Counter
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def test_chisq_matches_python_reference(spark):

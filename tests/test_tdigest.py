@@ -16,7 +16,7 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 # max cluster q-width of the piecewise scale function is ~1/(DELTA *
 # min mid-segment slope) ~= 0.023 for DELTA=64; the interpolation
@@ -27,7 +27,7 @@ _RANK_SLACK = 0.05
 
 def _panel(spark):
     return (
-        registry.STAGED_QUERIES["tdigest_quantile_merge"](spark, SF_SMOKE)
+        registry.QUERIES["tdigest_quantile_merge"](spark, SF_SMOKE)
         .toPandas()
         .sort_values("p")
         .reset_index(drop=True)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 # 3 * sqrt(2/B) for B=128 — the AMS single-row standard error bound,
 # tripled; the median over 5 rows only tightens it

@@ -15,11 +15,11 @@ from __future__ import annotations
 from dist_map_reduce_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_staged()
+registry.load_all()
 
 
 def _out(spark):
-    return registry.STAGED_QUERIES["events_ewma_smooth"](
+    return registry.QUERIES["events_ewma_smooth"](
         spark, SF_SMOKE
     ).toPandas()
 
@@ -72,7 +72,7 @@ def test_warmup_and_coverage(spark):
 
 def test_plan_single_window_no_cartesian(spark):
     plan = (
-        registry.STAGED_QUERIES["events_ewma_smooth"](spark, SF_SMOKE)
+        registry.QUERIES["events_ewma_smooth"](spark, SF_SMOKE)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

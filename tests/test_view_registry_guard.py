@@ -19,16 +19,16 @@ from dist_map_reduce_spark.catalog import TABLES
 
 _PKG = Path(__file__).resolve().parent.parent / "dist_map_reduce_spark"
 
-# statement window: createOrReplaceTempView is chained onto its
+# statement lookback: createOrReplaceTempView is chained onto its
 # DataFrame expression; 3 joined lines cover every in-repo call shape
-_WINDOW = 3
+_LOOKBACK = 3
 
 
 def _statements(path: Path, needle: str):
     lines = path.read_text().splitlines()
     for i, line in enumerate(lines):
         if needle in line and not line.lstrip().startswith("#"):
-            lo = max(0, i - _WINDOW)
+            lo = max(0, i - _LOOKBACK)
             yield i + 1, " ".join(
                 ln.strip() for ln in lines[lo : i + 1]
             )

@@ -91,8 +91,7 @@ def main() -> None:
             .orderBy("variant")
             .collect()
         )
-        # ivfadc now rides in the graded panel above (r11 — its
-        # staged query gave it an oracle and a recall-panel row)
+        # ivfadc rides in the graded panel above
         for r in rows:
             print(f"  {r.variant:<12} hits={r.hits:>3}  recall@5={r.recall:.4f}")
         exact = _exact5(spark, sf_dir)

@@ -23,7 +23,6 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as e
 
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
@@ -37,24 +36,17 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    # registered via the driver surface; staged via the registry
-    # (same reach as tools/sweep.py)
     from dist_map_reduce_spark import registry
 
-    registry.load_staged()
-    fn = e.queries().get(name) or registry.STAGED_QUERIES.get(name)
+    registry.load_all()
+    fn = registry.QUERIES.get(name)
     if fn is None:
-        known = sorted(e.queries()) + [
-            f"{n} (staged)" for n in sorted(registry.STAGED_QUERIES)
-        ]
         print(f"unknown query name: {name!r}. Known names:")
-        for n in known:
+        for n in sorted(registry.QUERIES):
             print(f"  {n}")
         return 2
     sp = fn(spark, sf_dir).toPandas()
-    osql = e.oracle_sql().get(name)
-    if osql is None and name in registry.STAGED_ORACLES:
-        osql = registry.resolve_oracle(registry.STAGED_ORACLES[name])
+    osql = registry.ORACLES.get(name)
     if osql is None:
         print(f"{name}: rows-only ({len(sp)} rows)")
         return 0

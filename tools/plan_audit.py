@@ -40,16 +40,11 @@ from dist_map_reduce_spark import caching, registry  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
-registry.load_staged()
-
-# staged (next-round) queries audit identically — they are about to
-# occupy driver window slots, so their plans must already be clean
-ALL_QUERIES = {**registry.QUERIES, **registry.STAGED_QUERIES}
 
 # Queries whose CALLABLE executes work (streams, sink writes) during
 # plan construction — auditing their plan string would run the job.
 # Property, not prefix: 'streaming_'/'sink_' naming covers the
-# registered families, and eager staged/odd-named queries list here
+# registered families, and eager odd-named queries list here
 # explicitly.
 EXECUTES_ON_CONSTRUCTION = {"corpus_shard_manifest"}
 
@@ -83,7 +78,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     flags: list[str] = []
     exchanges: list[tuple[int, str]] = []
-    for name in sorted(ALL_QUERIES):
+    for name in sorted(registry.QUERIES):
         # base pass: sink_* round-trips are small writes this pass
         # has always audited; streams and full-corpus exports skip
         if name.startswith("streaming_") or name in EXECUTES_ON_CONSTRUCTION:
@@ -91,7 +86,7 @@ def main() -> int:
         caching.clear()
         try:
             plan = (
-                ALL_QUERIES[name](spark, sf_dir)
+                registry.QUERIES[name](spark, sf_dir)
                 ._jdf.queryExecution()
                 .executedPlan()
                 .toString()
@@ -146,13 +141,13 @@ def main() -> int:
                 "(expected > LAMBDA_FILTER_MAX) — the excludedRules "
                 "lift did not take effect or the detector regressed"
             )
-        for name in sorted(ALL_QUERIES):
+        for name in sorted(registry.QUERIES):
             if _eager(name):
                 continue  # executes / writes on plan construction
             caching.clear()
             try:
                 plan = (
-                    ALL_QUERIES[name](spark, sf_dir)
+                    registry.QUERIES[name](spark, sf_dir)
                     ._jdf.queryExecution()
                     .executedPlan()
                     .toString()

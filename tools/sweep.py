@@ -37,7 +37,6 @@ TABLES = [
 ]
 
 
-
 def _canon(pdf) -> list[tuple]:
     """Driver-style canonical rows: sorted columns, stringified cells,
     sorted tuples — ONE implementation so a future canonicalization
@@ -53,8 +52,9 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as e
+    from dist_map_reduce_spark import registry
 
+    registry.load_all()
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
         .config("spark.sql.shuffle.partitions", "16")
@@ -70,11 +70,11 @@ def main() -> int:
     bad: list[str] = []
     times: dict[str, float] = {}
     n = 0
-    for name, fn in sorted(e.queries().items()):
+    for name, fn in sorted(registry.QUERIES.items()):
         t0 = time.perf_counter()
         sp = fn(spark, sf_dir).toPandas()
         times[name] = time.perf_counter() - t0
-        osql = e.oracle_sql().get(name)
+        osql = registry.ORACLES.get(name)
         if osql is None:
             print(f"{name}: rows-only ({len(sp)} rows) {times[name]:.2f}s")
             continue
@@ -88,126 +88,11 @@ def main() -> int:
             f" ({len(sp)} rows) {times[name]:.2f}s"
         )
 
-    # STAGED (next-round) queries get the same engine-vs-oracle check
-    # under this FOREIGN session — exactly what the driver will run
-    # after promotion, so a foreign-session-only regression (e.g. an
-    # optimizer-rule dependence masked by session.py's conf) surfaces
-    # here a round early
-    from dist_map_reduce_spark import registry
-
-    registry.load_staged()
-    n_staged = 0
-    for name in sorted(registry.STAGED_ORACLES):
-        t0 = time.perf_counter()
-        sp = registry.STAGED_QUERIES[name](spark, sf_dir).toPandas()
-        times[f"staged:{name}"] = time.perf_counter() - t0
-        od = con.execute(
-            registry.resolve_oracle(registry.STAGED_ORACLES[name])
-        ).fetchdf()
-        n_staged += 1
-        ok = _canon(sp) == _canon(od)
-        if not ok:
-            bad.append(f"staged:{name}")
-        print(
-            f"staged:{name}: {'MATCH' if ok else 'MISMATCH'}"
-            f" ({len(sp)} rows) {times[f'staged:{name}']:.2f}s"
-        )
-
-    # Staged-forever queries never get a driver stamp (saturation
-    # policy, registry.load_all docstring), so their ONLY correctness
-    # evidence at the driver's scale is in-repo. Re-run their parity
-    # at sf0.01 whenever this sweep targeted a different scale, so the
-    # evidence regenerates every round without a manual step
-    # (VERDICT r13 #4).
-    driver_sf = "/root/testdata/sf0.01"
-    n_staged_driver_sf = 0
-    if (
-        os.path.realpath(sf_dir) != os.path.realpath(driver_sf)
-        and os.path.isdir(driver_sf)
-        and registry.STAGED_ORACLES
-    ):
-        con2 = duckdb.connect()
-        for t in TABLES:
-            con2.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{driver_sf}/{t}.parquet'"
-            )
-        for name in sorted(registry.STAGED_ORACLES):
-            t0 = time.perf_counter()
-            sp = registry.STAGED_QUERIES[name](spark, driver_sf).toPandas()
-            dt = time.perf_counter() - t0
-            times[f"staged@sf0.01:{name}"] = dt
-            od = con2.execute(
-                registry.resolve_oracle(registry.STAGED_ORACLES[name])
-            ).fetchdf()
-            ok = _canon(sp) == _canon(od)
-            n_staged_driver_sf += 1
-            if not ok:
-                bad.append(f"staged@sf0.01:{name}")
-            print(
-                f"staged@sf0.01:{name}: {'MATCH' if ok else 'MISMATCH'}"
-                f" ({len(sp)} rows) {dt:.2f}s"
-            )
-
     print("\nslowest under the foreign session:")
     for name, t in sorted(times.items(), key=lambda x: -x[1])[:10]:
         print(f"  {t:7.2f}s  {name}")
-    extra = (
-        f" + {n_staged_driver_sf} staged re-checked at sf0.01"
-        if n_staged_driver_sf
-        else ""
-    )
-    print(
-        f"\nchecked {n} oracles + {n_staged} staged at {sf_dir}{extra}; "
-        f"mismatches: {bad}"
-    )
-    untracked = _untracked_evidence()
-    if untracked:
-        print(
-            f"EVIDENCE UNTRACKED (git add + commit them): {untracked}"
-        )
-    return 1 if (bad or untracked) else 0
-
-
-def _untracked_evidence() -> list[str]:
-    """Round evidence files on disk but missing from the git index
-    (the four-rounds-running slip VERDICT r9 #7 asked to make
-    mechanical; tests/test_evidence_tracked.py is the pytest arm).
-    The driver writes BENCH_r{N}/CORRECTNESS_r{N}.json after the
-    builder's last commit, so the FIRST sweep of the next round is
-    exactly where this fires."""
-    import glob
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pats = ("BENCH_r*.json", "CORRECTNESS_r*.json")
-    on_disk = {
-        os.path.basename(p)
-        for pat in pats
-        for p in glob.glob(os.path.join(repo, pat))
-    }
-    try:
-        ls = subprocess.run(
-            ["git", "ls-files", *pats],
-            cwd=repo,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if ls.returncode != 0:
-            print(
-                "NOTE: evidence-tracking gate disabled this run "
-                "(git ls-files failed) — the pytest arm still covers it"
-            )
-            tracked = on_disk
-        else:
-            tracked = set(ls.stdout.split())
-    except Exception:
-        print(
-            "NOTE: evidence-tracking gate disabled this run "
-            "(git unavailable) — the pytest arm still covers it"
-        )
-        return []
-    return sorted(on_disk - tracked)
+    print(f"\nchecked {n} oracles at {sf_dir}; mismatches: {bad}")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":

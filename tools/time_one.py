@@ -27,7 +27,6 @@ from dist_map_reduce_spark import registry  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
-registry.load_staged()
 
 
 def main() -> int:
@@ -51,11 +50,7 @@ def main() -> int:
     registry.QUERIES["wordcount"](spark, sf_dir).count()
 
     for name in names:
-        fn = (
-            registry.QUERIES.get(name)
-            or registry.STAGED_QUERIES.get(name)
-            or bench.EXTRA.get(name)
-        )
+        fn = registry.QUERIES.get(name) or bench.EXTRA.get(name)
         if fn is None:
             print(f"unknown query: {name}")
             return 2

@@ -23,7 +23,6 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
         .config("spark.sql.shuffle.partitions", "16")

@@ -108,7 +108,7 @@ def exact_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "vec_id", F.lit(1).alias("hit"))
         )
 
-    return get_or_build("ann_recall_exact5", sf_dir, build, session=spark)
+    return get_or_build(spark, "ann_recall_exact5", sf_dir, build)
 
 
 def grade_recall(variants: DataFrame, exact5: DataFrame) -> DataFrame:

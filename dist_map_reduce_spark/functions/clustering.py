@@ -40,23 +40,22 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.functions.dedup import _CANDIDATE_PAIRS_SQL
+from dist_map_reduce_spark.caching import get_or_build
+from dist_map_reduce_spark.functions.dedup import (
+    _CANDIDATE_PAIRS_SQL,
+    minhash_band_candidates,
+)
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.session import iter_checkpoint
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """pairs(doc_a, doc_b) → (doc_id, component) with component =
-    min doc_id reachable. Deterministic.
-
-    Warns (and returns the partial labels) if ``max_iter`` passes
-    did not reach a fixpoint — a chain with graph diameter >
-    ``max_iter`` would otherwise silently yield split components.
-    """
-    # both edge directions in ONE pass over the candidate plan — a
-    # union of two selects would scan (and recompute) it twice before
-    # the persist materializes
-    edges = (
+def symmetric_edges(pairs: DataFrame) -> DataFrame:
+    """(src, dst) for both directions of every pair, distinct and
+    PERSISTED — the caller releases it in a ``finally``. Both
+    directions come from ONE pass over the candidate plan — a union
+    of two selects would scan (and recompute) it twice before the
+    persist materializes."""
+    return (
         pairs.select(
             F.explode(
                 F.array(
@@ -73,54 +72,67 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .distinct()
         .persist()
     )
-    # iteration 0 fused into the init: component = min(self, direct
-    # neighbors) — one aggregation instead of a full propagate pass
-    # (every node appears as src because edges are symmetric)
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("md"))
-        .select(
-            F.col("src").alias("doc_id"),
-            F.least(F.col("src"), F.col("md")).alias("component"),
-        )
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # carry the old component through the propagate step so the
-        # convergence check is a filter on the SAME materialized
-        # snapshot, not an extra join of new vs old labels. Eager
-        # checkpointing materializes AND truncates the lineage
-        # (SCALE.md iterative-lineage rule; reliable dir when the app
-        # set one, else local — session.iter_checkpoint); snapshot
-        # blocks release via the context cleaner once unreferenced.
-        stepped = iter_checkpoint(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """pairs(doc_a, doc_b) → (doc_id, component) with component =
+    min doc_id reachable. Deterministic.
+
+    Warns (and returns the partial labels) if ``max_iter`` passes
+    did not reach a fixpoint — a chain with graph diameter >
+    ``max_iter`` would otherwise silently yield split components.
+    """
+    edges = symmetric_edges(pairs)
+    try:
+        # iteration 0 fused into the init: component = min(self, direct
+        # neighbors) — one aggregation instead of a full propagate pass
+        # (every node appears as src because edges are symmetric)
+        labels = (
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("md"))
             .select(
-                labels.doc_id,
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("new_component"),
+                F.col("src").alias("doc_id"),
+                F.least(F.col("src"), F.col("md")).alias("component"),
             )
         )
-        # convergence check: one scalar to the driver, not the data
-        changed = (
-            stepped.filter(F.col("new_component") != F.col("old_component"))
-            .limit(1)
-            .count()
-        )
-        labels = stepped.select("doc_id", F.col("new_component").alias("component"))
-        if changed == 0:
-            converged = True
-            break
-    # the labels snapshot is materialized; the edge cache is dead
-    edges.unpersist()
+        converged = False
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.doc_id)
+                .groupBy("src")
+                .agg(F.min("component").alias("nbr_component"))
+            )
+            # carry the old component through the propagate step so the
+            # convergence check is a filter on the SAME materialized
+            # snapshot, not an extra join of new vs old labels. Eager
+            # checkpointing materializes AND truncates the lineage
+            # (SCALE.md iterative-lineage rule; reliable dir when the app
+            # set one, else local — session.iter_checkpoint); snapshot
+            # blocks release via the context cleaner once unreferenced.
+            stepped = iter_checkpoint(
+                labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
+                .select(
+                    labels.doc_id,
+                    F.col("component").alias("old_component"),
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("nbr_component"), F.col("component")),
+                    ).alias("new_component"),
+                )
+            )
+            # convergence check: one scalar to the driver, not the data
+            changed = (
+                stepped.filter(F.col("new_component") != F.col("old_component"))
+                .limit(1)
+                .count()
+            )
+            labels = stepped.select("doc_id", F.col("new_component").alias("component"))
+            if changed == 0:
+                converged = True
+                break
+    finally:
+        # the labels snapshot is materialized; the edge cache is dead
+        edges.unpersist()
     if not converged:
         warnings.warn(
             f"connected_components: no fixpoint after {max_iter} iterations "
@@ -261,21 +273,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_clustering.py and the recursive-CTE oracle above.
 
     Repeat invocations on the same fixture dir return the cached
-    cluster table (materialized-view reuse via caching.peek): the
-    label-propagation loop runs Spark jobs at plan-CONSTRUCTION
-    time, so output-level persist alone could not skip the rebuild.
-    Same staleness contract as every persist_tracked slot — the
-    fixture parquet is immutable between invocations."""
-    from dist_map_reduce_spark import caching
-    from dist_map_reduce_spark.functions.dedup import minhash_band_candidates
+    cluster table."""
+    return get_or_build(
+        spark,
+        "dedup_clusters_out",
+        sf_dir,
+        lambda: _cluster_table(
+            connected_components(minhash_band_candidates(spark, sf_dir))
+        ),
+    )
 
-    hit = caching.peek("dedup_clusters_out", sf_dir, session=spark)
-    if hit is not None:
-        return hit
 
-    pairs = minhash_band_candidates(spark, sf_dir)
-    comps = connected_components(pairs)
-    out = comps.groupBy("component").agg(
+def _cluster_table(comps: DataFrame) -> DataFrame:
+    """(component, cluster_size, keep_id, members) per component."""
+    return comps.groupBy("component").agg(
         F.count("*").alias("cluster_size"),
         F.min("doc_id").alias("keep_id"),
         F.concat_ws(
@@ -286,7 +297,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("members"),
     )
-    return caching.persist_tracked(out, "dedup_clusters_out", sf_dir)
 
 
 @query(
@@ -395,26 +405,12 @@ def dedup_clusters_logn(spark: SparkSession, sf_dir: str) -> DataFrame:
     split the component (property test on a 200-link chain:
     tests/test_clustering.py).
 
-    Cached per fixture dir like its sibling (the star-contraction
-    loop runs Spark jobs at plan-construction time)."""
-    from dist_map_reduce_spark import caching
-    from dist_map_reduce_spark.functions.dedup import minhash_band_candidates
-
-    hit = caching.peek("dedup_clusters_logn_out", sf_dir, session=spark)
-    if hit is not None:
-        return hit
-
-    pairs = minhash_band_candidates(spark, sf_dir)
-    comps = connected_components_logn(pairs)
-    out = comps.groupBy("component").agg(
-        F.count("*").alias("cluster_size"),
-        F.min("doc_id").alias("keep_id"),
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(F.collect_list("doc_id")),
-                lambda x: x.cast("string"),
-            ),
-        ).alias("members"),
+    Cached per fixture dir like its sibling."""
+    return get_or_build(
+        spark,
+        "dedup_clusters_logn_out",
+        sf_dir,
+        lambda: _cluster_table(
+            connected_components_logn(minhash_band_candidates(spark, sf_dir))
+        ),
     )
-    return caching.persist_tracked(out, "dedup_clusters_logn_out", sf_dir)

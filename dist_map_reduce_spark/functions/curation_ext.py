@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -141,16 +141,17 @@ def lexical_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posting table once (bounded: ≤ MAX_DF entries per surviving
     # term) instead of re-running the corpus-scale explode + two
     # aggregates per consumer (r16, guide §2.4)
-    postings = persist_tracked(
-        tf.groupBy("term")
+    postings = get_or_build(
+        spark,
+        "lexcos_postings",
+        sf_dir,
+        lambda: tf.groupBy("term")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("doc_id", "tf"))
             ).alias("ps")
         )
         .where((F.size("ps") >= 2) & (F.size("ps") <= MAX_DF)),
-        "lexcos_postings",
-        sf_dir,
     )
     norms = (
         postings.select(F.explode("ps").alias("p"))

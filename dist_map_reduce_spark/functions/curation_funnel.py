@@ -78,7 +78,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 
 # importing the component modules registers the queries and oracle
@@ -218,102 +218,95 @@ def funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     body, not here."""
     import logging
 
-    from dist_map_reduce_spark import caching
-
-    # slot lookup FIRST: on a repeat invocation the cached flags
-    # table answers everything — without this peek each call still
-    # paid the two alignment-check jobs below (the _learn pattern)
-    hit = caching.peek("curation_funnel_flags", sf_dir, session=spark)
-    if hit is not None:
-        return hit
-
-    docs = load_table(spark, sf_dir, "documents")
-    ex = QUERIES["dedup_exact_docs"](spark, sf_dir).select(
-        F.col("keep_id").alias("doc_id"), F.lit(True).alias("f1")
-    )
-    nd = (
-        QUERIES["dedup_keep_drop_list"](spark, sf_dir)
-        .filter(F.col("action") == "keep")
-        .select("doc_id", F.lit(True).alias("f2"))
-    )
-    # SemDeDup stage, gated on doc-alignment (two 1-row scalar
-    # aggregates — the quality_model bounded-collect class). The
-    # oracle evaluates the identical predicate in SQL, so both
-    # engines no-op (or bite) in lockstep.
-    emb_ids = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id")
-    )
-    n_docs = docs.count()
-    n_aligned = docs.select("doc_id").join(emb_ids, "doc_id").count()
-    if n_aligned == n_docs:
-        sd = (
-            QUERIES["semdedup_prune_list"](spark, sf_dir)
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        ex = QUERIES["dedup_exact_docs"](spark, sf_dir).select(
+            F.col("keep_id").alias("doc_id"), F.lit(True).alias("f1")
+        )
+        nd = (
+            QUERIES["dedup_keep_drop_list"](spark, sf_dir)
             .filter(F.col("action") == "keep")
-            .select(
-                F.col("vec_id").alias("doc_id"), F.lit(True).alias("f3")
+            .select("doc_id", F.lit(True).alias("f2"))
+        )
+        # SemDeDup stage, gated on doc-alignment (two 1-row scalar
+        # aggregates — the quality_model bounded-collect class). The
+        # oracle evaluates the identical predicate in SQL, so both
+        # engines no-op (or bite) in lockstep.
+        emb_ids = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("doc_id")
+        )
+        n_docs = docs.count()
+        n_aligned = docs.select("doc_id").join(emb_ids, "doc_id").count()
+        if n_aligned == n_docs:
+            sd = (
+                QUERIES["semdedup_prune_list"](spark, sf_dir)
+                .filter(F.col("action") == "keep")
+                .select(
+                    F.col("vec_id").alias("doc_id"), F.lit(True).alias("f3")
+                )
             )
+        else:
+            logging.getLogger(__name__).warning(
+                "curation_funnel: embeddings not doc-aligned at %s "
+                "(%d of %d documents have a vector) — SemDeDup stage is "
+                "an explicit no-op (every document passes)",
+                sf_dir,
+                n_aligned,
+                n_docs,
+            )
+            sd = docs.select("doc_id", F.lit(True).alias("f3"))
+        ql = (
+            QUERIES["quality_logreg_scores"](spark, sf_dir)
+            .filter(F.col("keep"))
+            .select("doc_id", F.lit(True).alias("f4"))
         )
-    else:
-        logging.getLogger(__name__).warning(
-            "curation_funnel: embeddings not doc-aligned at %s "
-            "(%d of %d documents have a vector) — SemDeDup stage is "
-            "an explicit no-op (every document passes)",
-            sf_dir,
-            n_aligned,
-            n_docs,
+        dc = (
+            QUERIES["decontaminate_against_eval"](spark, sf_dir)
+            .filter(~F.col("contaminated"))
+            .select("doc_id", F.lit(True).alias("f5"))
         )
-        sd = docs.select("doc_id", F.lit(True).alias("f3"))
-    ql = (
-        QUERIES["quality_logreg_scores"](spark, sf_dir)
-        .filter(F.col("keep"))
-        .select("doc_id", F.lit(True).alias("f4"))
-    )
-    dc = (
-        QUERIES["decontaminate_against_eval"](spark, sf_dir)
-        .filter(~F.col("contaminated"))
-        .select("doc_id", F.lit(True).alias("f5"))
-    )
-    toks = F.size(F.split("text", " ")).cast("bigint")
-    m = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("aes:"), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    clock = (
-        -F.log((m + F.lit(1)).cast("double") / F.lit(_POW32))
-        / toks.cast("double")
-        + F.lit(0.0)
-    )
-    base = docs.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        toks.alias("toks"),
-        clock.alias("raw_clock"),
-    )
-    out = (
-        base.join(ex, "doc_id", "left")
-        .join(nd, "doc_id", "left")
-        .join(sd, "doc_id", "left")
-        .join(ql, "doc_id", "left")
-        .join(dc, "doc_id", "left")
-        .select(
+        toks = F.size(F.split("text", " ")).cast("bigint")
+        m = F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("aes:"), F.col("doc_id").cast("string"))),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        clock = (
+            -F.log((m + F.lit(1)).cast("double") / F.lit(_POW32))
+            / toks.cast("double")
+            + F.lit(0.0)
+        )
+        base = docs.select(
             "doc_id",
             "source",
             "n_chars",
-            "toks",
-            *[
-                F.coalesce(f"f{i}", F.lit(False)).alias(f"f{i}")
-                for i in range(1, 6)
-            ],
-            "raw_clock",
+            toks.alias("toks"),
+            clock.alias("raw_clock"),
         )
-    )
-    return persist_tracked(out, "curation_funnel_flags", sf_dir)
+        return (
+            base.join(ex, "doc_id", "left")
+            .join(nd, "doc_id", "left")
+            .join(sd, "doc_id", "left")
+            .join(ql, "doc_id", "left")
+            .join(dc, "doc_id", "left")
+            .select(
+                "doc_id",
+                "source",
+                "n_chars",
+                "toks",
+                *[
+                    F.coalesce(f"f{i}", F.lit(False)).alias(f"f{i}")
+                    for i in range(1, 6)
+                ],
+                "raw_clock",
+            )
+        )
+
+    return get_or_build(spark, "curation_funnel_flags", sf_dir, build)
 
 
 def capped_survivors(flags: DataFrame) -> DataFrame:

@@ -30,7 +30,7 @@ Scale posture (100 TB):
     bands/shingles). The caps are mirrored in the DuckDB oracles,
     and tests/test_properties.py asserts the fixture corpora are
     unaffected by them.
-  - persisted intermediates go through caching.persist_tracked: one
+  - persisted intermediates go through caching.get_or_build: one
     live entry per slot — repeat invocations on the same fixture
     reuse the materialized intermediate (materialized-view style),
     a different fixture dir releases the old entry first — so
@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -216,7 +216,7 @@ def minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without this Spark recomputes the whole shingle→md5→min
     # pipeline per consumer.
     _tune_cached_plans(docs)
-    wide = persist_tracked(_banded_wide(docs), "minhash_banded", sf_dir)
+    wide = get_or_build(spark, "minhash_banded", sf_dir, lambda: _banded_wide(docs))
     return _pairs_within_keys(_bands_long(wide), ["band_id", "band_key"])
 
 
@@ -299,8 +299,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the capped inverted index is grouped ONCE and persisted; both
     # the per-doc set sizes and the candidate pairs derive from the
     # cached postings (no second pass over the raw shingle strings)
-    grouped = persist_tracked(
-        _capped_postings(shingles(docs)), "ngram_postings", sf_dir
+    grouped = get_or_build(
+        spark, "ngram_postings", sf_dir, lambda: _capped_postings(shingles(docs))
     )
     sizes = (
         grouped.select(F.explode("ds").alias("doc_id"))

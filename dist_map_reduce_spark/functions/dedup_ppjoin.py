@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.dedup_common import (
     MAX_KEY_DOCS,
@@ -155,9 +155,7 @@ def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the shingle table feeds five consumers (df counts, sizes, rank,
     # and both verification arms) — one tracked persist slot
-    sh = persist_tracked(
-        shingles(docs), "ppjoin_shingles", sf_dir
-    )
+    sh = get_or_build(spark, "ppjoin_shingles", sf_dir, lambda: shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
 
     # the prefix index feeds THREE consumers (pref_df, and both sides
@@ -167,21 +165,22 @@ def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.4 — share one exchange instead of repeating it). Both
     # intermediates are prefix-bounded (~1/5 of the postings), far
     # smaller than the already-persisted shingle table.
-    pref = persist_tracked(prefix_postings(sh), "ppjoin_pref", sf_dir)
+    pref = get_or_build(spark, "ppjoin_pref", sf_dir, lambda: prefix_postings(sh))
     pref_df = pref.groupBy("shingle").agg(F.count("*").alias("pdocs"))
     capped = (
         pref_df.filter(F.col("pdocs") > MAX_KEY_DOCS)
         .agg(F.count("*").cast("bigint").alias("n_capped_postings"))
     )
-    pref_ok = persist_tracked(
-        pref.join(
+    pref_ok = get_or_build(
+        spark,
+        "ppjoin_pref_ok",
+        sf_dir,
+        lambda: pref.join(
             pref_df.filter(F.col("pdocs") <= MAX_KEY_DOCS).select(
                 "shingle"
             ),
             "shingle",
         ),
-        "ppjoin_pref_ok",
-        sf_dir,
     )
 
     a = pref_ok.select(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.dedup_common import (
     MAX_KEY_DOCS,
@@ -161,7 +161,7 @@ def simhash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     + exact bit_count verification. Fingerprints are persisted once —
     they feed the band expansion AND both sides of the verify join."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = persist_tracked(simhash32(docs), "simhash32_fp", sf_dir)
+    fp = get_or_build(spark, "simhash32_fp", sf_dir, lambda: simhash32(docs))
     bands = None
     mask = (1 << BAND_BITS) - 1
     for i in range(N_BANDS):

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
+from dist_map_reduce_spark.functions.clustering import symmetric_edges
+from dist_map_reduce_spark.functions.dedup import minhash_band_candidates
 from dist_map_reduce_spark.functions.dedup_common import _CANDIDATE_PAIRS_SQL
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.session import iter_checkpoint
@@ -96,73 +99,63 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate graph is sparse by construction (banded LSH, hot keys
     capped), and every node of the symmetric graph has degree ≥ 1,
     so there is no dangling-mass term. Repeat invocations on the
-    same fixture return the cached rank table (caching.peek — the
-    loop runs jobs at construction time)."""
-    from dist_map_reduce_spark import caching
-    from dist_map_reduce_spark.functions.dedup import minhash_band_candidates
-
-    hit = caching.peek("pagerank_out", sf_dir, session=spark)
-    if hit is not None:
-        return hit
-
-    pairs = minhash_band_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .persist()
+    same fixture return the cached rank table."""
+    return get_or_build(
+        spark,
+        "pagerank_out",
+        sf_dir,
+        lambda: pagerank(
+            minhash_band_candidates(spark, sf_dir).select("doc_a", "doc_b")
+        ),
     )
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    n = deg.agg(F.count("*").alias("n_nodes"))
-    # 1-row aggregate crossJoin: the sanctioned scalar-subquery shape
-    # Eager checkpointing materializes the snapshot AND truncates
-    # the logical lineage — with two previous-round inputs (edges,
-    # ranks) per round, an uncut lineage nests multiplicatively (the
-    # 3-round plan string reached 13 MB even with persist(), because
-    # cached-relation reprs embed their build plans). Storage is
-    # conf-driven (session.iter_checkpoint): reliable checkpoint dir
-    # when the app set one via sc.setCheckpointDir, else local.
-    ranks = iter_checkpoint(
-        deg.crossJoin(F.broadcast(n))
-        .select(
-            F.col("src").alias("node"),
-            "deg",
-            "n_nodes",
-            F.expr(_INIT_SQL).alias("r"),
-        )
-        .alias("ranks")
-    ).alias("ranks")
-    for _ in range(N_ITER):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select(edges.dst, F.expr(_contrib_sql("ranks")).alias("c"))
-        )
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+
+
+def pagerank(pairs: DataFrame) -> DataFrame:
+    """pairs(doc_a, doc_b) → (doc_id, pagerank) over the symmetric
+    graph. The edge cache is released on every exit, error paths
+    included."""
+    edges = symmetric_edges(pairs)
+    try:
+        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        n = deg.agg(F.count("*").alias("n_nodes"))
+        # 1-row aggregate crossJoin: the sanctioned scalar-subquery shape
+        # Eager checkpointing materializes the snapshot AND truncates
+        # the logical lineage — with two previous-round inputs (edges,
+        # ranks) per round, an uncut lineage nests multiplicatively (the
+        # 3-round plan string reached 13 MB even with persist(), because
+        # cached-relation reprs embed their build plans). Storage is
+        # conf-driven (session.iter_checkpoint): reliable checkpoint dir
+        # when the app set one via sc.setCheckpointDir, else local.
         ranks = iter_checkpoint(
-            deg.join(summed, deg.src == summed.dst)
-            .crossJoin(F.broadcast(n))
+            deg.crossJoin(F.broadcast(n))
             .select(
                 F.col("src").alias("node"),
                 "deg",
                 "n_nodes",
-                F.expr(_STEP_SQL).alias("r"),
+                F.expr(_INIT_SQL).alias("r"),
             )
+            .alias("ranks")
         ).alias("ranks")
-    out = ranks.select(
-        F.col("node").alias("doc_id"), F.col("r").cast("double").alias("pagerank")
-    )
-    out = caching.persist_tracked(out, "pagerank_out", sf_dir)
-    out.count()  # materialize before the edge cache releases
-    edges.unpersist()
-    return out
+        for _ in range(N_ITER):
+            contrib = (
+                edges.join(ranks, edges.src == ranks.node)
+                .select(edges.dst, F.expr(_contrib_sql("ranks")).alias("c"))
+            )
+            summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+            ranks = iter_checkpoint(
+                deg.join(summed, deg.src == summed.dst)
+                .crossJoin(F.broadcast(n))
+                .select(
+                    F.col("src").alias("node"),
+                    "deg",
+                    "n_nodes",
+                    F.expr(_STEP_SQL).alias("r"),
+                )
+            ).alias("ranks")
+        return ranks.select(
+            F.col("node").alias("doc_id"),
+            F.col("r").cast("double").alias("pagerank"),
+        )
+    finally:
+        # the ranks snapshot is materialized; the edge cache is dead
+        edges.unpersist()

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -133,13 +133,15 @@ def bigram_scores(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
     # db feeds the bigram vocabulary, the context marginal, AND the
     # scoring join: persist it (slot-bounded) so the corpus bigram
     # extraction runs once — the lm_score.py discipline.
-    db = (
-        doc_bigrams(docs)
+    spark = docs.sparkSession
+    db = get_or_build(
+        spark,
+        "lm_doc_bigrams",
+        cache_key,
+        lambda: doc_bigrams(docs)
         .groupBy("doc_id", "w1", "w2")
-        .agg(F.count("*").alias("c"))
+        .agg(F.count("*").alias("c")),
     )
-    if cache_key is not None:
-        db = persist_tracked(db, "lm_doc_bigrams", cache_key)
     # context marginal folded INTO the bigram vocab at vocab scale
     # (a (w1,w2)-keyed join against a w1-keyed aggregate of itself),
     # so the corpus-side db table joins the model twice, not three
@@ -150,13 +152,14 @@ def bigram_scores(docs: DataFrame, cache_key: str | None = None) -> DataFrame:
     model = bv.join(ctx, "w1")
     # unigram table persisted: it feeds both the scoring join and the
     # 1-row total, and deriving it once saves a second corpus scan
-    uni = (
-        docs.select(F.explode(F.split("text", " ")).alias("w2"))
+    uni = get_or_build(
+        spark,
+        "lm_bigram_uni",
+        cache_key,
+        lambda: docs.select(F.explode(F.split("text", " ")).alias("w2"))
         .groupBy("w2")
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.count("*").alias("cnt")),
     )
-    if cache_key is not None:
-        uni = persist_tracked(uni, "lm_bigram_uni", cache_key)
     total = uni.agg(F.sum("cnt").alias("total"))
     p = F.lit(LAMBDA) * (F.col("c12") * F.lit(1.0) / F.col("c1")) + F.lit(
         1.0 - LAMBDA

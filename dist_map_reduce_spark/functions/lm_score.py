@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -69,14 +69,16 @@ def lm_unigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-normalized unigram log-probability per document (and
     its bits-per-token form): train unigram counts on the corpus,
     score each document by sum(c·ln(p))/n_tokens."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     # dt feeds the vocabulary, the total, AND the scoring join:
     # persist it (slot-bounded) so the corpus tokenization runs once
-    dt = persist_tracked(
-        toks.groupBy("doc_id", "token").agg(F.count("*").alias("c")),
+    dt = get_or_build(
+        spark,
         "lm_doc_terms",
         sf_dir,
+        lambda: load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").alias("c")),
     )
     vocab = dt.groupBy("token").agg(F.sum("c").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))

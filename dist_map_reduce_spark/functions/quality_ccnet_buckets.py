@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.lm_bigram import bigram_scores
 from dist_map_reduce_spark.registry import ORACLES, query
@@ -72,8 +72,8 @@ def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-doc score table feeds TWO consumers (the threshold
     # aggregate and the bucket assignment) — persist it so the LM
     # scoring joins run once per invocation instead of twice
-    s = persist_tracked(
-        bigram_scores(docs, cache_key=sf_dir), "ccnet_scores", sf_dir
+    s = get_or_build(
+        spark, "ccnet_scores", sf_dir, lambda: bigram_scores(docs, cache_key=sf_dir)
     )
     thr = s.agg(
         F.expr("percentile(bits_per_token, array(1D/3, 2D/3))").alias("q")

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.similarity_common import (
     KMEANS_ROUNDS,
@@ -51,18 +52,6 @@ from dist_map_reduce_spark.registry import query
 
 TAU = 0.4  # within-cell cosine at/above which the higher id drops
 MAX_CELL_VECS = 4096  # degenerate-cell guard, far above fixture cells
-
-
-def prune_decisions(
-    assigned: DataFrame,
-    tau: float = TAU,
-    max_cell_vecs: int = MAX_CELL_VECS,
-) -> DataFrame:
-    """The SemDeDup decision core over an arbitrary (vec_id,
-    embedding, cell) assignment: (vec_id, cell, near_cos, action).
-    ``assigned`` should be persisted by the caller — it is consumed
-    by both self-join sides and the final decision join-back."""
-    return _decide(assigned, tau, max_cell_vecs)
 
 
 def prune_list_scaled(
@@ -84,16 +73,15 @@ def prune_list_scaled(
     (fixture, k) — exactly what the cached subtree depends on — so a
     clustering change releases the old assignment instead of stacking
     a new one beside it, while tau/cap sweeps reuse it."""
-    from dist_map_reduce_spark import caching
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = caching.persist_tracked(
-        kmeans_fit(emb, k=k_cells)[0],
+    assigned = get_or_build(
+        spark,
         "semdedup_scaled_assigned",
         # key = what the cached subtree DEPENDS ON: (fixture, k).
         # tau/cap only parameterize _decide downstream — keying on
         # them would re-run the whole Lloyd fit per threshold sweep
         f"{sf_dir}:{k_cells}",
+        lambda: kmeans_fit(emb, k=k_cells)[0],
     )
     return _decide(assigned, tau, max_cell_vecs)
 
@@ -105,23 +93,21 @@ def _prune_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     (-1.0 when none, i.e. the vector is its cell's minimum id or its
     cell was over the cap); action = drop iff near_cos >= TAU.
     Cached per fixture dir — both registered queries consume it."""
-    from dist_map_reduce_spark import caching
 
-    hit = caching.peek("semdedup_prune", sf_dir, session=spark)
-    if hit is not None:
-        return hit
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        # the assignment subtree is consumed THREE times (both
+        # self-join sides + the final decision join-back); persist it
+        # once or the 3-round Lloyd pipeline re-executes per branch
+        # (audited: 33 exchanges unpersisted vs 5 persisted)
+        assigned = get_or_build(
+            spark, "semdedup_assigned", sf_dir, lambda: kmeans_fit(emb)[0]
+        )  # (vec_id, embedding, cell)
+        return _decide(assigned, TAU, MAX_CELL_VECS)
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # the assignment subtree is consumed THREE times (both self-join
-    # sides + the final decision join-back); persist it once or the
-    # 3-round Lloyd pipeline re-executes per branch (audited: 33
-    # exchanges unpersisted vs 5 persisted)
-    assigned = caching.persist_tracked(
-        kmeans_fit(emb)[0], "semdedup_assigned", sf_dir
-    )  # (vec_id, embedding, cell)
-    return caching.persist_tracked(
-        _decide(assigned, TAU, MAX_CELL_VECS), "semdedup_prune", sf_dir
-    )
+    return get_or_build(spark, "semdedup_prune", sf_dir, build)
 
 
 def _decide(

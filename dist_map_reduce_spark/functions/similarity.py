@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.similarity_common import (  # noqa: F401
     DIM,
@@ -160,13 +161,10 @@ def _lsh_bucketed(
     """The sign-LSH index table (vec_id, embedding, bucket) shared by
     all three LSH consumers (ANN search, bucket histogram, embedding
     near-dup) — one slot per plane count (the slot-per-space
-    discipline), peek-first so a warm slot skips constructing the
-    n_planes × DIM dot-product expression tree (the r12
-    construction-cost lesson). Footprint is the corpus plus one int
-    per row — the index itself, not a per-consumer copy."""
-    from dist_map_reduce_spark.caching import get_or_build
-
+    discipline). Footprint is the corpus plus one int per row — the
+    index itself, not a per-consumer copy."""
     return get_or_build(
+        spark,
         f"lsh_bucketed_p{n_planes}",
         sf_dir,
         lambda: load_table(spark, sf_dir, "embeddings").select(
@@ -174,7 +172,6 @@ def _lsh_bucketed(
             "embedding",
             bucket_col("embedding", n_planes).alias("bucket"),
         ),
-        session=spark,
     )
 
 

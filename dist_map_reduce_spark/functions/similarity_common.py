@@ -18,6 +18,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
+
 DIM = 64
 N_PLANES = 8
 N_QUERIES = 5  # query set: vec_id < 5
@@ -283,21 +285,11 @@ def kmeans_centroids_shared(emb: DataFrame, sf_dir: str) -> DataFrame:
     panel running both — train the 3-round Lloyd ONCE instead of
     per consumer. K×DIM rows: negligible footprint, full-Lloyd
     lineage (the similarity_ivfpq.py:ivfadc 'persist the tiny table
-    with the expensive lineage' precedent). Peek-first: on a warm
-    slot the Lloyd PLAN is never even constructed — building the
-    fixed-depth iterative plan costs ~0.5 s of driver-side analysis
-    per invocation, which persist_tracked alone would rebuild only
-    to discard (measured r12; caching.peek exists for exactly this).
-    Callers needing the ASSIGNMENT (kmeans_embedding_cells,
-    semdedup) or a non-default k keep calling ``kmeans_fit``
-    directly."""
-    from dist_map_reduce_spark.caching import get_or_build
-
+    with the expensive lineage' precedent). Callers needing the
+    ASSIGNMENT (kmeans_embedding_cells, semdedup) or a non-default k
+    keep calling ``kmeans_fit`` directly."""
     return get_or_build(
-        "kmeans_centroids_raw",
-        sf_dir,
-        lambda: kmeans_fit(emb)[1],
-        session=emb.sparkSession,
+        emb.sparkSession, "kmeans_centroids_raw", sf_dir, lambda: kmeans_fit(emb)[1]
     )
 
 
@@ -323,11 +315,8 @@ def ivf_ranked_cells(
     nprobe) but the CACHE is keyed only by (slot, sf_dir) — callers
     must use one slot name per centroid SPACE ('ivf_ranked_cells'
     label-centroid, KMEANS_IVF_RANKED_SLOT raw k-means,
-    'ivfadc_ranked_cells' normalized k-means). Peek-first so a warm
-    slot skips constructing the ranking plan entirely."""
+    'ivfadc_ranked_cells' normalized k-means)."""
     from pyspark.sql import Window as W
-
-    from dist_map_reduce_spark.caching import get_or_build
 
     if nprobe != NPROBE:
         slot = f"{slot}_np{nprobe}"
@@ -361,7 +350,7 @@ def ivf_ranked_cells(
             .select("vec_id", "cand_cell", "rn")
         )
 
-    return get_or_build(slot, sf_dir, build, session=emb.sparkSession)
+    return get_or_build(emb.sparkSession, slot, sf_dir, build)
 
 
 def ivf_search(

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.ann_recall import (
     exact_top5,
@@ -116,18 +116,22 @@ def opq_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    mu, rot = opq_rotation(emb)
-    sub = persist_tracked(
-        subvector_rows(rotated_corpus(emb, mu, rot)), "opq_subrows", sf_dir
+    # the rotation's PCA jobs feed only the subrows slot, so a warm
+    # slot skips them too
+    sub = get_or_build(
+        spark,
+        "opq_subrows",
+        sf_dir,
+        lambda: subvector_rows(rotated_corpus(emb, *opq_rotation(emb))),
     )
     # persist BOTH pq_fit outputs (the similarity_pq.pq_index policy,
     # under opq-prefixed slots so the plain-PQ index isn't clobbered):
     # codes and codebook hang off the same Lloyd training lineage, and
     # an unpersisted codebook re-runs the whole training a second time
     # when the LUT side materializes
-    codes, cb = pq_fit(sub)
-    codes = persist_tracked(codes, "opq_codes", sf_dir)
-    cb = persist_tracked(cb, "opq_codebook", sf_dir)
+    codes, cb = get_or_build(
+        spark, ("opq_codes", "opq_codebook"), sf_dir, lambda: pq_fit(sub)
+    )
     lut = pq_lut(sub, cb)
     adc = (
         codes.join(F.broadcast(lut), ["m", "code"])

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.similarity_common import DIM, N_QUERIES
 from dist_map_reduce_spark.registry import query
@@ -76,15 +76,9 @@ def subvector_rows(emb: DataFrame) -> DataFrame:
 def pq_subrows_shared(emb: DataFrame, sf_dir: str) -> DataFrame:
     """The persisted (vec_id, m, sub) exploded corpus shared by the
     PQ-ADC and IVF-PQ variants — every training round and LUT reads
-    it, so the corpus is scanned once. Peek-first (the pq_index
-    rationale)."""
-    from dist_map_reduce_spark.caching import get_or_build
-
+    it, so the corpus is scanned once."""
     return get_or_build(
-        "pq_subrows",
-        sf_dir,
-        lambda: subvector_rows(emb),
-        session=emb.sparkSession,
+        emb.sparkSession, "pq_subrows", sf_dir, lambda: subvector_rows(emb)
     )
 
 
@@ -94,21 +88,9 @@ def pq_index(sub: DataFrame, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     compressed corpus, the whole point of PQ) and the codebook is
     M·K rows, so the footprint is trivial while repeat searches skip
     the Lloyd training entirely (production builds once and serves
-    many queries; the IVF ranking slot follows the same policy).
-    Peek-first: warm slots skip constructing the 2-round Lloyd plan
-    (driver-side analysis cost — the kmeans_centroids_shared
-    rationale)."""
-    from dist_map_reduce_spark.caching import peek
-
-    session = sub.sparkSession
-    codes = peek("pq_codes", sf_dir, session=session)
-    cb = peek("pq_codebook", sf_dir, session=session)
-    if codes is not None and cb is not None:
-        return codes, cb
-    codes, cb = pq_fit(sub)
-    return (
-        persist_tracked(codes, "pq_codes", sf_dir),
-        persist_tracked(cb, "pq_codebook", sf_dir),
+    many queries; the IVF ranking slot follows the same policy)."""
+    return get_or_build(
+        sub.sparkSession, ("pq_codes", "pq_codebook"), sf_dir, lambda: pq_fit(sub)
     )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -299,24 +300,21 @@ def text_tf_idf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the observed size."""
     from pyspark.sql import Window as W
 
-    from dist_map_reduce_spark.caching import get_or_build
-
     docs = load_table(spark, sf_dir, "documents")
-    tokens = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
     # (doc_id, word, tf) slotted: the tf arm and the df arm otherwise
     # each re-ran the corpus explode + aggregate (r17; the bm25_tf
     # precedent). df derives from tf — count of (doc, word) rows per
     # word IS countDistinct(doc_id) over tokens, since tf holds
     # exactly one row per distinct (doc, word) pair.
     tf = get_or_build(
+        spark,
         "tfidf_tf",
         sf_dir,
-        lambda: tokens.groupBy("doc_id", "word").agg(
-            F.count("*").alias("tf")
-        ),
-        session=spark,
+        lambda: docs.select(
+            "doc_id", F.explode(F.split("text", " ")).alias("word")
+        )
+        .groupBy("doc_id", "word")
+        .agg(F.count("*").alias("tf")),
     )
     df = tf.groupBy("word").agg(F.count("*").cast("bigint").alias("df"))
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))

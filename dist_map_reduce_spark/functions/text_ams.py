@@ -60,7 +60,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -196,7 +196,6 @@ def text_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     '__merged__' corpus row whose counters are the element-wise SUM
     of the source grids — the AMS merge certified in-plan, graded
     against the exact second moment both per source and merged."""
-    docs = load_table(spark, sf_dir, "documents")
     # NO pre-explode repartition, deliberately (the curation_ext /
     # text_winnow precedent was tested and did NOT reproduce here):
     # profiling at sf0.1 shows the wall is per-stage fixed overhead,
@@ -206,28 +205,25 @@ def text_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the one corpus-scale subtree; persisted because the R sketch
     # branches, the per-source exact arm and the merged exact arm all
     # hang off it — vocabulary-scale rows, so the cache is tiny
-    counts = persist_tracked(
-        docs.select(
+    counts = get_or_build(
+        spark,
+        "ams_source_word_counts",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents")
+        .select(
             F.col("source").alias("g"),
             F.explode(F.split("text", "[^a-zA-Z]+")).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("g", "word")
         .agg(F.count("*").alias("cnt")),
-        "ams_source_word_counts",
-        sf_dir,
     )
     # the counter grid feeds TWO consumers (the merged element-wise
     # sum and the per-source estimate rows) — unslotted, each re-ran
     # the R-way fan-out + grid aggregate over the vocabulary-scale
     # counts; the grid itself is |sources|·R·B cells, sketch-sized
-    from dist_map_reduce_spark.caching import get_or_build
-
     grid = get_or_build(
-        "ams_counter_grid",
-        sf_dir,
-        lambda: _counter_grid(counts),
-        session=spark,
+        spark, "ams_counter_grid", sf_dir, lambda: _counter_grid(counts)
     )
     merged = (
         grid.groupBy("r", "bucket")

@@ -44,7 +44,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -137,12 +137,13 @@ def text_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # eval side: benchmark-sized; persisted because the scalar, the
     # bit table and the exact-membership join all hang off it
-    mem = persist_tracked(
-        docs.filter(F.col("source") == _EVAL_SOURCE)
-        .select(F.md5(F.col("text").cast("binary")).alias("fp"))
-        .distinct(),
+    mem = get_or_build(
+        spark,
         "bloom_mem_fps",
         sf_dir,
+        lambda: docs.filter(F.col("source") == _EVAL_SOURCE)
+        .select(F.md5(F.col("text").cast("binary")).alias("fp"))
+        .distinct(),
     )
     # greatest(,1) mirrors the oracle: with an empty eval split the
     # modulus stays legal and the filter simply matches nothing
@@ -177,8 +178,11 @@ def text_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # train side: one corpus scan projected to (doc_id, fp),
     # persisted for the bit fan-out (3 branches) + the final joins
-    train = persist_tracked(
-        docs.filter(F.col("source") != _EVAL_SOURCE)
+    train = get_or_build(
+        spark,
+        "bloom_train_fps",
+        sf_dir,
+        lambda: docs.filter(F.col("source") != _EVAL_SOURCE)
         .crossJoin(F.broadcast(plant))
         .select(
             "doc_id",
@@ -190,8 +194,6 @@ def text_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("binary")
             ).alias("fp"),
         ),
-        "bloom_train_fps",
-        sf_dir,
     )
     # fp rides along the bit fan-out (functionally dependent on
     # doc_id), so the per-doc aggregate keeps it and the exact-

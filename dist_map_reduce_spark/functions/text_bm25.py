@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -120,16 +120,18 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents for each of the 8 deterministic probe queries (the
     probe document itself excluded from its own candidates)."""
     docs = load_table(spark, sf_dir, "documents")
-    tokens = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
     # tf feeds THREE consumers (df margins, probe-term selection, the
     # candidate join) — persist the corpus-scale explode+agg once
     # (r16, guide §2.4; the dedup-family shingle-slot precedent)
-    tf = persist_tracked(
-        tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf")),
+    tf = get_or_build(
+        spark,
         "bm25_tf",
         sf_dir,
+        lambda: docs.select(
+            "doc_id", F.explode(F.split("text", " ")).alias("word")
+        )
+        .groupBy("doc_id", "word")
+        .agg(F.count("*").alias("tf")),
     )
     df = tf.groupBy("word").agg(F.count("*").alias("df"))
     lens = docs.select(

@@ -44,6 +44,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.text_bpe import (
     _SQL_PATTERN,
@@ -85,22 +86,13 @@ def _learn(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
     Returns ``(merges, vocab_enc)``: the (merge_rank, pa, pb,
     pair_count) table and the encoded vocabulary (tok, c, syms,
-    n_syms).
-    Both are persist_tracked — the loop runs Spark jobs at
-    plan-construction time (each round is checkpointed so plans stay
-    shallow and nothing is recomputed), so output-level persist alone
-    could not skip the rebuild on a second query."""
-    from dist_map_reduce_spark import caching
-
-    hit_m = caching.peek("bpe_merges", sf_dir, session=spark)
-    hit_v = caching.peek("bpe_vocab_enc", sf_dir, session=spark)
-    if hit_m is not None and hit_v is not None:
-        return hit_m, hit_v
-
-    merges, vocab_enc = _learn_from(load_table(spark, sf_dir, "documents"))
-    return (
-        caching.persist_tracked(merges, "bpe_merges", sf_dir),
-        caching.persist_tracked(vocab_enc, "bpe_vocab_enc", sf_dir),
+    n_syms), both slotted — the loop runs Spark jobs while it builds
+    (each round is checkpointed so plans stay shallow)."""
+    return get_or_build(
+        spark,
+        ("bpe_merges", "bpe_vocab_enc"),
+        sf_dir,
+        lambda: _learn_from(load_table(spark, sf_dir, "documents")),
     )
 
 

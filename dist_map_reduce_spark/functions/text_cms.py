@@ -45,7 +45,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -116,20 +116,19 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted rows of W=64-bucket cell sums, so ``n_cms >= n_exact``
     always and ``overcount`` measures the sketch's collision error
     on exactly the words a heavy-hitter report would serve."""
-    docs = load_table(spark, sf_dir, "documents")
     # the one corpus-scale subtree; persisted because the CMS grid
     # and the estimate join both hang off it (4 union branches × 2
     # consumers would otherwise rescan the corpus 8×) — vocabulary-
     # scale rows, so the cache is tiny
-    counts = persist_tracked(
-        docs.select(
-            F.explode(F.split("text", "[^a-zA-Z]+")).alias("word")
-        )
+    counts = get_or_build(
+        spark,
+        "cms_word_counts",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents")
+        .select(F.explode(F.split("text", "[^a-zA-Z]+")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("n_exact")),
-        "cms_word_counts",
-        sf_dir,
     )
     # seed fan-out as a union of narrow selects (the banding idiom;
     # no Generate), one branch per CMS hash row

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -75,16 +75,17 @@ def dup_ngram_stats(
     gram_key = (
         F.xxhash64("gram").alias("gram") if hashed else F.col("gram")
     )
-    gd = (
-        doc_ngrams(docs, n)
+    # both consumers (per-gram doc counts and the join-back) read the
+    # persisted table, so the corpus explodes once
+    gd = get_or_build(
+        docs.sparkSession,
+        "dupngram_gd",
+        cache_key,
+        lambda: doc_ngrams(docs, n)
         .select("doc_id", gram_key)
         .groupBy("doc_id", "gram")
-        .agg(F.count("*").alias("c"))
+        .agg(F.count("*").alias("c")),
     )
-    if cache_key is not None:
-        # both consumers (per-gram doc counts and the join-back) read
-        # the persisted table, so the corpus explodes once
-        gd = persist_tracked(gd, "dupngram_gd", cache_key)
     gs = gd.groupBy("gram").agg(F.count("*").alias("n_docs_with"))
     per_doc = (
         gd.join(gs, "gram")

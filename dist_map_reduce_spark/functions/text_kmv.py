@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import get_or_build, persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.dedup_common import (
     _shingle_sql,
@@ -83,13 +83,17 @@ def source_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree, persisted under the slot BOTH kmv and theta read
     (source-as-doc_id aliasing reuses the dedup family's proven
     shingle expression unchanged)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return persist_tracked(
-        shingles(docs.select(F.col("source").alias("doc_id"), "text"))
-        .distinct()
-        .select(F.col("doc_id").alias("source"), "shingle"),
+    return get_or_build(
+        spark,
         "kmv_source_shingles",
         sf_dir,
+        lambda: shingles(
+            load_table(spark, sf_dir, "documents").select(
+                F.col("source").alias("doc_id"), "text"
+            )
+        )
+        .distinct()
+        .select(F.col("doc_id").alias("source"), "shingle"),
     )
 
 
@@ -114,22 +118,18 @@ def signatures(ss: DataFrame, key: str | None = None) -> DataFrame:
             .select("source", "h")
         )
 
-    if key is None:
-        return build()
-    return get_or_build("kmv_signatures", key, build, session=ss.sparkSession)
+    return get_or_build(ss.sparkSession, "kmv_signatures", key, build)
 
 
 def source_sizes(ss: DataFrame, key: str | None = None) -> DataFrame:
     """(source, n): distinct-shingle count per source — consumed by
     both sides of the pair grid per query; persisted (≤ |sources|
     rows) when ``key`` is given."""
-    if key is None:
-        return ss.groupBy("source").agg(F.count("*").alias("n"))
     return get_or_build(
+        ss.sparkSession,
         "kmv_source_sizes",
         key,
         lambda: ss.groupBy("source").agg(F.count("*").alias("n")),
-        session=ss.sparkSession,
     )
 
 
@@ -168,11 +168,7 @@ def exact_intersections(ss: DataFrame, key: str | None = None) -> DataFrame:
             .agg(F.count("*").alias("n_inter"))
         )
 
-    if key is None:
-        return build()
-    return get_or_build(
-        "kmv_exact_inter", key, build, session=ss.sparkSession
-    )
+    return get_or_build(ss.sparkSession, "kmv_exact_inter", key, build)
 
 
 def merged_signature_flags(

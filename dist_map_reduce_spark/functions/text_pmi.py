@@ -28,7 +28,7 @@ exploded adjacent-pair stream into a (w1, w2) groupBy count
 (wordcount-shaped, map-side partial agg). Everything downstream
 (margins, total, the final joins) runs over the BIGRAM-VOCABULARY
 table, which is Zipf-bounded far below corpus scale; it holds one
-``persist_tracked`` slot with four consumers (pairs, two margins,
+``get_or_build`` slot with four consumers (pairs, two margins,
 total). The margin joins are vocabulary-keyed shuffles (broadcast
 when small — AQE decides); the total rides as the sanctioned 1-row
 crossJoin scalar. The pair stream uses ``explode_outer`` + post-hoc
@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -89,19 +89,19 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, n_ab): adjacent-bigram counts over whitespace
     tokens — the one corpus-scale aggregation; vocabulary-scale
     output, persisted (four downstream consumers)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.split("text", " ").alias("t")
-    )
-    pairs = docs.select(
-        F.explode_outer(F.expr(_PAIRS)).alias("p")
-    ).filter(F.col("p").isNotNull())
-    return persist_tracked(
-        pairs.groupBy(
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.split("text", " ").alias("t")
+        )
+        pairs = docs.select(
+            F.explode_outer(F.expr(_PAIRS)).alias("p")
+        ).filter(F.col("p").isNotNull())
+        return pairs.groupBy(
             F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
-        ).agg(F.count("*").cast("bigint").alias("n_ab")),
-        "text_pmi_bigram_counts",
-        sf_dir,
-    )
+        ).agg(F.count("*").cast("bigint").alias("n_ab"))
+
+    return get_or_build(spark, "text_pmi_bigram_counts", sf_dir, build)
 
 
 @query("text_pmi_bigrams", oracle=_ORACLE)

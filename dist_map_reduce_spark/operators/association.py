@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -109,23 +109,24 @@ def brand_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     would need a wider mask type — see module docstring)."""
     from pyspark.sql.window import Window
 
-    brands = (
-        load_table(spark, sf_dir, "part").select("p_brand").distinct()
-    )
     # four consumers per rules build (compositions, margin, both pair
     # sides) each re-ran the part scan + distinct exchange + the
     # single-partition rank window — persist the ≤63-row dimension
     # once instead (r16: 4 duplicate subtrees out of the plan's 88
     # Exchanges; guide §2.4)
-    return persist_tracked(
-        brands.select(
+    return get_or_build(
+        spark,
+        "basket_brand_dim",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "part")
+        .select("p_brand")
+        .distinct()
+        .select(
             F.col("p_brand").alias("brand"),
             (
                 F.row_number().over(Window.orderBy("p_brand")) - 1
             ).alias("idx"),
         ),
-        "basket_brand_dim",
-        sf_dir,
     )
 
 
@@ -135,30 +136,30 @@ def compositions(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashAggregates: orderkey → bit_or mask, mask → count. Every
     margin and pair count derives from this composition-scale table
     (one persist slot, three consumers)."""
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand"
-    )
-    dim = brand_dim(spark, sf_dir)
-    items = (
-        # part scales with sf — no broadcast hint (AQE picks
-        # broadcast at tested scales, shuffle-hash at extreme part
-        # cardinality; the catalog.py bounded-dims-only rule)
-        lineitem.join(part, lineitem.l_partkey == part.p_partkey)
-        .join(F.broadcast(dim), part.p_brand == dim.brand)
-        .select(
-            F.col("l_orderkey").alias("o"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), idx)").alias("bit"),
+
+    def build() -> DataFrame:
+        lineitem = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey"
         )
-    )
-    masks = items.groupBy("o").agg(F.bit_or("bit").alias("mask"))
-    return persist_tracked(
-        masks.groupBy("mask").agg(F.count("*").alias("cnt")),
-        "basket_brand_compositions",
-        sf_dir,
-    )
+        part = load_table(spark, sf_dir, "part").select(
+            "p_partkey", "p_brand"
+        )
+        dim = brand_dim(spark, sf_dir)
+        items = (
+            # part scales with sf — no broadcast hint (AQE picks
+            # broadcast at tested scales, shuffle-hash at extreme part
+            # cardinality; the catalog.py bounded-dims-only rule)
+            lineitem.join(part, lineitem.l_partkey == part.p_partkey)
+            .join(F.broadcast(dim), part.p_brand == dim.brand)
+            .select(
+                F.col("l_orderkey").alias("o"),
+                F.expr("shiftleft(CAST(1 AS BIGINT), idx)").alias("bit"),
+            )
+        )
+        masks = items.groupBy("o").agg(F.bit_or("bit").alias("mask"))
+        return masks.groupBy("mask").agg(F.count("*").alias("cnt"))
+
+    return get_or_build(spark, "basket_brand_compositions", sf_dir, build)
 
 
 _BITS = (
@@ -178,16 +179,15 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only, weighted by basket count
     # consumed twice (the ante and cons margin arms) — persist the
     # ≤63-row margin so the composition-scale explode+agg runs once
-    margin = persist_tracked(
-        comps.select(
-            F.explode(F.expr(_BITS)).alias("idx"), "cnt"
-        )
+    margin = get_or_build(
+        spark,
+        "basket_brand_margin",
+        sf_dir,
+        lambda: comps.select(F.explode(F.expr(_BITS)).alias("idx"), "cnt")
         .groupBy("idx")
         .agg(F.sum("cnt").cast("bigint").alias("n_brand"))
         .join(F.broadcast(dim), "idx")
         .select("brand", "n_brand"),
-        "basket_brand_margin",
-        sf_dir,
     )
     # materialize the bits array ONCE per composition row: inlining
     # _BITS into the nested transform re-evaluates the 63-element
@@ -205,8 +205,11 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed twice (both arms of the directed union) — persist the
     # ≤ C(63,2)-row undirected pair table so the composition-scale
     # pair explode runs once per corpus
-    pairs = persist_tracked(
-        comps.select(F.expr(_BITS).alias("bits"), "cnt")
+    pairs = get_or_build(
+        spark,
+        "basket_brand_pairs",
+        sf_dir,
+        lambda: comps.select(F.expr(_BITS).alias("bits"), "cnt")
         .select(F.explode(pair_expr).alias("p"), "cnt")
         .groupBy(F.col("p.ia").alias("ia"), F.col("p.ib").alias("ib"))
         .agg(F.sum("cnt").cast("bigint").alias("n_both"))
@@ -221,8 +224,6 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ib",
         )
         .select("brand_a", "brand_b", "n_both"),
-        "basket_brand_pairs",
-        sf_dir,
     )
     directed = pairs.select(
         F.col("brand_a").alias("ante"),

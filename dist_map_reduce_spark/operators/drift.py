@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -152,56 +152,56 @@ def drift_psi_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-width price buckets (base-table bounds) plus the bucket=-1
     total row whose psi is THE drift scalar — base orders vs the
     cdc_merge-applied version, Laplace-smoothed, round-after-ln."""
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    cdc = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("cdc:"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % _N_CDC_BUCKETS
-    )
-    b = base.withColumn("cdc", cdc)
-    merged = (
-        b.filter(F.col("cdc") != 2)
-        .select(
-            F.when(
-                F.col("cdc").isin(0, 1), F.col("o_totalprice") + F.lit(100.0)
-            )
-            .otherwise(F.col("o_totalprice"))
-            .alias("o_totalprice")
+
+    def build() -> DataFrame:
+        base = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_totalprice"
         )
-        .unionAll(b.filter(F.col("cdc") == 3).select("o_totalprice"))
-    )
-    bounds = base.agg(
-        F.min(_cents()).alias("lo"), F.max(_cents()).alias("hi")
-    )
-    bh = _hist(base, bounds, "n_base")
-    mh = _hist(merged, bounds, "n_merged")
+        cdc = (
+            F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat(
+                            F.lit("cdc:"), F.col("o_orderkey").cast("string")
+                        )
+                    ),
+                    1,
+                    8,
+                ),
+                16,
+                10,
+            ).cast("bigint")
+            % _N_CDC_BUCKETS
+        )
+        b = base.withColumn("cdc", cdc)
+        merged = (
+            b.filter(F.col("cdc") != 2)
+            .select(
+                F.when(
+                    F.col("cdc").isin(0, 1), F.col("o_totalprice") + F.lit(100.0)
+                )
+                .otherwise(F.col("o_totalprice"))
+                .alias("o_totalprice")
+            )
+            .unionAll(b.filter(F.col("cdc") == 3).select("o_totalprice"))
+        )
+        bounds = base.agg(
+            F.min(_cents()).alias("lo"), F.max(_cents()).alias("hi")
+        )
+        bh = _hist(base, bounds, "n_base")
+        mh = _hist(merged, bounds, "n_merged")
+        return bh.join(mh, "bucket", "full_outer").select(
+            "bucket",
+            F.coalesce("n_base", F.lit(0)).alias("n_base"),
+            F.coalesce("n_merged", F.lit(0)).alias("n_merged"),
+        )
+
     # ONE materialization of the joined 10-row histogram table: the
     # totals, the per-bucket arm and the total arm all hang off it —
     # without the persist, Catalyst recomputes the corpus-scale hist
     # subtrees per consumer (~8 scans; measured 25 s -> ~5 s at the
     # 100x probe). 10 rows, so the cache is free.
-    joined = persist_tracked(
-        bh.join(mh, "bucket", "full_outer").select(
-            "bucket",
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_merged", F.lit(0)).alias("n_merged"),
-        ),
-        "drift_psi_cells",
-        sf_dir,
-    )
+    joined = get_or_build(spark, "drift_psi_cells", sf_dir, build)
     tot = joined.agg(
         F.sum("n_base").alias("nb"), F.sum("n_merged").alias("nm")
     )

@@ -29,7 +29,7 @@ only step k's rows are read; the step subsets are disjoint so the
 whole funnel reads ≈ one corpus pass split across steps) and every
 frontier is a USER-scale (user_id, t) table that only shrinks with
 k. Frontiers are shared by two consumers (next step's join + the
-count union), so each holds a bounded ``persist_tracked`` slot —
+count union), so each holds a bounded ``get_or_build`` slot —
 without it the count branch re-derives the whole chain per step
 (O(K²) scans). The count stage is K single-row global aggregates
 unioned (guaranteeing a row per step even for an empty cohort — a
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -155,12 +155,13 @@ def funnel_frontiers(
         "user_id", "ts", "event_type"
     )
     frontiers = [
-        persist_tracked(
-            events.filter(F.col("event_type") == STEPS[0])
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t")),
+        get_or_build(
+            spark,
             "funnel_frontier_1",
             sf_dir,
+            lambda: events.filter(F.col("event_type") == STEPS[0])
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("t")),
         )
     ]
     for k, step in enumerate(STEPS[1:], start=2):
@@ -168,8 +169,11 @@ def funnel_frontiers(
             F.col("user_id").alias("p_user"), F.col("t").alias("p_t")
         )
         frontiers.append(
-            persist_tracked(
-                events.filter(F.col("event_type") == step)
+            get_or_build(
+                spark,
+                f"funnel_frontier_{k}",
+                sf_dir,
+                lambda: events.filter(F.col("event_type") == step)
                 .join(
                     prev,
                     (F.col("user_id") == F.col("p_user"))
@@ -177,8 +181,6 @@ def funnel_frontiers(
                 )
                 .groupBy("user_id")
                 .agg(F.min("ts").alias("t")),
-                f"funnel_frontier_{k}",
-                sf_dir,
             )
         )
     return frontiers

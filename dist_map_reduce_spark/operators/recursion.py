@@ -46,6 +46,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
@@ -160,14 +161,12 @@ def recursive_order_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-paid the parquet scan; a persisted (key, price) projection
     # turns those into in-memory scans (r16, guide §2.4/§5 — reuse
     # across ~36 reads easily clears the caching bar)
-    from dist_map_reduce_spark.caching import get_or_build
-
     get_or_build(
+        spark,
         "recursion_orders_narrow",
         sf_dir,
         lambda: load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         ),
-        session=spark,
     ).createOrReplaceTempView(_VIEW)
     return spark.sql(_lineage_sql(_VIEW, "DIV", hint=hint))

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -106,11 +106,14 @@ def rfm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_custkey, r_val, f_val, m_cents) — per-customer exact
     integer R/F/M inputs; customer-scale, persisted (cutpoint
     aggregate + scoring both consume)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    return persist_tracked(
-        orders.groupBy("o_custkey").agg(
+    return get_or_build(
+        spark,
+        "rfm_customer_rollup",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "orders")
+        .select("o_custkey", "o_orderdate", "o_totalprice")
+        .groupBy("o_custkey")
+        .agg(
             F.datediff(
                 F.to_date(F.max("o_orderdate")), F.lit("1970-01-01")
             )
@@ -123,8 +126,6 @@ def rfm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("m_cents"),
         ),
-        "rfm_customer_rollup",
-        sf_dir,
     )
 
 

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -98,10 +99,9 @@ def type_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r17): the dim feeds the steps join plus one decode join per
     path position — 1 + MAX_STEPS = 13 plan branches, each of which
     otherwise re-runs the corpus scan + distinct (audited: 34
-    exchanges unslotted → 10 slotted at sf0.1)."""
-    from dist_map_reduce_spark.caching import get_or_build
-
+    exchanges unslotted → 14 slotted at sf0.1)."""
     return get_or_build(
+        spark,
         "session_path_type_dim",
         sf_dir,
         lambda: (
@@ -116,7 +116,6 @@ def type_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("idx"),
             )
         ),
-        session=spark,
     )
 
 

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -91,39 +91,38 @@ def contingency_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete (seg, prio) grid with exact observed counts and
     margins — zero cells materialized via the constant-key grid
     join. ≤25 rows; persisted (cell output + total both consume)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    obs = (
-        orders.join(
-            customer, orders.o_custkey == customer.c_custkey
+
+    def build() -> DataFrame:
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_custkey", "o_orderpriority"
         )
-        .groupBy(
-            F.col("c_mktsegment").alias("seg"),
-            F.col("o_orderpriority").alias("prio"),
+        customer = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment"
         )
-        .agg(F.count("*").cast("bigint").alias("n_obs"))
-    )
-    segm = obs.groupBy("seg").agg(
-        F.sum("n_obs").cast("bigint").alias("n_seg")
-    )
-    priom = obs.groupBy("prio").agg(
-        F.sum("n_obs").cast("bigint").alias("n_prio")
-    )
-    grid = segm.withColumn("k", F.lit(1)).join(
-        priom.withColumn("k", F.lit(1)), "k"
-    )
-    cells = (
-        grid.join(obs, ["seg", "prio"], "left")
-        .withColumn("n_obs", F.coalesce("n_obs", F.lit(0).cast("bigint")))
-        .select("seg", "prio", "n_obs", "n_seg", "n_prio")
-    )
-    return persist_tracked(
-        cells, "chisq_contingency_cells", sf_dir
-    )
+        obs = (
+            orders.join(customer, orders.o_custkey == customer.c_custkey)
+            .groupBy(
+                F.col("c_mktsegment").alias("seg"),
+                F.col("o_orderpriority").alias("prio"),
+            )
+            .agg(F.count("*").cast("bigint").alias("n_obs"))
+        )
+        segm = obs.groupBy("seg").agg(
+            F.sum("n_obs").cast("bigint").alias("n_seg")
+        )
+        priom = obs.groupBy("prio").agg(
+            F.sum("n_obs").cast("bigint").alias("n_prio")
+        )
+        grid = segm.withColumn("k", F.lit(1)).join(
+            priom.withColumn("k", F.lit(1)), "k"
+        )
+        return (
+            grid.join(obs, ["seg", "prio"], "left")
+            .withColumn("n_obs", F.coalesce("n_obs", F.lit(0).cast("bigint")))
+            .select("seg", "prio", "n_obs", "n_seg", "n_prio")
+        )
+
+    return get_or_build(spark, "chisq_contingency_cells", sf_dir, build)
 
 
 _MI_ORACLE = """

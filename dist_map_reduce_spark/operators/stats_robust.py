@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 
@@ -53,8 +53,7 @@ def mad_outliers(
     fact passes (median build, deviation scan) plus group-sized work.
     """
     med = df.groupBy(*by).agg(F.expr(f"percentile({value}, 0.5)").alias("med"))
-    if cache_key is not None:
-        med = persist_tracked(med, "mad_group_medians", cache_key)
+    med = get_or_build(df.sparkSession, "mad_group_medians", cache_key, lambda: med)
     dev = df.join(F.broadcast(med), by).withColumn(
         "adev", F.abs(F.col(value) - F.col("med"))
     )

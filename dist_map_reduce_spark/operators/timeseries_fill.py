@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.caching import persist_tracked
+from dist_map_reduce_spark.caching import get_or_build
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
@@ -97,18 +97,19 @@ def _filled_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-joined with the observed bucket aggregates (null n_obs/s in
     gap buckets). ONE scan of events — the spine endpoints derive
     from the bucket aggregate itself."""
-    ev = load_table(spark, sf_dir, "events")
     # persisted: the bucket aggregate feeds BOTH the spine-endpoint
     # derivation and the fill join — without the persist Spark
     # recomputes the subtree (and re-scans events) per consumer. It
     # is grid-sized (O(buckets × series)), the smallest thing in the
     # plan, so caching it is what makes the events scan happen once.
-    obs = persist_tracked(
-        ev.groupBy("event_type", F.window("ts", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_obs"), F.expr(sum_money("value", "s")))
-        .select("event_type", F.col("w.start").alias("bucket"), "n_obs", "s"),
+    obs = get_or_build(
+        spark,
         "resample_obs_5m",
         sf_dir,
+        lambda: load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.window("ts", "5 minutes").alias("w"))
+        .agg(F.count("*").alias("n_obs"), F.expr(sum_money("value", "s")))
+        .select("event_type", F.col("w.start").alias("bucket"), "n_obs", "s"),
     )
     # Per-series spine endpoints come from the OBS aggregate, not a
     # second scan of events: bucket is already epoch-aligned, so

@@ -256,7 +256,7 @@ _SINK_SEQ = 0
 # one live memory-sink table per pipeline name: repeated invocations
 # in a long-lived session drop the previous run's sink instead of
 # accumulating tables in the driver (same discipline as
-# caching.persist_tracked)
+# the caching slots)
 _LAST_SINK: dict[str, str] = {}
 
 

@@ -31,21 +31,40 @@ def test_peek_rejects_foreign_session(spark):
         caching.clear()
 
 
-def test_persist_tracked_reuses_only_same_session(spark):
-    df = spark.range(4)
-    got = caching.persist_tracked(df, "t_reuse_slot", "k")
+def _no_build():
+    raise AssertionError("build called on a full hit")
+
+
+def test_get_or_build_reuses_only_same_session(spark):
     try:
-        assert got.sparkSession is spark
-        # same key + a frame from the same session: cached hit
-        again = caching.persist_tracked(spark.range(4), "t_reuse_slot", "k")
-        assert again is got
-        # a frame built on another session must NOT get the entry
+        got = caching.get_or_build(spark, "t_reuse", "k", lambda: spark.range(4))
+        # same session + same key: the stored entry, build not called
+        assert caching.get_or_build(spark, "t_reuse", "k", _no_build) is got
+        # a second live session misses and gets its own entry
         other = spark.newSession()
-        theirs = caching.persist_tracked(
-            other.range(4), "t_reuse_slot", "k"
-        )
-        assert theirs is not got
-        assert theirs.sparkSession is other
+        theirs = caching.get_or_build(other, "t_reuse", "k", lambda: other.range(4))
+        assert theirs is not got and theirs.sparkSession is other
+        assert caching.peek("t_reuse", "k", session=other) is theirs
+    finally:
+        caching.clear()
+
+
+def test_tuple_slot_rebuilds_every_member_on_partial_miss(spark):
+    slots, built = ("t_pair_a", "t_pair_b"), []
+
+    def build():
+        built.append(1)
+        return spark.range(2), spark.range(3)
+
+    try:
+        a, b = caching.get_or_build(spark, slots, "k", build)
+        hit = caching.get_or_build(spark, slots, "k", _no_build)
+        assert hit[0] is a and hit[1] is b
+        caching._discard(caching._SLOTS.pop("t_pair_b")[1])  # evict one
+        a2, b2 = caching.get_or_build(spark, slots, "k", build)
+        assert len(built) == 2 and a2 is not a and b2 is not b
+        assert (a2.count(), b2.count()) == (2, 3)
+        assert caching.peek("t_pair_b", "k", session=spark) is b2
     finally:
         caching.clear()
 

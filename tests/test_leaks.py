@@ -1,16 +1,21 @@
 """Cache-boundedness audit: repeatedly invoking the queries that
 persist intermediates (or run jobs at construction time) must not
-grow the set of live cached RDDs or registered sink tables. The
-mechanisms under test: the one-live-entry-per-slot discipline
-(caching.persist_tracked/peek), the one-sink-per-pipeline registry
-(pipelines._LAST_SINK), and the eager localCheckpoint snapshots in
-the iterative loops (clustering/graph), whose RDDs the context
-cleaner releases once the snapshot DataFrame is garbage-collected.
+grow the set of live cached RDDs or registered sink tables, and an
+iterative loop that fails part-way must not strand its edge cache.
+The mechanisms under test: the one-live-entry-per-slot discipline
+(caching.get_or_build), the one-sink-per-pipeline registry
+(pipelines._LAST_SINK), the eager localCheckpoint snapshots in the
+iterative loops (clustering/graph), whose RDDs the context cleaner
+releases once the snapshot DataFrame is garbage-collected, and the
+loops' ``finally`` release of their persisted edge sets.
 """
 
 from __future__ import annotations
 
+import pytest
+
 from dist_map_reduce_spark import registry
+from dist_map_reduce_spark.functions import clustering, graph
 from tests.conftest import SF_SMOKE
 
 registry.load_all()
@@ -50,3 +55,22 @@ def test_repeat_streaming_keeps_one_sink_table(spark):
         if t.name.startswith("streaming_event_counts")
     ]
     assert len(sinks) == 1, sinks
+
+
+@pytest.mark.parametrize(
+    "module, loop",
+    [(clustering, "connected_components"), (graph, "pagerank")],
+)
+def test_failed_loop_releases_edge_cache(spark, monkeypatch, module, loop):
+    pairs = registry.QUERIES["minhash_band_candidates"](spark, SF_SMOKE)
+    pairs.count()
+    baseline = _n_cached(spark)
+
+    def fail(df):
+        df.count()  # the round runs (materializing the edge cache) ...
+        raise RuntimeError("checkpoint failed")  # ... then fails
+
+    monkeypatch.setattr(module, "iter_checkpoint", fail)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        getattr(module, loop)(pairs)
+    assert _n_cached(spark) == baseline

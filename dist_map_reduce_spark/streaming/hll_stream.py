@@ -60,7 +60,11 @@ from dist_map_reduce_spark.operators.hll_native import (
 )
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.scratch import scratch_path
-from dist_map_reduce_spark.streaming.pipelines import FileSource
+from dist_map_reduce_spark.streaming.pipelines import (
+    FileSource,
+    run_available_now,
+    stage_chunks,
+)
 
 N_CHUNKS = 4  # staged replay chunks = real micro-batches
 
@@ -137,11 +141,11 @@ def _estimate_df(spark: SparkSession, registers: dict[int, int]) -> DataFrame:
 
 
 def stream_hll_registers(
-    spark: SparkSession, sf_dir: str, staged: str, n_chunks: int
+    spark: SparkSession, sf_dir: str, staged: str
 ) -> tuple[dict[int, int], int]:
-    """Replay ``staged`` (n_chunks parquet files) one file per
-    micro-batch, folding each batch into a 64-register max-merge.
-    Returns (registers, n_batches)."""
+    """Replay ``staged`` one parquet file per micro-batch, folding
+    each batch into a 64-register max-merge. Returns (registers,
+    n_batches)."""
     stream = FileSource(path=staged, max_files_per_trigger=1).read(
         spark, sf_dir
     )
@@ -183,21 +187,12 @@ def stream_hll_registers(
                 registers[b] = r
         batches[0] += 1
 
-    from dist_map_reduce_spark.streaming.pipelines import (
-        stream_shuffle_scope,
+    run_available_now(
+        spark,
+        stream.writeStream.outputMode("update")
+        .foreachBatch(fold_batch)
+        .option("checkpointLocation", os.path.join(staged, "_hll_ckpt")),
     )
-
-    with stream_shuffle_scope(spark):
-        q = (
-            stream.writeStream.outputMode("update")
-            .foreachBatch(fold_batch)
-            .option(
-                "checkpointLocation", os.path.join(staged, "_hll_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return registers, batches[0]
 
 
@@ -208,19 +203,12 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers across 4 real replay batches, graded against the exact
     distinct count; the oracle rebuilds the registers in one batch
     pass, certifying merge == one-pass (the mergeability contract)."""
-    import shutil
-
-    # fresh replay every run: a surviving checkpoint would mark the
-    # chunks committed and the stream would fold zero batches
-    staged = scratch_path(sf_dir, "events_hll_chunks")
-    shutil.rmtree(staged, ignore_errors=True)
-    load_table(spark, sf_dir, "events").select("user_id").repartition(
-        N_CHUNKS
-    ).write.mode("overwrite").parquet(staged)
-
-    registers, n_batches = stream_hll_registers(
-        spark, sf_dir, staged, N_CHUNKS
+    staged = stage_chunks(
+        load_table(spark, sf_dir, "events").select("user_id"),
+        scratch_path(sf_dir, "events_hll_chunks"),
+        N_CHUNKS,
     )
+    registers, n_batches = stream_hll_registers(spark, sf_dir, staged)
     est = _estimate_df(spark, registers)
     exact = (
         load_table(spark, sf_dir, "events")

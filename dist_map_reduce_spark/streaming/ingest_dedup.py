@@ -23,9 +23,8 @@ ingestion job that, per micro-batch of arrivals:
      (or the post-stream final one).
 
 All four steps are plain batch DataFrame ops inside ``foreachBatch``
-(the ``streaming_foreachbatch_upsert`` pattern,
-streaming/pipelines.py:681) — no streaming aggregation modes, no
-driver-side state, and every join is an equi-join.
+— no streaming aggregation modes, no driver-side state, and every
+join is an equi-join.
 
 Row-wise banding: signatures historically came from a per-doc
 groupBy MIN over exploded shingles — one shuffle whose only purpose
@@ -91,6 +90,7 @@ trap — see _accept_batch).
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import time
@@ -100,13 +100,39 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.dedup_common import (
+    _minhash_bands_sql,
     band_md5,
     minhash_sig_rowwise,
     N_BANDS,
 )
 from dist_map_reduce_spark.scratch import scratch_path
+from dist_map_reduce_spark.streaming.pipelines import run_available_now
 
 N_INGEST_BATCHES = 3  # arrival micro-batches in the replay harness
+_N_SPLIT = N_INGEST_BATCHES + 1
+
+# The CTE prefix every ingest oracle starts with: the md5-bucket
+# split (bucket 0 = corpus, 1..3 = arrival waves; mirrors
+# split_corpus_arrivals), the earliest-wave min-doc_id keeper of each
+# content fingerprint, and every document's minhash bands.
+ORACLE_CTES = f"""
+    WITH d AS (
+      SELECT doc_id, text,
+             ('0x' || substring(md5('ingest:' || doc_id::VARCHAR), 1, 8))
+               ::BIGINT % {_N_SPLIT} AS bucket
+      FROM documents
+    ),
+    arr AS (
+      SELECT doc_id, text, bucket, md5(text) AS fp
+      FROM d WHERE bucket > 0
+    ),
+    first_wave AS (SELECT fp, min(bucket) AS w FROM arr GROUP BY 1),
+    keeper AS (
+      SELECT arr.fp, min(arr.doc_id) AS doc_id, fw.w
+      FROM arr JOIN first_wave fw ON arr.fp = fw.fp AND arr.bucket = fw.w
+      GROUP BY arr.fp, fw.w
+    ),
+    all_bands AS ({_minhash_bands_sql()}),"""
 
 REPLAY_MARKER = "_REPLAY_DONE"
 
@@ -265,6 +291,33 @@ def ensure_shared_replay(
             shutil.rmtree(build, ignore_errors=True)
             return work
         return build
+
+
+def private_index_copy(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Run (or reuse) the shared replay and copy its band index into
+    a private work dir; return that dir (the copy is its
+    ``band_index``). The compaction queries mutate the index, and the
+    shared artifact is read-only by contract — copying also makes
+    every call compact the pristine post-replay index, not a previous
+    compaction's output.
+
+    The work dir is pid-suffixed (ADVICE r13): concurrent
+    same-version processes must not rmtree each other's copy
+    mid-read. Normal exits remove their own copy at exit (the
+    caller's plan is lazy, so deletion must wait until the process is
+    done reading); a crashed process's ``.build-<pid>`` copy is
+    reaped by ``_sweep_dead_leftovers`` on the next call."""
+    shared = ensure_shared_replay(spark, sf_dir)
+    base = scratch_path(sf_dir, name)
+    _sweep_dead_leftovers(base)
+    shutil.rmtree(base, ignore_errors=True)  # pre-r14 un-suffixed dir
+    work = f"{base}.build-{os.getpid()}"
+    shutil.rmtree(work, ignore_errors=True)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    shutil.copytree(
+        os.path.join(shared, "band_index"), os.path.join(work, "band_index")
+    )
+    return work
 
 
 def minhash_bands_rowwise(docs: DataFrame) -> DataFrame:
@@ -558,18 +611,15 @@ def run_ingest_dedup(
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
         )
-        q = (
+        run_available_now(
+            spark,
             stream.writeStream.foreachBatch(
                 lambda b, _id: _accept_batch(
                     b, index_dir, target, batch_stage, marker_dir,
                     catchup_stage,
                 )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            ).option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
         # final catch-up: index the LAST delivery's bands so the
         # index covers the whole accepted corpus — the state the next
         # ingestion session (and the compaction query) starts from

@@ -37,36 +37,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dist_map_reduce_spark.functions.dedup_common import _minhash_bands_sql
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.streaming.ingest_dedup import (
-    N_INGEST_BATCHES,
+    ORACLE_CTES,
     ensure_shared_replay,
 )
-
-_N_SPLIT = N_INGEST_BATCHES + 1
 
 
 @query(
     "streaming_ingest_dedup",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, text,
-             ('0x' || substring(md5('ingest:' || doc_id::VARCHAR), 1, 8))
-               ::BIGINT % {_N_SPLIT} AS bucket
-      FROM documents
-    ),
-    arr AS (
-      SELECT doc_id, text, bucket, md5(text) AS fp
-      FROM d WHERE bucket > 0
-    ),
-    first_wave AS (SELECT fp, min(bucket) AS w FROM arr GROUP BY 1),
-    keeper AS (
-      SELECT arr.fp, min(arr.doc_id) AS doc_id, fw.w
-      FROM arr JOIN first_wave fw ON arr.fp = fw.fp AND arr.bucket = fw.w
-      GROUP BY arr.fp, fw.w
-    ),
-    all_bands AS ({_minhash_bands_sql()}),
+    oracle=ORACLE_CTES
+    + """
     keeper_bands AS (
       SELECT k.doc_id, k.w, ab.band_id || ':' || ab.band_key AS band
       FROM all_bands ab JOIN keeper k ON ab.doc_id = k.doc_id

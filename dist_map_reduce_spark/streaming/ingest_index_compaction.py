@@ -37,46 +37,23 @@ the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.functions.dedup_common import _minhash_bands_sql
 from dist_map_reduce_spark.registry import query
-from dist_map_reduce_spark.scratch import scratch_path as _scratch
 from dist_map_reduce_spark.streaming.ingest_dedup import (
-    N_INGEST_BATCHES,
-    _sweep_dead_leftovers,
+    ORACLE_CTES,
     compact_band_index,
-    ensure_shared_replay,
+    private_index_copy,
 )
-
-_N_SPLIT = N_INGEST_BATCHES + 1
 
 
 @query(
     "streaming_ingest_index_compaction",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, text,
-             ('0x' || substring(md5('ingest:' || doc_id::VARCHAR), 1, 8))
-               ::BIGINT % {_N_SPLIT} AS bucket
-      FROM documents
-    ),
-    arr AS (
-      SELECT doc_id, text, bucket, md5(text) AS fp
-      FROM d WHERE bucket > 0
-    ),
-    first_wave AS (SELECT fp, min(bucket) AS w FROM arr GROUP BY 1),
-    keeper AS (
-      SELECT arr.fp, min(arr.doc_id) AS doc_id, fw.w
-      FROM arr JOIN first_wave fw ON arr.fp = fw.fp AND arr.bucket = fw.w
-      GROUP BY arr.fp, fw.w
-    ),
-    all_bands AS ({_minhash_bands_sql()}),
+    oracle=ORACLE_CTES
+    + """
     -- what the run's catch-ups append: the corpus seed (distinct)
     -- plus each wave's keeper bands, DISTINCT WITHIN the delivery
     -- but kept across deliveries (append-only index)
@@ -104,35 +81,13 @@ _N_SPLIT = N_INGEST_BATCHES + 1
 def streaming_ingest_index_compaction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """(band_id, n_keys, n_raw): run (or reuse) the 3-wave ingestion
-    replay, compact A COPY of its band index, and report per band the
-    compacted distinct-key count against the raw (append-only) row
-    count. The replay comes from the shared deterministic artifact
-    (``ensure_shared_replay`` — VERDICT r11 #6: this query's 13 s
-    bench cost was ~95% re-running a replay the ingest query had
-    already run); the index is copied into this query's own scratch
-    dir because compaction MUTATES it and the shared artifact is
-    read-only by contract — copying also guarantees every invocation
-    compacts the pristine post-replay index (raw counts stay
-    reproducible), not the output of a previous compaction."""
-    shared = ensure_shared_replay(spark, sf_dir)
-    # pid-suffixed work dir (ADVICE r13, applied to both compaction
-    # queries): concurrent same-version processes must not rmtree each
-    # other's index copy mid-read; dead pids' leftovers are reaped by
-    # the shared-replay sweeper (same ``.build-<pid>`` convention).
-    base = _scratch(sf_dir, "ingest_compact_q")
-    _sweep_dead_leftovers(base)
-    shutil.rmtree(base, ignore_errors=True)  # pre-r14 un-suffixed dir
-    work = f"{base}.build-{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
-    # normal exits clean their own copy (the returned plan is lazy,
-    # so deletion must wait until the process is done reading);
-    # crashed/killed processes are reaped by the dead-pid sweep above
-    # on the next invocation
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    """(band_id, n_keys, n_raw): compact a private copy of the shared
+    3-wave replay's band index (``private_index_copy`` — VERDICT r11
+    #6: re-running the replay per query was ~95% of this query's
+    cost) and report per band the compacted distinct-key count
+    against the raw (append-only) row count."""
+    work = private_index_copy(spark, sf_dir, "ingest_compact_q")
     index_dir = os.path.join(work, "band_index")
-    shutil.copytree(os.path.join(shared, "band_index"), index_dir)
     raw_counts_dir = os.path.join(work, "raw_counts")
 
     def by_band(df: DataFrame, out: str) -> DataFrame:

@@ -27,7 +27,7 @@ batch join:
      convention only matters on an exact-microsecond tie — a
      measure-zero boundary on continuous timestamps, and the parity
      test would catch a flip at any scale).
-  The availableNow replay emits the null rows in the trailing
+  The bounded replay emits the null rows in the trailing
   no-data micro-batch (spark.sql.streaming.noDataMicroBatches, on by
   default), when the final watermark is applied to the buffered
   state — rows buffered past the cut stay un-emitted, exactly as
@@ -54,11 +54,10 @@ extends the engine's stream-stream family alongside the inner join.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.streaming.pipelines import (
-    read_events_stream,
+    click_purchase_join,
     run_sink,
 )
 
@@ -100,40 +99,8 @@ def streaming_stream_stream_left_join(
     the watermark has proven unconvertible — clicks still inside
     their possible-match window at end of input remain buffered and
     are NOT emitted (mirrored by the oracle's watermark cut)."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTE")),
-        "left_outer",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias(
-            "delay_sec"
-        ),
-    )
     return run_sink(
-        joined, "streaming_stream_stream_left_join", output_mode="append"
+        click_purchase_join(spark, sf_dir, "left_outer"),
+        "streaming_stream_stream_left_join",
+        output_mode="append",
     )

@@ -7,15 +7,13 @@ engine's extended surface (SURVEY.md §2.2).
 Pipelines are defined against a SOURCE/SINK BINDING, not a concrete
 endpoint: every pipeline reads through ``read_events_stream`` and
 emits through ``run_sink``, which dispatch to the active ``Binding``.
-Available bindings:
+Every bounded stream, bound or not, drains through
+``run_available_now`` — the one place a stream is started, and so
+the one place state-partition sizing applies. Available bindings:
 
-- ``FileSource`` (default): availableNow replay of the parquet
-  fixture — deterministic, which is what makes the oracle comparison
+- ``FileSource`` (default): bounded replay of the parquet fixture —
+  deterministic, which is what makes the oracle comparison
   possible. In production the same binding tails a landing directory.
-- ``KafkaSource``: the production unbounded source (JSON values
-  parsed against the events schema). Requires the Kafka connector
-  jar, absent from this container — constructed and documented, not
-  integration-tested here.
 - ``MemorySink`` (default): the TEST adapter. Complete/update state
   is materialized on the driver, which is exactly what the oracle
   contract needs on bounded fixtures and exactly wrong at production
@@ -30,7 +28,7 @@ Available bindings:
 scalable sinks and asserts they agree with the memory-sink answer,
 so the production code path is exercised, not just documented.
 Watermarked variants (append mode) drop nothing on replay only
-because availableNow processes all input in order.
+because the bounded replay processes all input in order.
 
 API note: arbitrary per-key state is covered via
 ``applyInPandasWithState`` (``streaming_stateful_user_totals``).
@@ -50,14 +48,17 @@ import contextlib
 import os
 import re
 import shutil
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from dist_map_reduce_spark.catalog import table_path
+from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
+from dist_map_reduce_spark.scratch import scratch_path
 
 # --- scale-adaptive state partitioning (optimization guide §2.2) ---
 #
@@ -117,11 +118,11 @@ def state_partitions(spark: SparkSession, nbytes: int) -> int:
 
 @contextlib.contextmanager
 def stream_shuffle_scope(spark: SparkSession):
-    """Apply the pending FileSource partition suggestion(s) around a
-    streaming start()/awaitTermination() pair, restoring the session
+    """Apply the pending FileSource partition suggestion(s) around
+    ``run_available_now``'s start-and-drain, restoring the session
     default afterwards so batch queries keep their AQE initial
-    partition count. No-op when no suggestion is pending (e.g. a
-    Kafka source, whose volume is unknowable up front).
+    partition count. No-op when no suggestion is pending (a source
+    whose volume is unknowable up front).
 
     ADVICE r16 hardening: ALL pending suggestions are consumed and
     the state shuffle sized by their MAX — a stream-stream join
@@ -150,9 +151,72 @@ def stream_shuffle_scope(spark: SparkSession):
         _SUGGESTED_PARTS.clear()
 
 
+def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Drain a bounded stream: start the caller-configured ``writer``
+    (format, mode, options, foreachBatch) with an availableNow
+    trigger inside ``stream_shuffle_scope`` and block until every
+    input present at start is processed. The only place a stream is
+    started (tests/test_stream_drain_guard.py)."""
+    with stream_shuffle_scope(spark):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def stage_chunks(df: DataFrame, path: str, n: int) -> str:
+    """Rewrite ``path`` as ``n`` parquet files of ``df`` and return
+    it: a replay landing dir that a ``max_files_per_trigger=1``
+    stream drains in ``n`` real micro-batches. Rewritten on every
+    call — a kept dir would replay stale chunks after the source
+    changed, or a partial write after a crash, and a checkpoint kept
+    inside it would mark every chunk committed."""
+    shutil.rmtree(path, ignore_errors=True)
+    df.repartition(n).write.parquet(path)
+    return path
+
+
+def drain_versioned(
+    df: DataFrame,
+    base: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+    empty_schema,
+) -> DataFrame:
+    """Drain ``df`` in update mode into a versioned parquet target
+    under ``base`` (cleared first): each micro-batch writes
+    ``merge(batch, target)`` as ``v{batch_id}``, where ``target`` is
+    the latest version (None before the first batch), then deletes
+    the superseded version — the write fully materialized the merge.
+    Plain parquet ping-pong; with Delta/Iceberg the batch body
+    becomes MERGE INTO and the dataflow is unchanged. Returns the
+    final version, or an empty ``empty_schema`` frame if no batch
+    ran."""
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base, exist_ok=True)
+    versions: list[str] = []
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        target = spark.read.parquet(versions[-1]) if versions else None
+        out = os.path.join(base, f"v{batch_id}")
+        merge(batch, target).write.mode("overwrite").parquet(out)
+        versions.append(out)
+        for old in versions[:-1]:
+            shutil.rmtree(old, ignore_errors=True)
+        del versions[:-1]
+
+    spark = df.sparkSession
+    run_available_now(
+        spark,
+        df.writeStream.outputMode("update")
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", os.path.join(base, "_ckpt")),
+    )
+    if not versions:
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(versions[-1])
+
+
 @dataclass(frozen=True)
 class FileSource:
-    """availableNow file stream over the fixture directory (or, in
+    """Bounded file stream over the fixture directory (or, in
     production, a landing directory files arrive into). ``path``
     overrides the directory entirely (e.g. a staged multi-chunk
     landing dir); otherwise the sf dir is streamed with a glob
@@ -183,7 +247,8 @@ class FileSource:
         # (path, glob, mtime), the catalog._DF_MEMO staleness
         # contract (r16).
         skey = (path or sf_dir, self.glob)
-        stamp = _glob_bytes(path, sf_dir, self.glob), _mtime(path or sf_dir)
+        nbytes = _glob_bytes(path, sf_dir, self.glob)
+        stamp = nbytes, _mtime(path or sf_dir)
         hit = _SCHEMA_MEMO.get(skey)
         if hit is not None and hit[0] == stamp:
             schema = hit[1]
@@ -209,37 +274,8 @@ class FileSource:
         # a stream-stream join builds two sources before one sink
         # starts, and stream_shuffle_scope sizes by the max of all
         # pending suggestions (ADVICE r16)
-        _SUGGESTED_PARTS.append(
-            state_partitions(spark, _glob_bytes(path, sf_dir, self.glob))
-        )
+        _SUGGESTED_PARTS.append(state_partitions(spark, nbytes))
         return _normalize_ts(reader.load(path or sf_dir))
-
-
-@dataclass(frozen=True)
-class KafkaSource:
-    """Unbounded production source: events as JSON message values,
-    parsed against the batch events schema. Needs the
-    spark-sql-kafka connector on the classpath; this container does
-    not ship it, so the binding is exercised only on real clusters."""
-
-    bootstrap_servers: str
-    topic: str
-    starting_offsets: str = "earliest"
-
-    def read(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("subscribe", self.topic)
-            .option("startingOffsets", self.starting_offsets)
-            .load()
-        )
-        parsed = raw.select(
-            F.from_json(F.col("value").cast("string"), schema).alias("e")
-        ).select("e.*")
-        return _normalize_ts(parsed)
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
@@ -261,11 +297,11 @@ _LAST_SINK: dict[str, str] = {}
 
 
 class MemorySink:
-    """TEST adapter: drive the stream to completion (availableNow)
-    into a memory sink and return the materialized result. State
-    lives on the driver — right for bounded oracle fixtures, a
-    driver OOM at production key-cardinality (use
-    ForeachBatchMergeSink / ParquetAppendSink there)."""
+    """TEST adapter: drain the stream into a memory sink and return
+    the materialized result. State lives on the driver — right for
+    bounded oracle fixtures, a driver OOM at production
+    key-cardinality (use ForeachBatchMergeSink / ParquetAppendSink
+    there)."""
 
     def run(self, df: DataFrame, name: str, output_mode: str) -> DataFrame:
         global _SINK_SEQ
@@ -275,15 +311,10 @@ class MemorySink:
         prev = _LAST_SINK.get(name)
         if prev is not None:
             spark.catalog.dropTempView(prev)
-        with stream_shuffle_scope(spark):
-            q = (
-                df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_available_now(
+            spark,
+            df.writeStream.outputMode(output_mode).format("memory").queryName(sink),
+        )
         _LAST_SINK[name] = sink
         return spark.table(sink)
 
@@ -321,21 +352,18 @@ class ParquetAppendSink:
             # output dir
             shutil.rmtree(path, ignore_errors=True)
             shutil.rmtree(path + "_ckpt", ignore_errors=True)
-        with stream_shuffle_scope(df.sparkSession):
-            q = (
-                df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", path)
-                .option("checkpointLocation", path + "_ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         spark = df.sparkSession
+        run_available_now(
+            spark,
+            df.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", path + "_ckpt"),
+        )
         # a watermarked append stream can legitimately emit ZERO rows
         # (input span shorter than one window ⇒ every window withheld
-        # at availableNow): no parquet files exist then, and a bare
-        # read would raise PATH_NOT_FOUND instead of an empty result
+        # when the replay drains): no parquet files exist then, and a
+        # bare read would raise PATH_NOT_FOUND instead of an empty result
         wrote_files = os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)
         )
@@ -381,42 +409,19 @@ class ForeachBatchMergeSink:
                 f"pipeline's output columns {df.columns} — the merge "
                 "would not be keyed by the aggregate's grouping"
             )
-        base = os.path.join(self.base_dir, name)
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        versions: list[str] = []
         keys = list(self.keys)
 
-        def merge_batch(batch: DataFrame, batch_id: int) -> None:
-            spark = batch.sparkSession
-            if versions:
-                target = spark.read.parquet(versions[-1])
-                # the batch's rows supersede the target's for their keys
-                merged = target.join(
-                    batch.select(keys), on=keys, how="left_anti"
-                ).unionByName(batch)
-            else:
-                merged = batch
-            out = os.path.join(base, f"v{batch_id}")
-            merged.write.mode("overwrite").parquet(out)
-            versions.append(out)
-            for old in versions[:-1]:
-                shutil.rmtree(old, ignore_errors=True)
-            del versions[:-1]
+        def merge(batch: DataFrame, target: DataFrame | None) -> DataFrame:
+            if target is None:
+                return batch
+            # the batch's rows supersede the target's for their keys
+            return target.join(
+                batch.select(keys), on=keys, how="left_anti"
+            ).unionByName(batch)
 
-        with stream_shuffle_scope(df.sparkSession):
-            q = (
-                df.writeStream.outputMode("update")
-                .foreachBatch(merge_batch)
-                .option("checkpointLocation", os.path.join(base, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        spark = df.sparkSession
-        if not versions:
-            return spark.createDataFrame([], df.schema)
-        return spark.read.parquet(versions[-1])
+        return drain_versioned(
+            df, os.path.join(self.base_dir, name), merge, df.schema
+        )
 
 
 @dataclass(frozen=True)
@@ -437,7 +442,8 @@ _ACTIVE_BINDING: Binding | None = None
 @contextlib.contextmanager
 def use_binding(binding: Binding):
     """Run registered pipelines against a non-default binding (tests
-    bind the scalable sinks; a deployment binds Kafka → merge/append)."""
+    bind the scalable sinks; a deployment binds a landing-dir source
+    to the merge/append sinks)."""
     global _ACTIVE_BINDING
     prev = _ACTIVE_BINDING
     _ACTIVE_BINDING = binding
@@ -532,8 +538,8 @@ def streaming_watermarked_tumbling(spark: SparkSession, sf_dir: str) -> DataFram
     window_end + delay).
 
     The append-mode output is itself deterministic here, so it gets
-    a FULL oracle: the source is a single parquet file, so
-    availableNow processes one data batch (no mid-stream watermark
+    a FULL oracle: the source is a single parquet file, so the
+    bounded replay processes one data batch (no mid-stream watermark
     can drop anything) and the flush batch emits exactly the windows
     with window_end ≤ final watermark = max(ts) − 30 min. The oracle
     is the batch aggregation with that cut applied — the tail
@@ -707,8 +713,6 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream state), then aggregated in complete mode. At scale the
     static side follows the same rules as any batch join: bounded
     dim → broadcast; unbounded → shuffled join per batch."""
-    from dist_map_reduce_spark.catalog import load_table
-
     purchases = read_events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
@@ -724,6 +728,42 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_sink(agg, "streaming_static_join_enrich")
+
+
+def click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """(user_id, click_id, purchase_id, delay_sec): clicks joined
+    (``how``) to purchases by the same user within 30 minutes. Both
+    sides carry a 1-hour watermark and the join has a two-sided time
+    bound, so Spark can expire buffered state — the state store never
+    grows beyond ~watermark+bound worth of events per side, which is
+    what makes the join runnable on an unbounded stream."""
+
+    def side(event_type: str, prefix: str, id_name: str) -> DataFrame:
+        return (
+            read_events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .withWatermark("ts", "1 hour")
+            .select(
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("event_id").alias(id_name),
+                F.col("ts").alias(f"{prefix}_ts"),
+            )
+        )
+
+    return side("click", "c", "click_id").join(
+        side("purchase", "p", "purchase_id"),
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTE")),
+        how,
+    ).select(
+        F.col("c_user").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias(
+            "delay_sec"
+        ),
+    )
 
 
 @query(
@@ -742,48 +782,13 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with watermarks: clicks matched to
-    purchases by the same user within 30 minutes. Both sides carry a
-    1-hour watermark and the join has a two-sided time bound, so
-    Spark can expire buffered state — the state store never grows
-    beyond ~watermark+bound worth of events per side, which is what
-    makes the join runnable on an unbounded stream. availableNow
+    purchases by the same user within 30 minutes. The bounded replay
     processes the fixture in one pass; the emitted matches equal the
     batch time-bounded join (the oracle)."""
-    ev = read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTE")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        (F.col("p_ts").cast("long") - F.col("c_ts").cast("long")).alias(
-            "delay_sec"
-        ),
-    )
     return run_sink(
-        joined, "streaming_stream_stream_join", output_mode="append"
+        click_purchase_join(spark, sf_dir, "inner"),
+        "streaming_stream_stream_join",
+        output_mode="append",
     )
 
 
@@ -801,90 +806,41 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch upsert sink: each micro-batch MERGEs its latest
-    purchase per user into a key-versioned target table — the
-    standard streaming-CDC pattern (stream → MERGE INTO dim). The
-    target is plain parquet, ping-ponged between two versioned dirs
-    per batch (no transactional format in this environment; with
-    Delta/Iceberg the foreachBatch body becomes MERGE INTO and the
-    dataflow is unchanged). Final target state is checked against
-    the batch latest-event-per-user oracle."""
-    import os
-    import shutil
+    """foreachBatch upsert sink: each micro-batch MERGEs its purchases
+    into a key-versioned target table, keeping the latest purchase
+    per user — the standard streaming-CDC pattern (stream → MERGE
+    INTO dim) over ``drain_versioned``. Final target state is checked
+    against the batch latest-event-per-user oracle."""
 
-    from dist_map_reduce_spark.scratch import scratch_path
-
-    base = scratch_path(sf_dir, "stream_upsert_target")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    versions: list[str] = []
-
-    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        # latest purchase per user WITHIN the batch (deterministic
-        # tie-break), then MERGE into the current target version
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
+    def keep_latest(batch: DataFrame, target: DataFrame | None) -> DataFrame:
+        # event_id rides through the merge so later batches win ties
+        # deterministically, exactly like the oracle
+        rows = batch.select(
+            "user_id",
+            F.round("value", 2).alias("last_value"),
+            F.col("ts").alias("last_ts"),
+            "event_id",
         )
-        latest = (
-            batch.withColumn("rn", F.row_number().over(w))
+        if target is not None:
+            rows = target.unionByName(rows)
+        w = Window.partitionBy("user_id").orderBy(
+            F.col("last_ts").desc(), F.col("event_id").desc()
+        )
+        return (
+            rows.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select(
-                "user_id",
-                F.round("value", 2).alias("last_value"),
-                F.col("ts").alias("last_ts"),
-                "event_id",
-            )
+            .drop("rn")
         )
-        s = batch.sparkSession
-        if versions:
-            target = s.read.parquet(versions[-1])
-            # keep event_id through the merge so later batches win
-            # ties deterministically, exactly like the oracle
-            merged_w = W.partitionBy("user_id").orderBy(
-                F.col("last_ts").desc(), F.col("event_id").desc()
-            )
-            merged = (
-                target.unionByName(latest)
-                .withColumn("rn", F.row_number().over(merged_w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-        else:
-            merged = latest
-        out = os.path.join(base, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        versions.append(out)
-        # the write above fully materialized the merge, so the
-        # superseded version is dead — drop it (otherwise version
-        # dirs accumulate one per micro-batch)
-        for old in versions[:-1]:
-            shutil.rmtree(old, ignore_errors=True)
-        del versions[:-1]
 
     purchases = read_events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
-    with stream_shuffle_scope(spark):
-        q = (
-            purchases.writeStream.foreachBatch(upsert_batch)
-            .option(
-                "checkpointLocation", os.path.join(base, "_checkpoint")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not versions:
-        # the filtered stream produced no micro-batches (no purchase
-        # events): the target is legitimately empty
-        return spark.createDataFrame(
-            [], "user_id long, last_value double, last_ts timestamp"
-        )
-    return spark.read.parquet(versions[-1]).select(
-        "user_id", "last_value", "last_ts"
-    )
+    return drain_versioned(
+        purchases,
+        scratch_path(sf_dir, "stream_upsert_target"),
+        keep_latest,
+        "user_id long, last_value double, last_ts timestamp",
+    ).select("user_id", "last_value", "last_ts")
 
 
 @query(
@@ -900,21 +856,13 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 def streaming_multibatch_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation state maintained across MULTIPLE real micro-batches:
     the events table is staged as 4 parquet chunks and streamed with
-    maxFilesPerTrigger=1, so availableNow executes 4 batches and the
+    maxFilesPerTrigger=1, so the replay executes 4 batches and the
     complete-mode state must merge increments from every batch to
     equal the batch answer — the other streaming pipelines process a
     single-file source in one batch, which this query deliberately
     does not."""
-    import os
-
-    from dist_map_reduce_spark.catalog import load_table
-    from dist_map_reduce_spark.scratch import scratch_path
-
-    staged = scratch_path(sf_dir, "events_chunks")
-    if not os.path.isdir(staged):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(staged)
+    events = load_table(spark, sf_dir, "events")
+    staged = stage_chunks(events, scratch_path(sf_dir, "events_chunks"), 4)
     stream = FileSource(path=staged, max_files_per_trigger=1).read(spark, sf_dir)
     agg = (
         stream.groupBy((F.col("user_id") % 50).alias("user_bucket"))

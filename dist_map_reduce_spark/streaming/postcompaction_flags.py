@@ -38,9 +38,7 @@ to the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,16 +46,12 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.functions.dedup_common import _minhash_bands_sql
 from dist_map_reduce_spark.registry import query
-from dist_map_reduce_spark.scratch import scratch_path as _scratch
 from dist_map_reduce_spark.streaming.ingest_dedup import (
-    N_INGEST_BATCHES,
-    _sweep_dead_leftovers,
+    ORACLE_CTES,
     compact_band_index,
-    ensure_shared_replay,
     minhash_bands_rowwise,
+    private_index_copy,
 )
-
-_N_SPLIT = N_INGEST_BATCHES + 1
 
 # first ceil(n/2) words of each fixture doc; single-word docs pass
 # through whole (mirrors the shingle fallback's short-doc handling)
@@ -99,24 +93,8 @@ def _probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_postcompaction_neardup_flags",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, text,
-             ('0x' || substring(md5('ingest:' || doc_id::VARCHAR), 1, 8))
-               ::BIGINT % {_N_SPLIT} AS bucket
-      FROM documents
-    ),
-    arr AS (
-      SELECT doc_id, text, bucket, md5(text) AS fp
-      FROM d WHERE bucket > 0
-    ),
-    first_wave AS (SELECT fp, min(bucket) AS w FROM arr GROUP BY 1),
-    keeper AS (
-      SELECT arr.fp, min(arr.doc_id) AS doc_id, fw.w
-      FROM arr JOIN first_wave fw ON arr.fp = fw.fp AND arr.bucket = fw.w
-      GROUP BY arr.fp, fw.w
-    ),
-    all_bands AS ({_minhash_bands_sql()}),
+    oracle=ORACLE_CTES
+    + f"""
     -- the index's MEMBERSHIP state after the full run: corpus-seed
     -- bands plus every keeper's bands, as a SET (what compaction
     -- must preserve exactly)
@@ -142,34 +120,15 @@ def _probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_postcompaction_neardup_flags(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """(doc_id, corpus_neardup): compact a copy of the replay-grown
-    band index, then pre-flag the half-document probe delivery
-    against the COMPACTED index only. The index is copied into this
-    query's own scratch dir (the shared replay artifact is read-only
-    by contract, and compaction mutates); the flag join reads
-    exclusively the compacted parquet, so the oracle match certifies
-    that compaction preserved the band-membership SET, not just the
-    per-band counts."""
-    shared = ensure_shared_replay(spark, sf_dir)
-    # pid-suffixed work dir (ADVICE r13): two same-version processes
-    # (sweep + pytest) running this staged query concurrently must not
-    # rmtree each other's index copy mid-read. Same ``.build-<pid>``
-    # convention as the shared-replay builder, so the dead-pid sweeper
-    # reaps leftovers from crashed runs; our own dir from a previous
-    # call in THIS process is removed explicitly below.
-    base = _scratch(sf_dir, "postcompact_flags_q")
-    _sweep_dead_leftovers(base)
-    shutil.rmtree(base, ignore_errors=True)  # pre-r14 un-suffixed dir
-    work = f"{base}.build-{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
-    # normal exits clean their own copy (the returned plan is lazy,
-    # so deletion must wait until the process is done reading);
-    # crashed/killed processes are reaped by the dead-pid sweep above
-    # on the next invocation
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    index_dir = os.path.join(work, "band_index")
-    shutil.copytree(os.path.join(shared, "band_index"), index_dir)
+    """(doc_id, corpus_neardup): compact a private copy
+    (``private_index_copy``) of the replay-grown band index, then
+    pre-flag the half-document probe delivery against the COMPACTED
+    index only. The flag join reads exclusively the compacted
+    parquet, so the oracle match certifies that compaction preserved
+    the band-membership SET, not just the per-band counts."""
+    index_dir = os.path.join(
+        private_index_copy(spark, sf_dir, "postcompact_flags_q"), "band_index"
+    )
     compact_band_index(spark, index_dir)
 
     probes = _probe_docs(spark, sf_dir)

@@ -42,7 +42,11 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.scratch import scratch_path
-from dist_map_reduce_spark.streaming.pipelines import FileSource
+from dist_map_reduce_spark.streaming.pipelines import (
+    FileSource,
+    run_available_now,
+    stage_chunks,
+)
 
 K = 64  # reservoir size
 N_CHUNKS = 4  # staged replay chunks = real micro-batches
@@ -123,21 +127,12 @@ def stream_reservoir(
                 break
         batches[0] += 1
 
-    from dist_map_reduce_spark.streaming.pipelines import (
-        stream_shuffle_scope,
+    run_available_now(
+        spark,
+        stream.writeStream.outputMode("update")
+        .foreachBatch(fold_batch)
+        .option("checkpointLocation", os.path.join(staged, "_res_ckpt")),
     )
-
-    with stream_shuffle_scope(spark):
-        q = (
-            stream.writeStream.outputMode("update")
-            .foreachBatch(fold_batch)
-            .option(
-                "checkpointLocation", os.path.join(staged, "_res_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return state, batches[0]
 
 
@@ -150,16 +145,13 @@ def streaming_reservoir_sample(
     real replay batches. The oracle computes the one-pass global
     bottom-K — full value-hash parity IS the mergeability
     certification (stream merge == one-pass, row for row)."""
-    import shutil
-
-    # fresh replay every run: a surviving checkpoint would mark the
-    # chunks committed and the stream would fold zero batches
-    staged = scratch_path(sf_dir, "events_res_chunks")
-    shutil.rmtree(staged, ignore_errors=True)
-    load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    ).repartition(N_CHUNKS).write.mode("overwrite").parquet(staged)
-
+    staged = stage_chunks(
+        load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type"
+        ),
+        scratch_path(sf_dir, "events_res_chunks"),
+        N_CHUNKS,
+    )
     state, n_batches = stream_reservoir(spark, sf_dir, staged)
     out = spark.createDataFrame(
         [

@@ -4,8 +4,8 @@ Streaming job.
 The reference's whole program is a batch word count over a directory
 of files (reference: src/worker/worker.go:131-218 map, 270-288
 tokenize/reduce). This is the same logical pipeline declared against
-an unbounded source: the file stream replays the corpus (availableNow
-here; a production binding tails a landing directory or Kafka), the
+an unbounded source: the file stream replays the corpus (a bounded
+replay here; a production binding tails a landing directory), the
 tokenize is the identical JVM flat-map, and the count is a complete-
 mode stateful aggregation whose state — after the bounded replay —
 must equal the batch answer, which is exactly what the oracle checks.

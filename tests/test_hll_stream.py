@@ -12,9 +12,6 @@ these prove the mergeability algebra on the engine itself):
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark import registry
@@ -74,18 +71,18 @@ def test_streamed_registers_are_batching_invariant(spark, tmp_path):
     from dist_map_reduce_spark.streaming.hll_stream import (
         stream_hll_registers,
     )
+    from dist_map_reduce_spark.streaming.pipelines import stage_chunks
 
     direct = _direct_registers(spark)
 
     def staged(n: int) -> str:
-        path = str(tmp_path / f"chunks_{n}")
-        shutil.rmtree(path, ignore_errors=True)
-        load_table(spark, SF_SMOKE, "events").select("user_id").repartition(
-            n
-        ).write.mode("overwrite").parquet(path)
-        return path
+        return stage_chunks(
+            load_table(spark, SF_SMOKE, "events").select("user_id"),
+            str(tmp_path / f"chunks_{n}"),
+            n,
+        )
 
-    one_reg, one_n = stream_hll_registers(spark, SF_SMOKE, staged(1), 1)
-    four_reg, four_n = stream_hll_registers(spark, SF_SMOKE, staged(4), 4)
+    one_reg, one_n = stream_hll_registers(spark, SF_SMOKE, staged(1))
+    four_reg, four_n = stream_hll_registers(spark, SF_SMOKE, staged(4))
     assert one_n == 1 and four_n == 4
     assert one_reg == four_reg == direct

@@ -15,8 +15,6 @@ bottom-K; these prove the merge algebra on the engine itself):
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark import registry
@@ -62,6 +60,7 @@ def test_query_output_shape(spark):
 
 def test_stream_is_batching_invariant(spark, tmp_path):
     from dist_map_reduce_spark.catalog import load_table
+    from dist_map_reduce_spark.streaming.pipelines import stage_chunks
     from dist_map_reduce_spark.streaming.reservoir_stream import (
         stream_reservoir,
     )
@@ -69,12 +68,13 @@ def test_stream_is_batching_invariant(spark, tmp_path):
     direct = _direct_bottom_k(spark)
 
     def staged(n: int) -> str:
-        path = str(tmp_path / f"chunks_{n}")
-        shutil.rmtree(path, ignore_errors=True)
-        load_table(spark, SF_SMOKE, "events").select(
-            "event_id", "user_id", "event_type"
-        ).repartition(n).write.mode("overwrite").parquet(path)
-        return path
+        return stage_chunks(
+            load_table(spark, SF_SMOKE, "events").select(
+                "event_id", "user_id", "event_type"
+            ),
+            str(tmp_path / f"chunks_{n}"),
+            n,
+        )
 
     one, n1 = stream_reservoir(spark, SF_SMOKE, staged(1))
     four, n4 = stream_reservoir(spark, SF_SMOKE, staged(4))

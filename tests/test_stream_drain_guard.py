@@ -1,0 +1,38 @@
+"""Stream-drain guard: every bounded stream is started through
+``pipelines.run_available_now``, the one place state-partition sizing
+(``stream_shuffle_scope``) applies. Enforced statically: no module
+under ``dist_map_reduce_spark/`` mentions ``awaitTermination`` or
+``availableNow`` outside that function's body.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+_PKG = Path(__file__).resolve().parent.parent / "dist_map_reduce_spark"
+_PIPELINES = _PKG / "streaming" / "pipelines.py"
+
+
+def _drain_lines() -> range:
+    [fn] = [
+        node
+        for node in ast.parse(_PIPELINES.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "run_available_now"
+    ]
+    return range(fn.lineno, fn.end_lineno + 1)
+
+
+def test_streams_start_only_in_run_available_now():
+    allowed = _drain_lines()
+    offenders = [
+        f"{path.relative_to(_PKG)}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"awaitTermination|availableNow", line)
+        and not (path == _PIPELINES and n in allowed)
+    ]
+    assert not offenders, "stream started outside run_available_now:\n" + "\n".join(
+        offenders
+    )

@@ -9,7 +9,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark import registry
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, table_path
+from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.scratch import scratch_path as _scratch
 from dist_map_reduce_spark.streaming import pipelines
 from tests.conftest import SF_SMOKE, canon_rows
@@ -102,17 +103,11 @@ def test_merge_sink_across_real_microbatches(spark):
     chunks, stream with maxFilesPerTrigger=1 (4 real micro-batches,
     update mode emits re-updated keys each batch), and assert the
     merged target equals the batch aggregate."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dist_map_reduce_spark.money import sum_money
-
-    staged = _scratch(SF_SMOKE, "events_chunks_mergetest")
-    if not os.path.isdir(staged):
-        load_table(spark, SF_SMOKE, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(staged)
+    staged = pipelines.stage_chunks(
+        load_table(spark, SF_SMOKE, "events"),
+        _scratch(SF_SMOKE, "events_chunks_mergetest"),
+        4,
+    )
     schema = spark.read.parquet(staged).schema
     stream = (
         spark.readStream.schema(schema)
@@ -135,33 +130,6 @@ def test_merge_sink_across_real_microbatches(spark):
         .toPandas()
     )
     assert canon_rows(merged) == canon_rows(batch)
-
-
-def test_kafka_source_shapes_plan(spark):
-    """KafkaSource can't run here (connector jar absent), but its
-    parse projection must be constructible: from_json against the
-    RAW parquet schema — where ts is TIMESTAMP_NTZ, exactly what
-    KafkaSource.read uses — so the _normalize_ts cast is genuinely
-    exercised, not a no-op on a pre-normalized schema."""
-    from dist_map_reduce_spark.catalog import table_path
-
-    schema = spark.read.parquet(table_path(SF_SMOKE, "events")).schema
-    assert dict(zip(schema.names, [f.dataType.simpleString() for f in schema.fields]))[
-        "ts"
-    ] == "timestamp_ntz", "precondition: raw fixture schema is NTZ"
-    kafka_shaped = spark.createDataFrame(
-        [('{"event_id": 1, "user_id": 2, "event_type": "click", '
-          '"value": 1.5, "ts": "2024-01-01T00:00:00"}',)],
-        "value string",
-    )
-    parsed = kafka_shaped.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("e")
-    ).select("e.*")
-    assert dict(parsed.dtypes)["ts"] == "timestamp_ntz"
-    parsed = pipelines._normalize_ts(parsed)
-    row = parsed.collect()[0]
-    assert dict(parsed.dtypes)["ts"] == "timestamp"
-    assert row.event_type == "click" and row.user_id == 2
 
 
 def test_streaming_sessions_subset_of_batch(spark):
@@ -218,8 +186,6 @@ def test_merge_sink_rejects_mismatched_keys(spark):
     be the pipeline's grouping columns — binding it with keys absent
     from the output must fail loudly, not silently mis-merge."""
     import pytest
-
-    from dist_map_reduce_spark.catalog import table_path
 
     merge = pipelines.ForeachBatchMergeSink(
         base_dir=_scratch(SF_SMOKE, "merge_sink_badkeys"),
@@ -286,3 +252,36 @@ def test_shuffle_scope_sizes_by_max_pending_and_clears(spark):
     finally:
         P._SUGGESTED_PARTS.clear()
         spark.conf.set(key, prev)
+
+
+def test_multibatch_counts_restage_after_source_rewrite(spark, tmp_path):
+    """streaming_multibatch_counts stages its replay chunks on every
+    call: once the fixture's events file is rewritten in place, the
+    query must aggregate the NEW file, not replay chunks staged from
+    the old one."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    fixture = tmp_path / "sf_restage"
+    fixture.mkdir()
+    events = fixture / "events.parquet"
+    shutil.copy(table_path(SF_SMOKE, "events"), events)
+    fn = registry.QUERIES["streaming_multibatch_counts"]
+    try:
+        fn(spark, str(fixture)).collect()
+        full = pq.read_table(events)
+        pq.write_table(full.slice(0, full.num_rows // 2), events)
+        restaged = fn(spark, str(fixture)).toPandas()
+        batch = (
+            load_table(spark, str(fixture), "events")
+            .groupBy((F.col("user_id") % 50).alias("user_bucket"))
+            .agg(
+                F.count("*").cast("bigint").alias("n"),
+                F.expr(sum_money("value", "sum_value")),
+            )
+            .toPandas()
+        )
+        assert canon_rows(restaged) == canon_rows(batch)
+    finally:
+        shutil.rmtree(_scratch(str(fixture), ""), ignore_errors=True)

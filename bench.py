@@ -277,6 +277,7 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     out = {
         "metric": "headline_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -294,6 +295,12 @@ def main() -> None:
         "r2_22_total_sec": round(
             sum(timings.get(n, 0.0) for n in R2_22), 3
         ),
+        # the parallelism the numbers were taken at: local[cpus] with
+        # "*" resolved to the JVM's available processors
+        "cpus": int(cpus)
+        if cpus.isdigit()
+        else spark._jvm.java.lang.Runtime.getRuntime().availableProcessors(),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(out))
 

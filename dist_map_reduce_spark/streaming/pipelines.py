@@ -9,7 +9,8 @@ endpoint: every pipeline reads through ``read_events_stream`` and
 emits through ``run_sink``, which dispatch to the active ``Binding``.
 Every bounded stream, bound or not, drains through
 ``run_available_now`` — the one place a stream is started, and so
-the one place state-partition sizing applies. Available bindings:
+the one place state-partition sizing and the checkpoint-manager pin
+apply. Available bindings:
 
 - ``FileSource`` (default): bounded replay of the parquet fixture —
   deterministic, which is what makes the oracle comparison
@@ -50,6 +51,7 @@ import re
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -67,8 +69,8 @@ from dist_map_reduce_spark.scratch import scratch_path
 # count is pinned from spark.sql.shuffle.partitions at query start.
 # Inheriting the session default (the core count) over-partitions
 # small state: each state partition carries a FIXED per-batch cost
-# (store open + version load + delta-file commit, ~100 ms/partition/
-# batch measured for the symmetric hash join on this container), so
+# (store open + version load + delta-file commit, ~60 ms/partition/
+# batch measured for the symmetric hash join at sf0.1, 4 vCPUs), so
 # the stream-stream left join at sf0.1 ran 5.9 s at 32 partitions vs
 # 2.4 s at 8 with identical rows (OPTIMIZATION_r16.md has the full
 # 1/2/4/8/32 curve). Size the state shuffle to the DATA instead:
@@ -117,6 +119,27 @@ def state_partitions(spark: SparkSession, nbytes: int) -> int:
 
 
 @contextlib.contextmanager
+def _conf_scope(spark: SparkSession, settings: dict[str, str]):
+    """Set each of ``settings`` on the session for the scope, then put
+    back the value each key had before — unsetting a key that was
+    unset — also when the body raises. The one set-and-restore path
+    for stream-scoped confs: a stream clones the session conf at
+    ``start()``, so a scope around start-and-drain reaches the
+    driver's offset/commit logs and the executors' state stores."""
+    prev = {key: spark.conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+@contextlib.contextmanager
 def stream_shuffle_scope(spark: SparkSession):
     """Apply the pending FileSource partition suggestion(s) around
     ``run_available_now``'s start-and-drain, restoring the session
@@ -136,28 +159,64 @@ def stream_shuffle_scope(spark: SparkSession):
     before any other stream completes — it only over/under-sizes
     that one stream's state shuffle, and the session value is
     restored either way."""
-    key = "spark.sql.shuffle.partitions"
     suggestion = max(_SUGGESTED_PARTS) if _SUGGESTED_PARTS else None
     _SUGGESTED_PARTS.clear()
-    if suggestion is None:
-        yield
-        return
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(suggestion))
+    settings = {}
+    if suggestion is not None:
+        settings["spark.sql.shuffle.partitions"] = str(suggestion)
     try:
-        yield
+        with _conf_scope(spark, settings):
+            yield
     finally:
-        spark.conf.set(key, prev)
         _SUGGESTED_PARTS.clear()
+
+
+# --- checkpoint file manager on local roots ---
+#
+# Offsets, commits and state-store deltas are written through Spark's
+# checkpoint file manager. Its default goes through Hadoop's
+# FileContext, and without the native libhadoop every FileContext
+# link-status call forks a `readlink` child (FileUtil.readLink ->
+# Shell.execCommand): ~1 650 forks and 2.2 CPU s of reaped-child time
+# per stream-stream join run on 4 vCPUs, none of it in Spark's task
+# metrics. On a `file:` root, rename(2) is already atomic, so the
+# FileSystem manager (Spark's own fallback when FileContext is
+# unavailable) commits the same files without the forks. Other
+# schemes keep Spark's default, which gives HDFS an atomic
+# overwrite-rename. A caller-set manager always wins.
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def is_local_fs(default_fs: str) -> bool:
+    """Whether a default-filesystem URI (``fs.defaultFS``) names the
+    local filesystem, where checkpoints use the FileSystem manager."""
+    return urlparse(default_fs).scheme == "file"
+
+
+def _checkpoint_manager_settings(spark: SparkSession) -> dict[str, str]:
+    if spark.conf.get(_CKPT_MANAGER_KEY, None) is not None:
+        return {}
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not is_local_fs(hadoop_conf.get("fs.defaultFS")):
+        return {}
+    return {_CKPT_MANAGER_KEY: _FS_CKPT_MANAGER}
 
 
 def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Drain a bounded stream: start the caller-configured ``writer``
     (format, mode, options, foreachBatch) with an availableNow
-    trigger inside ``stream_shuffle_scope`` and block until every
-    input present at start is processed. The only place a stream is
-    started (tests/test_stream_drain_guard.py)."""
-    with stream_shuffle_scope(spark):
+    trigger and block until every input present at start is
+    processed, inside ``stream_shuffle_scope`` and, on a local
+    default filesystem, with the FileSystem checkpoint manager
+    pinned. The only place a stream is started
+    (tests/test_stream_drain_guard.py)."""
+    with stream_shuffle_scope(spark), _conf_scope(
+        spark, _checkpoint_manager_settings(spark)
+    ):
         writer.trigger(availableNow=True).start().awaitTermination()
 
 

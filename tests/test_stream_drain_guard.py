@@ -2,7 +2,8 @@
 ``pipelines.run_available_now``, the one place state-partition sizing
 (``stream_shuffle_scope``) applies. Enforced statically: no module
 under ``dist_map_reduce_spark/`` mentions ``awaitTermination`` or
-``availableNow`` outside that function's body.
+``availableNow`` outside that function's body, and none but
+``pipelines.py`` sets the checkpoint file manager.
 """
 
 from __future__ import annotations
@@ -34,5 +35,20 @@ def test_streams_start_only_in_run_available_now():
         and not (path == _PIPELINES and n in allowed)
     ]
     assert not offenders, "stream started outside run_available_now:\n" + "\n".join(
+        offenders
+    )
+
+
+def test_checkpoint_manager_set_only_in_pipelines():
+    """The checkpoint-manager pin lives at the drain point: no other
+    module carries its own ``checkpointFileManagerClass`` override."""
+    offenders = [
+        f"{path.relative_to(_PKG)}:{n}: {line.strip()}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if path != _PIPELINES
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "checkpointFileManagerClass" in line
+    ]
+    assert not offenders, "checkpoint manager set outside pipelines.py:\n" + "\n".join(
         offenders
     )

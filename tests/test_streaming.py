@@ -6,6 +6,7 @@ memory test adapter."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark import registry
@@ -285,3 +286,70 @@ def test_multibatch_counts_restage_after_source_rewrite(spark, tmp_path):
         assert canon_rows(restaged) == canon_rows(batch)
     finally:
         shutil.rmtree(_scratch(str(fixture), ""), ignore_errors=True)
+
+
+_CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _manager_seen_by_batches(spark, ckpt) -> set:
+    """Drain the events replay through run_available_now and return
+    the checkpoint-manager values its micro-batches saw."""
+    seen = set()
+
+    def record(batch, _batch_id):
+        seen.add(batch.sparkSession.conf.get(_CKPT_KEY, None))
+
+    pipelines.run_available_now(
+        spark,
+        pipelines.FileSource()
+        .read(spark, SF_SMOKE)
+        .writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(ckpt)),
+    )
+    return seen
+
+
+def test_local_fs_decides_the_checkpoint_manager_pin():
+    assert pipelines.is_local_fs("file:///")
+    assert not pipelines.is_local_fs("hdfs://nn:8020")
+
+
+def test_drain_pins_filesystem_checkpoint_manager_on_local_root(spark, tmp_path):
+    """On a file: default filesystem the stream runs with the
+    FileSystem checkpoint manager (no forked readlink per
+    link-status call), and the session key is unset again after."""
+    assert spark.conf.get(_CKPT_KEY, None) is None
+    seen = _manager_seen_by_batches(spark, tmp_path / "ckpt")
+    assert seen == {pipelines._FS_CKPT_MANAGER}
+    assert spark.conf.get(_CKPT_KEY, None) is None
+
+
+def test_drain_keeps_caller_set_checkpoint_manager(spark, tmp_path):
+    spark.conf.set(_CKPT_KEY, _FC_MANAGER)
+    try:
+        seen = _manager_seen_by_batches(spark, tmp_path / "ckpt")
+        assert seen == {_FC_MANAGER}
+        assert spark.conf.get(_CKPT_KEY, None) == _FC_MANAGER
+    finally:
+        spark.conf.unset(_CKPT_KEY)
+
+
+def test_drain_restores_checkpoint_manager_when_start_raises(spark):
+    class FailingWriter:
+        pinned = None
+
+        def trigger(self, **_):
+            return self
+
+        def start(self):
+            FailingWriter.pinned = spark.conf.get(_CKPT_KEY, None)
+            raise RuntimeError("start failed")
+
+    with pytest.raises(RuntimeError, match="start failed"):
+        pipelines.run_available_now(spark, FailingWriter())
+    assert FailingWriter.pinned == pipelines._FS_CKPT_MANAGER
+    assert spark.conf.get(_CKPT_KEY, None) is None

@@ -12,6 +12,12 @@ query whose cost hides in pruned columns). Jobs are labelled via
 setJobDescription. ``--explain DIR`` writes ``DIR/<name>.txt`` with
 the ``explain('formatted')`` output of the query's DataFrame.
 
+On Linux each run also reports the processes forked machine-wide
+(the delta of ``processes`` in ``/proc/stat``) and the CPU seconds of
+the driver JVM's reaped children (``cutime + cstime`` of
+``/proc/<jvm>/stat``): Hadoop shell-outs (``readlink``, ``chmod``)
+cost CPU that no Spark task metric sees.
+
 Runs on the ENGINE session (session.get_spark), like bench.py.
 """
 
@@ -27,6 +33,24 @@ from dist_map_reduce_spark import registry  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
+
+
+def fork_counters(jvm_pid: int) -> tuple[int, float] | None:
+    """(processes forked since boot, reaped-child CPU seconds of
+    ``jvm_pid``), or None where ``/proc`` does not provide them."""
+    try:
+        with open("/proc/stat") as fh:
+            forks = next(
+                int(line.split()[1]) for line in fh if line.startswith("processes ")
+            )
+        with open(f"/proc/{jvm_pid}/stat") as fh:
+            # fields after the ")" closing comm start at field 3;
+            # cutime and cstime are fields 16 and 17
+            fields = fh.read().rsplit(")", 1)[1].split()
+    except (OSError, StopIteration):
+        return None
+    ticks = int(fields[13]) + int(fields[14])
+    return forks, ticks / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> int:
@@ -46,6 +70,7 @@ def main() -> int:
     import bench  # noqa: E402  (EXTRA entries: skew twins etc.)
 
     spark = get_spark("time_one")
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     # same warm-up as bench.py so first-run numbers mean the same
     registry.QUERIES["wordcount"](spark, sf_dir).count()
 
@@ -63,8 +88,11 @@ def main() -> int:
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
         samples = []
+        forks: list[int] = []
+        child_cpu: list[float] = []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
+            before = fork_counters(jvm_pid)
             t0 = time.perf_counter()
             d = fn(spark, sf_dir)
             if use_noop:
@@ -72,12 +100,19 @@ def main() -> int:
             else:
                 d.count()
             samples.append(time.perf_counter() - t0)
+            after = fork_counters(jvm_pid)
+            if before is not None and after is not None:
+                forks.append(after[0] - before[0])
+                child_cpu.append(after[1] - before[1])
             spark.sparkContext.setJobDescription(None)
         best = min(samples)
-        print(
-            f"{name}: best={best:.3f}s runs="
-            + ",".join(f"{s:.3f}" for s in samples)
+        line = f"{name}: best={best:.3f}s runs=" + ",".join(
+            f"{s:.3f}" for s in samples
         )
+        if forks:
+            line += " forks=" + ",".join(map(str, forks))
+            line += " child_cpu=" + ",".join(f"{c:.2f}s" for c in child_cpu)
+        print(line)
     return 0
 
 

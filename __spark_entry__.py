@@ -84,6 +84,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per listed query (omitted → rows-only
-    check)."""
+    """DuckDB-equivalent SQL per listed query; every listed query has
+    one."""
     return {n: s for n, s in registry.ORACLES.items() if n not in _NOT_LISTED}

@@ -1,11 +1,11 @@
 """Query registry.
 
 Every implemented operator registers a named query callable
-``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, a DuckDB
-oracle SQL string over the same fixture views. This is the engine's
-equivalent of the reference's pluggable ``mapFunc``/``reduceFunc``
-programming surface (reference: src/worker/worker.go:22-23) — except
-queries are declarative plans, not imperative task bodies.
+``(spark, sf_dir) -> DataFrame`` and its DuckDB oracle SQL string over
+the same fixture views. This is the engine's equivalent of the
+reference's pluggable ``mapFunc``/``reduceFunc`` programming surface
+(reference: src/worker/worker.go:22-23) — except queries are
+declarative plans, not imperative task bodies.
 
 Column-name contract: Spark result and oracle result must have
 identical column names (driver compares after sorting columns by
@@ -33,16 +33,15 @@ ORACLES: dict[str, str] = {}
 _PACKAGES = ("functions", "operators", "streaming")
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query; ``oracle`` is DuckDB SQL, or None (rows-only
-    check)."""
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Register a query with its oracle, DuckDB SQL over the fixture
+    views (``parity.duck_views``)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco

@@ -13,6 +13,7 @@
 from __future__ import annotations
 
 from dist_map_reduce_spark import registry
+from dist_map_reduce_spark.parity import compare, duck_views
 from tests.conftest import SF_SMOKE
 
 registry.load_all()
@@ -71,21 +72,9 @@ def test_truncation_branch_on_overlength_doc(tmp_path, spark):
     )
     sp = _panel(spark, sf_dir)
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{os.path.join(sf_dir, 'documents.parquet')}'"
-    )
-    od = (
-        con.execute(
-            registry.ORACLES["length_bucket_padding_waste"]
-        )
-        .fetchdf()
-        .sort_values("bucket_len")
-        .reset_index(drop=True)
-    )
-    assert sp[sorted(sp.columns)].astype(str).equals(
-        od[sorted(od.columns)].astype(str)
-    ), f"\n{sp}\n{od}"
+    duck_views(con, sf_dir)
+    od = con.execute(registry.ORACLES["length_bucket_padding_waste"]).fetchdf()
+    assert not compare(sp, od), f"\n{sp}\n{od}"
     big = sp[sp.bucket_len == MAX_BUCKET].iloc[0]
     assert big.truncated_tokens == 100
     assert big.used_tokens == MAX_BUCKET

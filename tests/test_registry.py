@@ -21,8 +21,8 @@ def test_every_query_has_unique_name_and_callable():
     assert len(registry.QUERIES) == len(set(registry.QUERIES))
     for name, fn in registry.QUERIES.items():
         assert callable(fn), name
-    # every oracle belongs to a registered query
-    assert set(registry.ORACLES) <= set(registry.QUERIES)
+    # every registered query has an oracle, and every oracle a query
+    assert set(registry.ORACLES) == set(registry.QUERIES)
 
 
 def test_every_oracle_resolves_to_sql_text():

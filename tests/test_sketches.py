@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark import caching, registry
+from dist_map_reduce_spark.parity import compare, duck_views
 from tests.conftest import SF_SMOKE
 
 registry.load_all()
@@ -142,10 +143,7 @@ def test_bloom_degrades_gracefully_on_empty_eval_split(tmp_path, spark):
     finally:
         caching.clear()
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{os.path.join(sf_dir, 'documents.parquet')}'"
-    )
+    duck_views(con, sf_dir)
     od = con.execute(
         registry.ORACLES["text_bloom_decontaminate"]
     ).fetchdf()
@@ -231,31 +229,14 @@ def test_theta_exact_mode_below_k(tmp_path, spark):
 
     caching.clear()
     try:
-        sp = (
-            registry.QUERIES["text_theta_set_ops"](spark, sf_dir)
-            .toPandas()
-            .sort_values(["source_a", "source_b"])
-            .reset_index(drop=True)
-        )
+        sp = registry.QUERIES["text_theta_set_ops"](spark, sf_dir).toPandas()
     finally:
         caching.clear()
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{os.path.join(sf_dir, 'documents.parquet')}'"
-    )
-    od = (
-        con.execute(
-            registry.ORACLES["text_theta_set_ops"]
-        )
-        .fetchdf()
-        .sort_values(["source_a", "source_b"])
-        .reset_index(drop=True)
-    )
+    duck_views(con, sf_dir)
+    od = con.execute(registry.ORACLES["text_theta_set_ops"]).fetchdf()
     assert len(sp) == 3  # (A,A), (A,B), (B,B)
-    a = sp[sorted(sp.columns)].astype(str)
-    b = od[sorted(od.columns)].astype(str)
-    assert a.equals(b), f"\n{sp}\n{od}"
+    assert not compare(sp, od), f"\n{sp}\n{od}"
     # exact mode: every estimate equals its exact arm, error zero
     assert (sp.est_union == sp.n_union).all(), sp
     assert (sp.est_inter == sp.n_inter).all(), sp

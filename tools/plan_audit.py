@@ -72,6 +72,18 @@ SORTAGG_OK = {
 LAMBDA_FILTER_MAX = 8
 
 
+def _plan(spark, sf_dir: str, name: str) -> str:
+    """A query's executed-plan string, built with every cache slot
+    cleared first."""
+    caching.clear()
+    return (
+        registry.QUERIES[name](spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan_audit")
@@ -83,14 +95,8 @@ def main() -> int:
         # has always audited; streams and full-corpus exports skip
         if name.startswith("streaming_") or name in EXECUTES_ON_CONSTRUCTION:
             continue
-        caching.clear()
         try:
-            plan = (
-                registry.QUERIES[name](spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            plan = _plan(spark, sf_dir, name)
         except Exception as e:  # noqa: BLE001
             flags.append(f"{name}: PLAN ERROR {e}")
             continue
@@ -144,14 +150,8 @@ def main() -> int:
         for name in sorted(registry.QUERIES):
             if _eager(name):
                 continue  # executes / writes on plan construction
-            caching.clear()
             try:
-                plan = (
-                    registry.QUERIES[name](spark, sf_dir)
-                    ._jdf.queryExecution()
-                    .executedPlan()
-                    .toString()
-                )
+                plan = _plan(spark, sf_dir, name)
             except Exception:  # noqa: BLE001
                 continue  # base pass already reported plan errors
             worst = 0

@@ -1,8 +1,13 @@
-"""Full oracle sweep: run every registered query on Spark AND its
-DuckDB oracle on the same fixture dir, compare canonicalized rows.
+"""Oracle sweep: run registered queries on Spark AND their DuckDB
+oracles on the same fixture dir, and compare them with
+``parity.compare`` (column names, row count, canonical rows).
 
 Usage:
-    python tools/sweep.py [sf_dir]     # default /root/testdata/sf0.01
+    python tools/sweep.py [sf_dir] [name ...]   # sf_dir defaults to the sf0.01 fixtures
+
+With names it checks only those queries (the one-query loop while
+developing an oracle) and exits 2 on a name it does not know; with
+none it checks all of them.
 
 This is the repo-local replica of the driver's correctness gate,
 runnable at ANY scale factor — run it at sf0.1 after touching any
@@ -31,21 +36,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _canon(pdf) -> list[tuple]:
-    """Driver-style canonical rows: sorted columns, stringified cells,
-    sorted tuples — ONE implementation so a future canonicalization
-    fix (pandas half-even rounding, -0.0) lands everywhere at once."""
-    return (
-        pdf[sorted(pdf.columns)].astype(str)
-        .apply(tuple, axis=1).sort_values().tolist()
-    )
-
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -53,8 +43,14 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from dist_map_reduce_spark import registry
+    from dist_map_reduce_spark.parity import compare, duck_views
 
     registry.load_all()
+    names = sys.argv[2:] or sorted(registry.QUERIES)
+    unknown = [n for n in names if n not in registry.QUERIES]
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        return 2
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
         .config("spark.sql.shuffle.partitions", "16")
@@ -64,34 +60,28 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    duck_views(con, sf_dir)
 
     bad: list[str] = []
     times: dict[str, float] = {}
-    n = 0
-    for name, fn in sorted(registry.QUERIES.items()):
+    for name in names:
         t0 = time.perf_counter()
-        sp = fn(spark, sf_dir).toPandas()
+        sp = registry.QUERIES[name](spark, sf_dir).toPandas()
         times[name] = time.perf_counter() - t0
-        osql = registry.ORACLES.get(name)
-        if osql is None:
-            print(f"{name}: rows-only ({len(sp)} rows) {times[name]:.2f}s")
-            continue
-        n += 1
-        od = con.execute(osql).fetchdf()
-        ok = _canon(sp) == _canon(od)
-        if not ok:
+        problems = compare(sp, con.execute(registry.ORACLES[name]).fetchdf())
+        if problems:
             bad.append(name)
         print(
-            f"{name}: {'MATCH' if ok else 'MISMATCH'}"
+            f"{name}: {'MISMATCH' if problems else 'MATCH'}"
             f" ({len(sp)} rows) {times[name]:.2f}s"
         )
+        for p in problems:
+            print("  " + p)
 
     print("\nslowest under the foreign session:")
     for name, t in sorted(times.items(), key=lambda x: -x[1])[:10]:
         print(f"  {t:7.2f}s  {name}")
-    print(f"\nchecked {n} oracles at {sf_dir}; mismatches: {bad}")
+    print(f"\nchecked {len(names)} oracles at {sf_dir}; mismatches: {bad}")
     return 1 if bad else 0
 
 

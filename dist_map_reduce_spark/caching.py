@@ -92,11 +92,12 @@ def persist_tracked(df: DataFrame, slot: str, key: str) -> DataFrame:
     OPTIMIZATION_r17.md) — pure overhead at ANY data scale, since it
     is proportional to plan size, not data. The checkpoint snapshot is
     a LogicalRDD leaf: plan-string work becomes O(1) and the optimizer
-    never re-walks the build tree. Trade-off (documented, deliberate):
-    a lost executor can no longer recompute a slot from lineage — the
-    consuming job fails and retries from the builder; acceptable for
-    bounded intermediates, the same recompute-on-loss posture as
-    session.iter_checkpoint's localCheckpoint arm."""
+    never re-walks the build tree. Trade-off: the snapshot has no
+    lineage to recompute from. If its blocks are lost (a lost or
+    removed executor), nothing rebuilds it: ``peek`` only checks the
+    session, so every later call that reads the slot fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` until ``clear()`` drops it.
+    Making slots survive lost blocks is ROADMAP item 7."""
     prev = _SLOTS.pop(slot, None)
     if prev is not None:
         _discard(prev[1])

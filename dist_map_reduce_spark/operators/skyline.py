@@ -81,9 +81,10 @@ def skyline_orders_price_recency(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the two-phase local/global reduction."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").alias("price"),
-        (F.unix_timestamp(F.col("o_orderdate").cast("timestamp"))).alias(
-            "recency"
-        ),
+        # o_orderdate reads as TIMESTAMP_NTZ; unix_timestamp takes it
+        # without a zone, where a cast to timestamp would apply the
+        # session's
+        F.unix_timestamp(F.col("o_orderdate")).alias("recency"),
     )
     return skyline_2d(o, "price", "recency").select(
         F.col("x").alias("price"), F.col("y").alias("recency")

@@ -15,6 +15,7 @@ from dist_map_reduce_spark.operators.intervals import (
     overlap_counts,
     user_sessions,
 )
+from tests.conftest import assert_parity
 
 
 def _sessions(spark, rows):
@@ -174,6 +175,15 @@ class TestSkyline:
             )
         }
         assert a == b == naive
+
+    def test_orders_frontier_ignores_session_time_zone(self, spark, duck):
+        # o_orderdate reads as TIMESTAMP_NTZ; a cast to timestamp would
+        # read it in the session zone and shift every recency by 7-8 h
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            assert_parity(spark, duck, "skyline_orders_price_recency")
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 class TestSequences:

@@ -18,6 +18,13 @@ the driver JVM's reaped children (``cutime + cstime`` of
 ``/proc/<jvm>/stat``): Hadoop shell-outs (``readlink``, ``chmod``)
 cost CPU that no Spark task metric sees.
 
+Each run also prints ``compiles=``: the classes whole-stage codegen
+compiled during it (the delta of Spark's ``CodegenMetrics``
+compilation-time histogram count; in local mode tasks compile in the
+driver JVM too). A warm repeat that still compiles missed Spark's
+compiled-class cache, which ``session.get_spark`` sizes to the
+registry's working set.
+
 Runs on the ENGINE session (session.get_spark), like bench.py.
 """
 
@@ -51,6 +58,12 @@ def fork_counters(jvm_pid: int) -> tuple[int, float] | None:
         return None
     ticks = int(fields[13]) + int(fields[14])
     return forks, ticks / os.sysconf("SC_CLK_TCK")
+
+
+def compile_count(spark) -> int:
+    """Classes compiled by whole-stage codegen in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> int:
@@ -90,9 +103,11 @@ def main() -> int:
         samples = []
         forks: list[int] = []
         child_cpu: list[float] = []
+        compiles: list[int] = []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             before = fork_counters(jvm_pid)
+            compiled = compile_count(spark)
             t0 = time.perf_counter()
             d = fn(spark, sf_dir)
             if use_noop:
@@ -100,6 +115,7 @@ def main() -> int:
             else:
                 d.count()
             samples.append(time.perf_counter() - t0)
+            compiles.append(compile_count(spark) - compiled)
             after = fork_counters(jvm_pid)
             if before is not None and after is not None:
                 forks.append(after[0] - before[0])
@@ -112,6 +128,7 @@ def main() -> int:
         if forks:
             line += " forks=" + ",".join(map(str, forks))
             line += " child_cpu=" + ",".join(f"{c:.2f}s" for c in child_cpu)
+        line += " compiles=" + ",".join(map(str, compiles))
         print(line)
     return 0
 

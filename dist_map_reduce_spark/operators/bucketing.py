@@ -10,12 +10,9 @@ while the result matches the plain-join oracle.
 
 from __future__ import annotations
 
-import atexit
-import errno
 import os
 import re
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,88 +20,35 @@ from pyspark.sql import functions as F
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.money import sum_disc_price
 from dist_map_reduce_spark.registry import query
+from dist_map_reduce_spark.scratch import scratch_path
 
 N_BUCKETS = 16
-
-# Explicit repo-local data location (external tables): the default
-# managed location is <caller cwd>/spark-warehouse, which may lie
-# outside the repo when the engine is driven from elsewhere.
-_BUCKET_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-    "bucketed",
-)
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except OSError as e:
-        return e.errno == errno.EPERM
-    return True
-
-
-def _sweep_stale_builds() -> None:
-    """Reap bucketed-table dirs owned by DEAD processes (crashed or
-    killed runs never reach their atexit cleanup), plus legacy
-    pre-r15 un-suffixed dirs, which no current code writes. Never
-    touches a live process's ``*_p<pid>`` dir — that is the whole
-    fix: the old shared-location scheme rmtree'd the table out from
-    under a concurrent reader (VERDICT r14 #3 reproduced sweep+pytest
-    failures; same hazard class as the compaction work dirs fixed
-    with this convention in streaming/postcompaction_flags.py)."""
-    if not os.path.isdir(_BUCKET_ROOT):
-        return
-    for d in os.listdir(_BUCKET_ROOT):
-        m = re.search(r"_p(\d+)$", d)
-        if m and (int(m.group(1)) == os.getpid() or _pid_alive(int(m.group(1)))):
-            continue
-        path = os.path.join(_BUCKET_ROOT, d)
-        if m is None:
-            # legacy un-suffixed dir: a still-running PRE-upgrade
-            # process could be reading it (the exact hazard class
-            # this convention fixes, live once during the version
-            # transition — r15 review). Only reap it once it is
-            # plausibly abandoned.
-            try:
-                if time.time() - os.path.getmtime(path) < 24 * 3600:
-                    continue
-            except OSError:
-                continue
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Create bucketed tables for orders/lineitem once per
-    (session, sf) inside a database whose LOCATION is repo-local —
-    the default warehouse is <caller cwd>/spark-warehouse, and
-    `option("path")` is not reliably honored by bucketed
-    saveAsTable (observed writing both locations). Table names carry
-    the sf tag so scale factors don't collide, and a ``_p<pid>``
-    suffix so CONCURRENT same-repo processes (sweep + pytest +
-    plan_audit) each build and read their own data dir — the data
-    location follows the table name, which is what makes the pid
-    isolation work where ``option("path")`` doesn't. Dead-pid
-    leftovers are swept on entry; normal exits clean their own dirs
-    via atexit (which also defuses pid-reuse resurrection)."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS dmr_bucket LOCATION '{_BUCKET_ROOT}'")
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    pid = os.getpid()
+    (session, sf) inside a per-fixture database whose LOCATION is
+    this process's scratch dir — the default warehouse is
+    <caller cwd>/spark-warehouse, and ``option("path")`` is not
+    reliably honored by bucketed saveAsTable (observed writing both
+    locations). The data location follows the table name."""
+    tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
+    db = f"dmr_bucket_{tag}"
+    root = scratch_path(sf_dir, "bucketed")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{root}'")
     specs = [
-        (f"dmr_bucket.orders_b_{tag}_p{pid}", "orders", "o_orderkey"),
-        (f"dmr_bucket.lineitem_b_{tag}_p{pid}", "lineitem", "l_orderkey"),
+        (f"{db}.orders_b", "orders", "o_orderkey"),
+        (f"{db}.lineitem_b", "lineitem", "l_orderkey"),
     ]
     for table, source, key in specs:
-        if spark.catalog.tableExists(table):
+        loc = os.path.join(root, table.split(".", 1)[1])
+        if spark.catalog.tableExists(table) and os.path.isdir(loc):
             continue
-        _sweep_stale_builds()
         # the in-memory catalog dies with the session but data files
-        # survive (same process, new session; or a crashed run under
-        # a reused pid) — clear the orphaned location before
-        # re-creating
-        loc = os.path.join(_BUCKET_ROOT, table.split(".", 1)[1])
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
+        # survive (same process, new session), and a removed scratch
+        # root leaves catalog entries without files — clear the
+        # location and re-create
+        shutil.rmtree(loc, ignore_errors=True)
         (
             load_table(spark, sf_dir, source)
             .write.bucketBy(N_BUCKETS, key)
@@ -112,7 +56,6 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .mode("overwrite")
             .saveAsTable(table)
         )
-        atexit.register(shutil.rmtree, loc, ignore_errors=True)
     return specs[0][0], specs[1][0]
 
 

@@ -18,20 +18,12 @@ the engine.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.catalog import load_table
 from dist_map_reduce_spark.registry import query
-
-# scratch helpers live in the scratch module; re-exported here for
-# existing importers (tests, streaming)
-from dist_map_reduce_spark.scratch import (  # noqa: E402,F401
-    SCRATCH,
-    scratch_path as _scratch,
-)
+from dist_map_reduce_spark.scratch import scratch_path
 
 
 @query(
@@ -52,7 +44,7 @@ def sink_text_wordcount_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     (one per partition), re-scan it with the text source, word count.
     Matches the documents-table oracle only if the text sink/source
     round-trip is lossless."""
-    out = _scratch(sf_dir, "docs_text")
+    out = scratch_path(sf_dir, "docs_text")
     docs = load_table(spark, sf_dir, "documents").select("text")
     docs.write.mode("overwrite").text(out)
     return (
@@ -77,7 +69,7 @@ def sink_json_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ND-JSON sink → JSON source (schema pinned, no inference) →
     aggregate. ND-JSON is the reference's intermediate shuffle format
     (src/worker/worker.go:157-163) — here it's just another sink."""
-    out = _scratch(sf_dir, "orders_json")
+    out = scratch_path(sf_dir, "orders_json")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 200_000
     )
@@ -99,7 +91,7 @@ def sink_json_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink (with header) → CSV source with explicit schema."""
-    out = _scratch(sf_dir, "customer_csv")
+    out = scratch_path(sf_dir, "customer_csv")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -124,7 +116,7 @@ def sink_parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     partition pruning available; aggregation over the round-trip.
     Hive-style partition columns come back as int32 — cast restores
     the year() type contract."""
-    out = _scratch(sf_dir, "orders_parquet_by_year")
+    out = scratch_path(sf_dir, "orders_parquet_by_year")
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "yr", F.year("o_orderdate")
     )
@@ -166,7 +158,7 @@ def sink_sorted_parquet_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_SORT_RANGES-row aggregate, no second full-data pass — then
     returns (n_files, ranges_disjoint, n_rows) against a constant
     oracle."""
-    out = _scratch(sf_dir, "events_sorted_ranges")
+    out = scratch_path(sf_dir, "events_sorted_ranges")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     (
         ev.repartitionByRange(N_SORT_RANGES, F.col("ts"), F.col("event_id"))

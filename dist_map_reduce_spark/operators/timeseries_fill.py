@@ -102,11 +102,15 @@ def _filled_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes the subtree (and re-scans events) per consumer. It
     # is grid-sized (O(buckets × series)), the smallest thing in the
     # plan, so caching it is what makes the events scan happen once.
+    # events is loaded OUTSIDE the builder: load_table pins the
+    # session zone to UTC, and ``bucket`` (a TIMESTAMP) renders in
+    # the session zone, so a warm slot hit must still run the pin.
+    events = load_table(spark, sf_dir, "events")
     obs = get_or_build(
         spark,
         "resample_obs_5m",
         sf_dir,
-        lambda: load_table(spark, sf_dir, "events")
+        lambda: events
         .groupBy("event_type", F.window("ts", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n_obs"), F.expr(sum_money("value", "s")))
         .select("event_type", F.col("w.start").alias("bucket"), "n_obs", "s"),

@@ -2,10 +2,12 @@
 
 Local test posture is ``local[N]`` (single JVM), but every config here
 is chosen to also be the right default on a large multi-executor
-cluster: AQE for runtime re-planning (coalesce small post-shuffle
-partitions, split skewed ones), Arrow for the Python boundary, UTC so
-results are oracle-comparable, and a shuffle-partition count sized to
-the data rather than Spark's legacy 200.
+cluster: Arrow for the Python boundary, UTC so results are
+oracle-comparable, and a shuffle-partition count sized to the data
+rather than Spark's legacy 200. AQE (coalescing small post-shuffle
+partitions, splitting skewed ones) is on by Spark's own default; the
+session sets only confs that differ from Spark's defaults
+(tests/test_session_conf.py).
 
 Spark's cache of compiled whole-stage-codegen classes holds 100
 entries by default. The registry's working set is far larger: one
@@ -76,9 +78,6 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-plan partitioning for persisted subtrees too
         # (dedup/similarity persist small intermediates; without this
         # their shuffles keep the raw shuffle-partition count)
@@ -112,7 +111,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.spill.compress", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -90,7 +90,6 @@ trap — see _accept_batch).
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import time
@@ -138,29 +137,17 @@ REPLAY_MARKER = "_REPLAY_DONE"
 
 
 def _replay_fingerprint(sf_dir: str, n_batches: int) -> str:
-    """Content fingerprint of everything that determines the replay's
-    output: the parameters, the SOURCE of this module, dedup_common
-    (band keys) and catalog (table resolution), plus a cheap stat
-    stamp of the documents fixture itself (name/size/mtime of each
-    parquet file — ADVICE r12: a regenerated fixture or a catalog
-    change must trigger a rebuild, not a confusing downstream hash
-    mismatch against a silently stale artifact). A code or data
-    change invalidates the shared artifact automatically — no manual
-    version bump to forget."""
+    """What determines the replay's output besides the code:
+    ``n_batches`` and a stat stamp (relative path, size, mtime) of
+    every file of the documents fixture, walked recursively, so a
+    fixture rewritten in place forces a rebuild instead of a silently
+    stale artifact."""
     import hashlib
 
     from dist_map_reduce_spark import catalog
-    from dist_map_reduce_spark.functions import dedup_common
 
     h = hashlib.md5()
-    for mod_file in (__file__, dedup_common.__file__, catalog.__file__):
-        with open(mod_file, "rb") as f:
-            h.update(f.read())
     doc = catalog.table_path(sf_dir, "documents")
-    # RECURSIVE walk (ADVICE r13): a nested/partitioned parquet dir
-    # rewritten in place changes only grandchild files — a top-level
-    # listdir stamp would miss that and silently reuse a stale replay
-    # artifact, the exact confusion this stamp exists to prevent.
     if os.path.isdir(doc):
         paths = sorted(
             os.path.join(root, fn)
@@ -173,147 +160,52 @@ def _replay_fingerprint(sf_dir: str, n_batches: int) -> str:
         st = os.stat(p)
         rel = os.path.relpath(p, os.path.dirname(doc))
         h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return f"n_batches={n_batches} src={h.hexdigest()}"
-
-
-def _sweep_dead_leftovers(work: str) -> None:
-    """Best-effort cleanup of sibling ``<work>.build-<pid>`` /
-    ``<work>.stale-<pid>`` dirs whose owning pid is no longer alive
-    (ADVICE r12: a crashed builder, or loser branch 2 below, leaves a
-    full private replay copy in scratch that nothing else deletes).
-    Live pids are left alone — a concurrent builder may still be
-    replaying into (or reading from) its private dir."""
-    parent, base = os.path.split(work)
-    try:
-        entries = os.listdir(parent)
-    except OSError:
-        return
-    for d in entries:
-        for tag in (".build-", ".stale-"):
-            prefix = base + tag
-            if d.startswith(prefix):
-                try:
-                    pid = int(d[len(prefix):])
-                except ValueError:
-                    continue
-                if pid == os.getpid():
-                    continue
-                try:
-                    os.kill(pid, 0)
-                except ProcessLookupError:
-                    shutil.rmtree(
-                        os.path.join(parent, d), ignore_errors=True
-                    )
-                except OSError:
-                    pass  # e.g. EPERM: pid exists under another uid
+    return f"n_batches={n_batches} docs={h.hexdigest()}"
 
 
 def ensure_shared_replay(
     spark: SparkSession, sf_dir: str, n_batches: int = N_INGEST_BATCHES
 ) -> str:
-    """Run (or reuse) the 3-wave ingestion replay in a SHARED scratch
-    dir and return its path. The replay output is a pure,
-    deterministic function of (fixture dir, n_batches, code) — md5
-    bucketing, min-doc_id keepers, no RNG, no clock — so both
-    streaming queries (``streaming_ingest_dedup`` certifies the sink,
+    """Run (or reuse) the 3-wave ingestion replay in this process's
+    scratch dir and return its path. The replay output is a pure,
+    deterministic function of (fixture, n_batches) — md5 bucketing,
+    min-doc_id keepers, no RNG, no clock — so both streaming queries
+    (``streaming_ingest_dedup`` certifies the sink,
     ``streaming_ingest_index_compaction`` certifies index
-    maintenance) and a bench's repeat runs can share ONE replay
-    instead of each paying the full foreachBatch harness (VERDICT r11
-    #6: the compaction query's 13 s was ~95% replay re-run).
+    maintenance) and a bench's repeat runs share ONE replay instead
+    of each paying the full foreachBatch harness.
 
-    Reuse is gated on a completion marker whose content fingerprints
-    the replay inputs (see ``_replay_fingerprint``): a crash mid-
-    replay leaves no marker (next caller rebuilds from scratch), and
-    a code change to the pipeline or the band math invalidates the
-    artifact automatically. Callers must treat the returned dir as
+    Reuse is gated on a completion marker holding
+    ``_replay_fingerprint``: a crash mid-replay, a changed fixture or
+    an outside ``rmtree`` of the dir leaves no matching marker, and
+    the next call rebuilds. Callers must treat the returned dir as
     READ-ONLY — mutating consumers (the compaction query) copy what
-    they mutate.
-
-    Concurrency (r12 self-review): two processes building into one
-    shared dir could interleave their streaming state and then
-    marker-certify the corruption durably. So each builder replays
-    into its OWN pid-suffixed build dir (marker written inside,
-    atomically) and publishes by renaming the completed dir into
-    place; os.rename refuses to clobber, so exactly one publisher
-    wins — the loser validates the winner's marker and reuses it,
-    falling back to its own private build dir (correct, just
-    unshared) if the published artifact doesn't match its
-    fingerprint. Dead builders' leftover ``.build-*``/``.stale-*``
-    dirs are swept on entry (live pids untouched).
-
-    Known limit (ADVICE r12, accepted under the documented
-    one-process-per-scratch-version assumption): processes running
-    DIFFERENT code versions invalidate each other — the stale-sweep
-    below rm's a published artifact whose fingerprint mismatches the
-    caller's, so a concurrent OLD-code process holding an unexecuted
-    lazy DataFrame over ``work/accepted`` can hit parquet re-listing
-    FileNotFound when a NEW-code process republishes. Same-version
-    concurrency is race-safe (tested); cross-version concurrency is
-    not a supported deployment."""
+    they mutate."""
     work = scratch_path(sf_dir, "ingest_replay_shared")
     marker = os.path.join(work, REPLAY_MARKER)
     fp = _replay_fingerprint(sf_dir, n_batches)
-    _sweep_dead_leftovers(work)
-
-    def _published_ok() -> bool:
-        try:
-            with open(marker) as f:
-                return f.read() == fp
-        except OSError:
-            return False
-
-    if _published_ok():
-        return work
-    build = f"{work}.build-{os.getpid()}"
-    shutil.rmtree(build, ignore_errors=True)
-    run_ingest_dedup(spark, sf_dir, build, n_batches)
-    tmp = os.path.join(build, REPLAY_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(fp)
-    os.replace(tmp, os.path.join(build, REPLAY_MARKER))
-    # publish: never clobber a live dir — a stale (fingerprint-
-    # mismatched) artifact is swept aside first, then the rename
-    # either wins or loses to a concurrent publisher
-    if os.path.isdir(work) and not _published_ok():
-        stale = f"{work}.stale-{os.getpid()}"
-        try:
-            os.rename(work, stale)
-        except OSError:
-            pass  # another process already moved/replaced it
-        shutil.rmtree(stale, ignore_errors=True)
     try:
-        os.rename(build, work)
-        return work
+        with open(marker) as f:
+            if f.read() == fp:
+                return work
     except OSError:
-        # lost the publish race: reuse the winner's artifact if it
-        # matches, else fall back to this process's private build
-        if _published_ok():
-            shutil.rmtree(build, ignore_errors=True)
-            return work
-        return build
+        pass
+    shutil.rmtree(work, ignore_errors=True)
+    run_ingest_dedup(spark, sf_dir, work, n_batches)
+    with open(marker, "w") as f:
+        f.write(fp)
+    return work
 
 
 def private_index_copy(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Run (or reuse) the shared replay and copy its band index into
-    a private work dir; return that dir (the copy is its
-    ``band_index``). The compaction queries mutate the index, and the
-    shared artifact is read-only by contract — copying also makes
-    every call compact the pristine post-replay index, not a previous
-    compaction's output.
-
-    The work dir is pid-suffixed (ADVICE r13): concurrent
-    same-version processes must not rmtree each other's copy
-    mid-read. Normal exits remove their own copy at exit (the
-    caller's plan is lazy, so deletion must wait until the process is
-    done reading); a crashed process's ``.build-<pid>`` copy is
-    reaped by ``_sweep_dead_leftovers`` on the next call."""
+    a work dir; return that dir (the copy is its ``band_index``). The
+    compaction queries mutate the index, and the shared artifact is
+    read-only by contract — copying also makes every call compact the
+    pristine post-replay index, not a previous compaction's output."""
     shared = ensure_shared_replay(spark, sf_dir)
-    base = scratch_path(sf_dir, name)
-    _sweep_dead_leftovers(base)
-    shutil.rmtree(base, ignore_errors=True)  # pre-r14 un-suffixed dir
-    work = f"{base}.build-{os.getpid()}"
+    work = scratch_path(sf_dir, name)
     shutil.rmtree(work, ignore_errors=True)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
     shutil.copytree(
         os.path.join(shared, "band_index"), os.path.join(work, "band_index")
     )

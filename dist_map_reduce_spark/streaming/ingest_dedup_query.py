@@ -78,10 +78,10 @@ from dist_map_reduce_spark.streaming.ingest_dedup import (
 )
 def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run (or reuse) the streaming replay end-to-end and return the
-    final accepted table. The replay runs in the SHARED artifact dir
-    (``ensure_shared_replay``): deterministic output, completion-
-    marker-gated, source-fingerprinted — a half-written dir from a
-    crash has no marker and is rebuilt from scratch, so the old
+    final accepted table. The replay runs in the process's shared
+    artifact dir (``ensure_shared_replay``): deterministic output,
+    completion-marker-gated — a half-written dir from a crash has no
+    marker and is rebuilt from scratch, so the old
     fresh-dir-per-run discipline is preserved exactly where it
     mattered (checkpoint/sink state from an INCOMPLETE run never
     short-circuits the stream), while the compaction query and a

@@ -174,9 +174,9 @@ def test_partitioned_sink_read_prunes_partitions(spark):
     from pyspark.sql import functions as F
 
     from dist_map_reduce_spark.catalog import load_table
-    from dist_map_reduce_spark.operators.sources_sinks import _scratch
+    from dist_map_reduce_spark.scratch import scratch_path
 
-    out = _scratch(SF_SMOKE, "orders_parquet_by_year")
+    out = scratch_path(SF_SMOKE, "orders_parquet_by_year")
     orders = load_table(spark, SF_SMOKE, "orders").withColumn(
         "yr", F.year("o_orderdate")
     )

@@ -8,13 +8,15 @@ Pipelines are defined against a SOURCE/SINK BINDING, not a concrete
 endpoint: every pipeline reads through ``read_events_stream`` and
 emits through ``run_sink``, which dispatch to the active ``Binding``.
 Every bounded stream, bound or not, drains through
-``run_available_now`` — the one place a stream is started, and so
-the one place state-partition sizing and the checkpoint-manager pin
-apply. Available bindings:
+``run_available_now`` — the one place a stream is started. It sizes
+the state shuffle from the file sources in the stream's own plan and
+pins the checkpoint manager, for that stream only; the module keeps
+no other state than the active binding. Available bindings:
 
-- ``FileSource`` (default): bounded replay of the parquet fixture —
-  deterministic, which is what makes the oracle comparison
-  possible. In production the same binding tails a landing directory.
+- ``FileSource`` (default): bounded replay of a fixture table, with
+  the catalog's schema — deterministic, which is what makes the
+  oracle comparison possible. In production the same binding tails a
+  landing directory.
 - ``MemorySink`` (default): the TEST adapter. Complete/update state
   is materialized on the driver, which is exactly what the oracle
   contract needs on bounded fixtures and exactly wrong at production
@@ -46,6 +48,7 @@ to a StatefulProcessor with one ValueState holding the same
 from __future__ import annotations
 
 import contextlib
+import fnmatch
 import os
 import re
 import shutil
@@ -57,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, table_path
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
 from dist_map_reduce_spark.scratch import scratch_path
@@ -78,36 +81,47 @@ from dist_map_reduce_spark.scratch import scratch_path
 # parallelism constant (keep multi-core nodes busy without
 # scattering tiny state across dozens of stores) and capped at 4x
 # the cluster's default parallelism — all three terms scale with
-# deployment, nothing is tuned to local[32].
+# deployment, nothing is tuned to local[32]. ``run_available_now``
+# applies it from the stream's own plan: the largest file source
+# sizes the stream (a stream-stream join's symmetric state follows
+# its larger input), and a source whose stream never starts sizes
+# nothing.
 _STATE_PART_BYTES = 32 << 20
-_SUGGESTED_PARTS: list[int] = []  # last FileSource.read suggestion
-# (path, glob) -> ((bytes, mtime), schema): footer-read memo
-_SCHEMA_MEMO: dict = {}
 
 
-def _mtime(path: str) -> int:
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return 0
-
-
-def _glob_bytes(path: str | None, sf_dir: str, glob: str) -> int:
-    """Total bytes of the files a FileSource stream will replay."""
-    import glob as globmod
-
-    if path is None:
-        files = globmod.glob(os.path.join(sf_dir, glob))
-    elif os.path.isdir(path):
-        files = [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(path)
+def _glob_bytes(path: str, glob: str | None) -> int:
+    """Total bytes a file stream over the directory ``path`` replays:
+    the data files under it whose names match ``glob`` (the stream's
+    ``pathGlobFilter``; None matches all)."""
+    total = 0
+    for dp, dirs, fs in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(
+            os.path.getsize(os.path.join(dp, f))
             for f in fs
             if not f.startswith(("_", "."))
-        ]
-    else:
-        files = [path]
-    return sum(os.path.getsize(f) for f in files if os.path.isfile(f))
+            and (glob is None or fnmatch.fnmatch(f, glob))
+        )
+    return total
+
+
+def _file_source_bytes(df: DataFrame) -> list[int]:
+    """Bytes of each file source the streaming ``df`` replays: one
+    entry per ``StreamingRelation`` leaf of its plan that carries a
+    ``path`` option, none for a stream without a file source."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sizes = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        options = leaf.dataSource().options()
+        path, glob = options.get("path"), options.get("pathGlobFilter")
+        if path.isDefined():
+            sizes.append(
+                _glob_bytes(path.get(), glob.get() if glob.isDefined() else None)
+            )
+    return sizes
 
 
 def state_partitions(spark: SparkSession, nbytes: int) -> int:
@@ -137,38 +151,6 @@ def _conf_scope(spark: SparkSession, settings: dict[str, str]):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, value)
-
-
-@contextlib.contextmanager
-def stream_shuffle_scope(spark: SparkSession):
-    """Apply the pending FileSource partition suggestion(s) around
-    ``run_available_now``'s start-and-drain, restoring the session
-    default afterwards so batch queries keep their AQE initial
-    partition count. No-op when no suggestion is pending (a source
-    whose volume is unknowable up front).
-
-    ADVICE r16 hardening: ALL pending suggestions are consumed and
-    the state shuffle sized by their MAX — a stream-stream join
-    builds two sources per invocation and its symmetric state must
-    be sized by the larger input, not whichever source happened to
-    be constructed last. The pending list is also cleared on scope
-    EXIT, so a source whose sink never started (query construction
-    failed in between) cannot leak its suggestion past the next
-    completed stream. Residual window (accepted): a suggestion from
-    a failed construction can still be read by a scope entered
-    before any other stream completes — it only over/under-sizes
-    that one stream's state shuffle, and the session value is
-    restored either way."""
-    suggestion = max(_SUGGESTED_PARTS) if _SUGGESTED_PARTS else None
-    _SUGGESTED_PARTS.clear()
-    settings = {}
-    if suggestion is not None:
-        settings["spark.sql.shuffle.partitions"] = str(suggestion)
-    try:
-        with _conf_scope(spark, settings):
-            yield
-    finally:
-        _SUGGESTED_PARTS.clear()
 
 
 # --- checkpoint file manager on local roots ---
@@ -210,13 +192,20 @@ def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Drain a bounded stream: start the caller-configured ``writer``
     (format, mode, options, foreachBatch) with an availableNow
     trigger and block until every input present at start is
-    processed, inside ``stream_shuffle_scope`` and, on a local
-    default filesystem, with the FileSystem checkpoint manager
-    pinned. The only place a stream is started
+    processed. For the start-and-drain only, the state shuffle is
+    sized by ``state_partitions`` from the largest file source in the
+    writer's plan (a stream with no file source keeps the session
+    value) and, on a local default filesystem, the FileSystem
+    checkpoint manager is pinned. The only place a stream is started
     (tests/test_stream_drain_guard.py)."""
-    with stream_shuffle_scope(spark), _conf_scope(
-        spark, _checkpoint_manager_settings(spark)
-    ):
+    settings = _checkpoint_manager_settings(spark)
+    # writer._df: the streaming DataFrame PySpark's writer was built on
+    sizes = _file_source_bytes(writer._df)
+    if sizes:
+        settings["spark.sql.shuffle.partitions"] = str(
+            state_partitions(spark, max(sizes))
+        )
+    with _conf_scope(spark, settings):
         writer.trigger(availableNow=True).start().awaitTermination()
 
 
@@ -275,84 +264,35 @@ def drain_versioned(
 
 @dataclass(frozen=True)
 class FileSource:
-    """Bounded file stream over the fixture directory (or, in
-    production, a landing directory files arrive into). ``path``
-    overrides the directory entirely (e.g. a staged multi-chunk
-    landing dir); otherwise the sf dir is streamed with a glob
-    picking out the events table (the file-stream source requires a
-    directory)."""
+    """Bounded file stream of the fixture table ``table`` (in
+    production, a landing directory files arrive into), with the
+    schema of the catalog's handle: ``events.ts`` arrives as
+    TIMESTAMP, which ``withWatermark`` requires. ``path`` overrides
+    the table with a directory of parquet files (e.g. a staged
+    multi-chunk landing dir), whose schema is read from its files."""
 
-    glob: str = "events.parquet"
+    table: str = "events"
     max_files_per_trigger: int | None = None
     path: str | None = None
 
     def read(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")  # see catalog.py
-        # pathGlobFilter matches FILES only: the fixture ships the
-        # table as a single file named <glob>, but a synthesized or
-        # production table is a DIRECTORY of part files under that
-        # name (the scale-probe corpus) — stream the directory
-        # itself in that case
-        path = self.path
-        if path is None:
-            cand = os.path.join(sf_dir, self.glob)
-            if os.path.isdir(cand):
-                path = cand
-        # pin the stream schema from a batch read of the SAME files
-        # the glob selects (not hard-coded to events: the stream may
-        # replay any fixture table, e.g. documents for wordcount).
-        # The footer read costs ~75 ms per call and a stream-stream
-        # join builds two sources per invocation — memoize per
-        # (path, glob, mtime), the catalog._DF_MEMO staleness
-        # contract (r16).
-        skey = (path or sf_dir, self.glob)
-        nbytes = _glob_bytes(path, sf_dir, self.glob)
-        stamp = nbytes, _mtime(path or sf_dir)
-        hit = _SCHEMA_MEMO.get(skey)
-        if hit is not None and hit[0] == stamp:
-            schema = hit[1]
-        elif path is not None:
-            schema = spark.read.parquet(path).schema
-            _SCHEMA_MEMO[skey] = (stamp, schema)
+        if self.path is not None:
+            path, schema = self.path, spark.read.parquet(self.path).schema
         else:
-            schema = (
-                spark.read.option("pathGlobFilter", self.glob)
-                .parquet(sf_dir)
-                .schema
-            )
-            _SCHEMA_MEMO[skey] = (stamp, schema)
+            path = table_path(sf_dir, self.table)
+            schema = load_table(spark, sf_dir, self.table).schema
         reader = spark.readStream.schema(schema).format("parquet")
-        if path is None:
-            reader = reader.option("pathGlobFilter", self.glob)
         if self.max_files_per_trigger is not None:
             reader = reader.option(
                 "maxFilesPerTrigger", str(self.max_files_per_trigger)
             )
-        # record the bytes-derived state-partition suggestion for the
-        # sink that will start this stream; APPEND, never replace —
-        # a stream-stream join builds two sources before one sink
-        # starts, and stream_shuffle_scope sizes by the max of all
-        # pending suggestions (ADVICE r16)
-        _SUGGESTED_PARTS.append(state_partitions(spark, nbytes))
-        return _normalize_ts(reader.load(path or sf_dir))
-
-
-def _normalize_ts(df: DataFrame) -> DataFrame:
-    """Naive timestamp[us] reads as TIMESTAMP_NTZ, which
-    withWatermark rejects — cast to TIMESTAMP (ltz) under the
-    pinned-UTC session, exactly as the batch catalog does. Streams
-    without a ts column (e.g. the documents corpus) pass through."""
-    if "ts" in df.columns and dict(df.dtypes).get("ts") != "timestamp":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
-_SINK_SEQ = 0
-# one live memory-sink table per pipeline name: repeated invocations
-# in a long-lived session drop the previous run's sink instead of
-# accumulating tables in the driver (same discipline as
-# the caching slots)
-_LAST_SINK: dict[str, str] = {}
+        if os.path.isdir(path):
+            return reader.load(path)
+        # the file-stream source requires a directory: a single-file
+        # table streams its directory with a filter picking the file
+        return reader.option("pathGlobFilter", os.path.basename(path)).load(
+            os.path.dirname(path)
+        )
 
 
 class MemorySink:
@@ -363,18 +303,15 @@ class MemorySink:
     there)."""
 
     def run(self, df: DataFrame, name: str, output_mode: str) -> DataFrame:
-        global _SINK_SEQ
-        _SINK_SEQ += 1
-        sink = f"{re.sub('[^a-zA-Z0-9_]', '_', name)}_{_SINK_SEQ}"
+        # the sink table is named after the pipeline: a rerun replaces
+        # the view, so a session keeps one sink table per pipeline,
+        # while a DataFrame read from an earlier run keeps its rows
+        sink = re.sub("[^a-zA-Z0-9_]", "_", name)
         spark = df.sparkSession
-        prev = _LAST_SINK.get(name)
-        if prev is not None:
-            spark.catalog.dropTempView(prev)
         run_available_now(
             spark,
             df.writeStream.outputMode(output_mode).format("memory").queryName(sink),
         )
-        _LAST_SINK[name] = sink
         return spark.table(sink)
 
 
@@ -518,8 +455,7 @@ def active_binding() -> Binding:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table through the active source
-    binding (schema pinned from the batch reader; ts normalized to
-    TIMESTAMP exactly as the batch catalog does)."""
+    binding."""
     return active_binding().source.read(spark, sf_dir)
 
 

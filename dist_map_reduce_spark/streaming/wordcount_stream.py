@@ -45,7 +45,7 @@ def streaming_wordcount_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's flagship, unbounded. Same tokenizer expression as the
     batch `wordcount` query; complete-mode state equals the batch
     answer once the replay drains."""
-    docs = FileSource(glob="documents.parquet").read(spark, sf_dir)
+    docs = FileSource(table="documents").read(spark, sf_dir)
     agg = (
         docs.select(F.explode(F.split("text", TOKEN_PATTERN)).alias("word"))
         .filter(F.col("word") != "")

@@ -225,34 +225,94 @@ def test_streaming_wordcount_equals_batch(spark):
     assert stream == batch and stream
 
 
-def test_shuffle_scope_sizes_by_max_pending_and_clears(spark):
-    """ADVICE r16: a stream-stream join registers TWO FileSource
-    suggestions before its sink starts — the scope must size the
-    state shuffle by the MAX of all pending suggestions (not the
-    last-built source) and leave nothing pending after exit, so a
-    source whose sink never started cannot leak its suggestion past
-    the next completed stream."""
-    from dist_map_reduce_spark.streaming import pipelines as P
+_PARTS_KEY = "spark.sql.shuffle.partitions"
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    P._SUGGESTED_PARTS.clear()
-    try:
-        P._SUGGESTED_PARTS.extend([4, 9])  # two sources, one query
-        with P.stream_shuffle_scope(spark):
-            assert spark.conf.get(key) == "9"
-        assert spark.conf.get(key) == prev
-        assert P._SUGGESTED_PARTS == []
-        # abandoned-construction suggestion is dropped at scope exit
-        P._SUGGESTED_PARTS.append(7)
-        with P.stream_shuffle_scope(spark):
-            P._SUGGESTED_PARTS.append(3)  # built mid-stream, sink dies
-        assert P._SUGGESTED_PARTS == []
-        with P.stream_shuffle_scope(spark):
-            assert spark.conf.get(key) == prev  # no stale suggestion
-    finally:
-        P._SUGGESTED_PARTS.clear()
-        spark.conf.set(key, prev)
+
+def _bytes(path: str) -> int:
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def _small_and_big_replays(spark, tmp_path, monkeypatch) -> tuple[str, str]:
+    """Two events replay dirs of different sizes, with the bytes per
+    state partition shrunk so the larger dir sizes near the cap and
+    the smaller one at the floor."""
+    events = load_table(spark, SF_SMOKE, "events")
+    small = str(tmp_path / "small")
+    events.limit(20).coalesce(1).write.parquet(small)
+    big = pipelines.stage_chunks(events, str(tmp_path / "big"), 2)
+    cores = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(pipelines, "_STATE_PART_BYTES", _bytes(big) // (3 * cores))
+    assert pipelines.state_partitions(spark, _bytes(small)) < (
+        pipelines.state_partitions(spark, _bytes(big))
+    )
+    return small, big
+
+
+def _parts_seen_by_batches(spark, stream, ckpt) -> set:
+    """Drain ``stream`` through run_available_now and return the
+    shuffle-partition values its micro-batches saw."""
+    seen = set()
+
+    def record(batch, _batch_id):
+        seen.add(int(batch.sparkSession.conf.get(_PARTS_KEY)))
+
+    pipelines.run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(record).option(
+            "checkpointLocation", str(ckpt)
+        ),
+    )
+    return seen
+
+
+def test_drain_sizes_stream_by_its_larger_file_source(
+    spark, tmp_path, monkeypatch
+):
+    """A stream over two file sources is sized by the larger one, from
+    the stream's own plan, and the session value is back after."""
+    small, big = _small_and_big_replays(spark, tmp_path, monkeypatch)
+    prev = spark.conf.get(_PARTS_KEY)
+    stream = (
+        pipelines.FileSource(path=small)
+        .read(spark, SF_SMOKE)
+        .unionByName(pipelines.FileSource(path=big).read(spark, SF_SMOKE))
+    )
+    seen = _parts_seen_by_batches(spark, stream, tmp_path / "ckpt")
+    assert seen == {pipelines.state_partitions(spark, _bytes(big))}
+    assert spark.conf.get(_PARTS_KEY) == prev
+
+
+def test_rejected_sink_leaves_nothing_to_size_the_next_stream(
+    spark, tmp_path, monkeypatch
+):
+    """A FileSource stream whose sink was rejected before it started
+    does not size the next stream that drains: that stream is sized
+    by its own source."""
+    small, big = _small_and_big_replays(spark, tmp_path, monkeypatch)
+    merge = pipelines.ForeachBatchMergeSink(
+        base_dir=str(tmp_path / "rejected"), keys=("not_a_column",)
+    )
+    rejected = (
+        pipelines.FileSource(path=big)
+        .read(spark, SF_SMOKE)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    with pytest.raises(ValueError, match="not_a_column"):
+        merge.run(rejected, "rejected", "update")
+    stream = (
+        spark.readStream.schema(spark.read.parquet(small).schema)
+        .format("parquet")
+        .load(small)
+    )
+    seen = _parts_seen_by_batches(spark, stream, tmp_path / "ckpt")
+    assert seen == {pipelines.state_partitions(spark, _bytes(small))}
 
 
 def test_multibatch_counts_restage_after_source_rewrite(spark, tmp_path):
@@ -340,6 +400,7 @@ def test_drain_keeps_caller_set_checkpoint_manager(spark, tmp_path):
 
 def test_drain_restores_checkpoint_manager_when_start_raises(spark):
     class FailingWriter:
+        _df = pipelines.FileSource().read(spark, SF_SMOKE)
         pinned = None
 
         def trigger(self, **_):

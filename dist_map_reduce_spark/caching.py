@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from dist_map_reduce_spark import registry
+
 _SLOTS: dict[str, tuple[str, DataFrame]] = {}
 
 
@@ -142,8 +144,9 @@ def get_or_build(spark, slot: str | tuple[str, ...], key: str | None, build):
     construction alone costs ~0.5 s of plan analysis per invocation.
 
     A ``None`` key means the input is not a fixture dir (crafted
-    corpora in tests): nothing is looked up or stored, and ``build()``
-    is returned as it is.
+    corpora in tests): nothing is looked up or stored, ``build()`` is
+    returned as it is, and the running query construction is not
+    plan-cached (``registry``).
 
     ``slot`` may be a tuple of names, with ``build()`` returning a
     tuple of the same length: all slots must hit to skip ``build``,
@@ -156,23 +159,31 @@ def get_or_build(spark, slot: str | tuple[str, ...], key: str | None, build):
     globals, so wrapping them (the benchmark's tracer does) observes
     every slot hit and build."""
     if key is None:
+        registry.note_unstorable()
         return build()
     single = isinstance(slot, str)
     names = (slot,) if single else slot
     out = [peek(s, key, session=spark) for s in names]
     if any(df is None for df in out):
-        built = build()
-        out = [
-            df if _SLOTS.get(s, (None, None))[1] is df
-            else persist_tracked(df, s, key)
-            for s, df in zip(names, (built,) if single else built)
-        ]
+        with registry.slot_build(spark):
+            built = build()
+            out = [
+                df if _SLOTS.get(s, (None, None))[1] is df
+                else persist_tracked(df, s, key)
+                for s, df in zip(names, (built,) if single else built)
+            ]
+    for s, df in zip(names, out):
+        registry.note_slot(s, key, df)
     return out[0] if single else tuple(out)
 
 
 def clear() -> None:
-    """Unpersist every tracked entry (e.g. after source data
-    changed in place)."""
+    """Unpersist every tracked entry and drop every stored query plan
+    (``registry.PLANS``), so the next call of each query constructs
+    its plan again. Call it after source data changed in place: a
+    slot's key does not see the change, and a stored plan that reads
+    the slot would keep returning the old snapshot."""
     for _, df in _SLOTS.values():
         _discard(df)
     _SLOTS.clear()
+    registry.PLANS.clear()

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark import registry
+
 # The ten driver fixture tables (TESTDATA.md / FIXTURES.md).
 TABLES: tuple[str, ...] = (
     "region",
@@ -83,11 +85,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stamp = _path_stamp(path)
     hit = _DF_MEMO.get((sf_dir, name))
     if hit is not None and hit[0] is spark and hit[1] == stamp:
-        return hit[2]
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") != "timestamp":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _DF_MEMO[(sf_dir, name)] = (spark, stamp, df)
+        df = hit[2]
+    else:
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") != "timestamp":
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        _DF_MEMO[(sf_dir, name)] = (spark, stamp, df)
+    registry.note_table(sf_dir, name, df)
     return df
 
 

@@ -73,16 +73,6 @@ from dist_map_reduce_spark.functions.dedup_common import (  # noqa: E402,F401
 )
 
 
-def _tune_cached_plans(df: DataFrame) -> None:
-    """Persisted subtrees keep their raw shuffle-partition count
-    unless AQE is allowed to re-plan cached output partitioning —
-    set it for caller-owned sessions (engine sessions already do,
-    session.py)."""
-    df.sparkSession.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-
-
 @query(
     "dedup_exact_docs",
     oracle="""
@@ -215,7 +205,6 @@ def minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all four union arms of the long form plus both cap phases —
     # without this Spark recomputes the whole shingle→md5→min
     # pipeline per consumer.
-    _tune_cached_plans(docs)
     wide = get_or_build(spark, "minhash_banded", sf_dir, lambda: _banded_wide(docs))
     return _pairs_within_keys(_bands_long(wide), ["band_id", "band_key"])
 
@@ -295,7 +284,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported Jaccard is over the informative shingle sets — standard
     production-dedup semantics, mirrored exactly in the oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    _tune_cached_plans(docs)
     # the capped inverted index is grouped ONCE and persisted; both
     # the per-doc set sizes and the candidate pairs derive from the
     # cached postings (no second pass over the raw shingle strings)

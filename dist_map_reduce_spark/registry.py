@@ -14,13 +14,47 @@ name), so every computed column is aliased on both sides.
 Importing this module imports no query module: only ``load_all()``
 does, so callers can patch engine layers (``catalog``, ``caching``)
 before the query modules bind their names.
+
+Plan cache. Like the reference, which builds its task functions once
+and calls them for every task, a query's DataFrame plan is built once
+and reused while nothing it was built from has changed. ``QUERIES``
+holds a wrapper around each query function (the module keeps the
+plain function); ``PLANS`` keeps at most one plan per query name. A
+hit returns a NEW DataFrame over the stored analyzed plan: it skips
+plan construction, but every action still plans and runs in full
+(re-running one DataFrame object would reuse its shuffle outputs).
+
+What a construction depended on is reported by the engine's four
+single entry points: ``catalog.load_table`` (table -> handle),
+``caching.get_or_build`` (slot, key -> entry), ``scratch.scratch_path``
+and ``streaming.pipelines.run_available_now``. A call hits when all of
+these hold:
+
+  - the same session object and ``sf_dir``;
+  - every recorded table, replayed through ``catalog.load_table``,
+    returns the same handle (a rewritten file misses; the events zone
+    pin is re-applied);
+  - every recorded slot ``caching.peek``s to the same entry;
+  - the hash of the session's SQL confs, taken after those replays,
+    equals the hash taken right after construction.
+
+A construction is never stored if it touched ``scratch_path`` (a sink
+write), started a stream, took a ``key=None`` slot, or launched a
+Spark job outside a ``get_or_build`` miss. What happens inside a miss
+is the slot's business, since the slot is already the cached
+materialisation: its jobs, tables and artifacts are not the query's.
+``caching.clear()`` drops every plan.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import importlib
 import pkgutil
 from collections.abc import Callable
+from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,18 +63,150 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
+
+class Plan(NamedTuple):
+    """A stored construction: what it was built from, and its plan."""
+
+    spark: SparkSession
+    sf_dir: str
+    tables: dict  # (sf_dir, table) -> handle
+    slots: dict  # slot -> (key, entry)
+    conf_hash: int
+    jplan: object  # the analyzed JVM LogicalPlan
+
+
+PLANS: dict[str, Plan] = {}
+
+
+@dataclass
+class _Construction:
+    """What one running construction has depended on so far."""
+
+    jobs0: int
+    tables: dict = field(default_factory=dict)
+    slots: dict = field(default_factory=dict)
+    storable: bool = True
+    slot_jobs: int = 0  # jobs run inside get_or_build misses
+    depth: int = 0  # get_or_build misses entered and not yet left
+
+
+# the constructions running now, outermost first (a query may call
+# another registered query while it builds)
+_OPEN: list[_Construction] = []
+
+
+def _recording() -> list[_Construction]:
+    """The running constructions a dependency counts for: those not
+    inside a slot build."""
+    return [c for c in _OPEN if c.depth == 0]
+
+
+def note_table(sf_dir: str, name: str, df: DataFrame) -> None:
+    """``catalog.load_table`` returned handle ``df`` for the table."""
+    for c in _recording():
+        c.tables[(sf_dir, name)] = df
+
+
+def note_slot(slot: str, key: str, df: DataFrame) -> None:
+    """``caching.get_or_build`` returned entry ``df`` for the slot."""
+    for c in _recording():
+        c.slots[slot] = (key, df)
+
+
+def note_unstorable() -> None:
+    """The running construction wrote an artifact, started a stream or
+    built without a slot: never store it."""
+    for c in _recording():
+        c.storable = False
+
+
+@contextlib.contextmanager
+def slot_build(spark: SparkSession):
+    """Scope of a ``get_or_build`` miss: its jobs and dependencies are
+    the slot's, not the running constructions'."""
+    outer = _recording()
+    if not outer:
+        yield
+        return
+    for c in outer:
+        c.depth += 1
+    jobs0 = _jobs(spark)
+    try:
+        yield
+    finally:
+        ran = _jobs(spark) - jobs0
+        for c in outer:
+            c.depth -= 1
+            c.slot_jobs += ran
+
+
+def _jobs(spark: SparkSession) -> int:
+    """Spark jobs this context has submitted so far."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _conf_hash(spark: SparkSession) -> int:
+    return spark._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+
+
+def _current(plan: Plan, spark: SparkSession, sf_dir: str) -> bool:
+    """Whether everything ``plan`` was built from is unchanged. Tables
+    and slots are replayed through the module attributes, as query
+    modules reach them."""
+    # imported here: both modules import this one
+    from dist_map_reduce_spark import caching, catalog
+
+    if plan.spark is not spark or plan.sf_dir != sf_dir:
+        return False
+    for (sf, name), handle in plan.tables.items():
+        if catalog.load_table(spark, sf, name) is not handle:
+            return False
+    for slot, (key, entry) in plan.slots.items():
+        if caching.peek(slot, key, session=spark) is not entry:
+            return False
+    return _conf_hash(spark) == plan.conf_hash
+
+
+def _cached(name: str, fn: QueryFn) -> QueryFn:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        plan = PLANS.get(name)
+        if plan is not None and _current(plan, spark, sf_dir):
+            # an enclosing construction depends on what this plan does
+            for slot, (key, entry) in plan.slots.items():
+                note_slot(slot, key, entry)
+            jds = spark._jvm.org.apache.spark.sql.classic.Dataset
+            return DataFrame(jds.ofRows(spark._jsparkSession, plan.jplan), spark)
+        PLANS.pop(name, None)
+        c = _Construction(jobs0=_jobs(spark))
+        _OPEN.append(c)
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            _OPEN.pop()
+        if c.storable and _jobs(spark) - c.jobs0 == c.slot_jobs:
+            PLANS[name] = Plan(
+                spark, sf_dir, c.tables, c.slots, _conf_hash(spark),
+                df._jdf.logicalPlan(),
+            )
+        return df
+
+    return run
+
+
 # subpackages whose every module may register queries
 _PACKAGES = ("functions", "operators", "streaming")
 
 
 def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     """Register a query with its oracle, DuckDB SQL over the fixture
-    views (``parity.duck_views``)."""
+    views (``parity.duck_views``). ``QUERIES`` gets the plan-caching
+    wrapper; the decorated name keeps the plain function."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+        QUERIES[name] = _cached(name, fn)
         ORACLES[name] = oracle
         return fn
 

@@ -24,6 +24,8 @@ import os
 import re
 import shutil
 
+from dist_map_reduce_spark import registry
+
 # repo-local scratch (gitignored); never touches /root/testdata
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
@@ -36,7 +38,10 @@ _claimed_pid: int | None = None
 
 def scratch_path(sf_dir: str, name: str) -> str:
     """This process's path for artifact ``name`` of input ``sf_dir``;
-    ``scratch_path(sf_dir, "")`` is the root holding all of them."""
+    ``scratch_path(sf_dir, "")`` is the root holding all of them. A
+    query construction that asks for a path is never plan-cached
+    (``registry``): the artifact is rewritten on every call."""
+    registry.note_unstorable()
     if _claimed_pid != os.getpid():
         _claim()
     sf_tag = os.path.basename(os.path.normpath(sf_dir))

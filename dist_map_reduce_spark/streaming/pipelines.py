@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from dist_map_reduce_spark import registry
 from dist_map_reduce_spark.catalog import load_table, table_path
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
@@ -166,11 +167,19 @@ def _conf_scope(spark: SparkSession, settings: dict[str, str]):
 # unavailable) commits the same files without the forks. Other
 # schemes keep Spark's default, which gives HDFS an atomic
 # overwrite-rename. A caller-set manager always wins.
+#
+# On the same roots Spark 4.1's own checkpoint checksum is switched
+# off: Hadoop's LocalFileSystem already writes and verifies a `.crc`
+# for every checkpoint file, and Spark's extra `<v>.delta.crc` (with
+# its own `.crc`) doubled every state-store write, each create one
+# more `chmod` fork. A corrupted delta still fails its next read with
+# Hadoop's checksum error. A caller-set value wins here too.
 _CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 _FS_CKPT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+_CKPT_CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
 
 def is_local_fs(default_fs: str) -> bool:
@@ -185,7 +194,10 @@ def _checkpoint_manager_settings(spark: SparkSession) -> dict[str, str]:
     hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
     if not is_local_fs(hadoop_conf.get("fs.defaultFS")):
         return {}
-    return {_CKPT_MANAGER_KEY: _FS_CKPT_MANAGER}
+    settings = {_CKPT_MANAGER_KEY: _FS_CKPT_MANAGER}
+    if not spark._jsparkSession.sessionState().conf().contains(_CKPT_CHECKSUM_KEY):
+        settings[_CKPT_CHECKSUM_KEY] = "false"
+    return settings
 
 
 def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
@@ -196,8 +208,11 @@ def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     sized by ``state_partitions`` from the largest file source in the
     writer's plan (a stream with no file source keeps the session
     value) and, on a local default filesystem, the FileSystem
-    checkpoint manager is pinned. The only place a stream is started
-    (tests/test_stream_drain_guard.py)."""
+    checkpoint manager is pinned and Spark's checkpoint checksum
+    switched off. The only place a stream is started
+    (tests/test_stream_drain_guard.py), so a query construction that
+    drains a stream is never plan-cached (``registry``)."""
+    registry.note_unstorable()
     settings = _checkpoint_manager_settings(spark)
     # writer._df: the streaming DataFrame PySpark's writer was built on
     sizes = _file_source_bytes(writer._df)

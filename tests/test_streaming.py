@@ -414,3 +414,34 @@ def test_drain_restores_checkpoint_manager_when_start_raises(spark):
         pipelines.run_available_now(spark, FailingWriter())
     assert FailingWriter.pinned == pipelines._FS_CKPT_MANAGER
     assert spark.conf.get(_CKPT_KEY, None) is None
+
+
+def test_state_deltas_keep_hadoop_checksum_only(spark, tmp_path):
+    """On a local root each state delta carries Hadoop's hidden
+    ``.<v>.delta.crc`` and not Spark's second ``<v>.delta.crc``; a
+    flipped byte in a committed delta still fails the next run."""
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    rows = spark.range(40).withColumn("k", F.col("id") % 4)
+    rows.write.parquet(str(src))
+
+    def drain():
+        stream = spark.readStream.schema(rows.schema).parquet(str(src))
+        pipelines.run_available_now(
+            spark,
+            stream.groupBy("k").count().writeStream.outputMode("update")
+            .foreachBatch(lambda batch, _id: batch.collect())
+            .option("checkpointLocation", str(ckpt)),
+        )
+
+    drain()
+    deltas = sorted((ckpt / "state").rglob("1.delta"))
+    assert deltas
+    for delta in deltas:
+        assert (delta.parent / ".1.delta.crc").exists()
+        assert not (delta.parent / "1.delta.crc").exists()
+        data = bytearray(delta.read_bytes())
+        data[len(data) // 2] ^= 0xFF
+        delta.write_bytes(bytes(data))
+    rows.write.mode("append").parquet(str(src))
+    with pytest.raises(Exception, match="(?i)checksum"):
+        drain()

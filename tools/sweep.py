@@ -9,6 +9,13 @@ With names it checks only those queries (the one-query loop while
 developing an oracle) and exits 2 on a name it does not know; with
 none it checks all of them.
 
+Each query is called and checked twice in the one session: cold,
+then warm, so the registry's plan cache is oracle-checked too. The
+line gives both times and ``memo=``: whether the warm call reused the
+cold call's stored plan (``hit``) or constructed it again (``miss``:
+the construction is never stored, or the first one ran a job outside
+a slot build, such as the first footer read of a table).
+
 This is the repo-local replica of the driver's correctness gate,
 runnable at ANY scale factor — run it at sf0.1 after touching any
 rounded/float output path (two real boundary bugs — pandas
@@ -64,16 +71,25 @@ def main() -> int:
 
     bad: list[str] = []
     times: dict[str, float] = {}
+    hits = 0
     for name in names:
-        t0 = time.perf_counter()
-        sp = registry.QUERIES[name](spark, sf_dir).toPandas()
-        times[name] = time.perf_counter() - t0
-        problems = compare(sp, con.execute(registry.ORACLES[name]).fetchdf())
+        want = con.execute(registry.ORACLES[name]).fetchdf()
+        problems, secs = [], []
+        for call in ("cold", "warm"):
+            stored = registry.PLANS.get(name)
+            t0 = time.perf_counter()
+            sp = registry.QUERIES[name](spark, sf_dir).toPandas()
+            secs.append(time.perf_counter() - t0)
+            problems += [f"{call}: {p}" for p in compare(sp, want)]
+        hit = stored is not None and registry.PLANS.get(name) is stored
+        hits += hit
+        times[name] = secs[0]
         if problems:
             bad.append(name)
         print(
             f"{name}: {'MISMATCH' if problems else 'MATCH'}"
-            f" ({len(sp)} rows) {times[name]:.2f}s"
+            f" ({len(sp)} rows) {secs[0]:.2f}s, warm {secs[1]:.2f}s"
+            f" memo={'hit' if hit else 'miss'}"
         )
         for p in problems:
             print("  " + p)
@@ -81,7 +97,10 @@ def main() -> int:
     print("\nslowest under the foreign session:")
     for name, t in sorted(times.items(), key=lambda x: -x[1])[:10]:
         print(f"  {t:7.2f}s  {name}")
-    print(f"\nchecked {len(names)} oracles at {sf_dir}; mismatches: {bad}")
+    print(
+        f"\nchecked {len(names)} oracles twice each at {sf_dir}"
+        f" ({hits} warm calls hit the plan cache); mismatches: {bad}"
+    )
     return 1 if bad else 0
 
 

@@ -25,6 +25,11 @@ driver JVM too). A warm repeat that still compiles missed Spark's
 compiled-class cache, which ``session.get_spark`` sizes to the
 registry's working set.
 
+And ``memo=``: ``hit`` when the call reused the query's stored plan
+from the registry's plan cache (no plan construction, the action
+still runs in full), ``miss`` when it constructed the plan. A warm
+number is a plan-cache hit unless the query is never stored.
+
 Runs on the ENGINE session (session.get_spark), like bench.py.
 """
 
@@ -104,12 +109,16 @@ def main() -> int:
         forks: list[int] = []
         child_cpu: list[float] = []
         compiles: list[int] = []
+        memo: list[str] = []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             before = fork_counters(jvm_pid)
             compiled = compile_count(spark)
+            stored = registry.PLANS.get(name)
             t0 = time.perf_counter()
             d = fn(spark, sf_dir)
+            hit = stored is not None and registry.PLANS.get(name) is stored
+            memo.append("hit" if hit else "miss")
             if use_noop:
                 d.write.format("noop").mode("overwrite").save()
             else:
@@ -129,6 +138,7 @@ def main() -> int:
             line += " forks=" + ",".join(map(str, forks))
             line += " child_cpu=" + ",".join(f"{c:.2f}s" for c in child_cpu)
         line += " compiles=" + ",".join(map(str, compiles))
+        line += " memo=" + ",".join(memo)
         print(line)
     return 0
 

@@ -165,7 +165,7 @@ def get_or_build(spark, slot: str | tuple[str, ...], key: str | None, build):
     names = (slot,) if single else slot
     out = [peek(s, key, session=spark) for s in names]
     if any(df is None for df in out):
-        with registry.slot_build(spark):
+        with registry.memo_build(spark):
             built = build()
             out = [
                 df if _SLOTS.get(s, (None, None))[1] is df

@@ -5,9 +5,18 @@ src/master/master.go:327-339) generalizes here to self-describing
 Parquet tables (FIXTURES.md). Spark's FileSourceScanExec handles
 split planning, predicate pushdown, and column pruning — the
 per-file map-task enumeration the reference does by hand.
+
+Like the reference, which hands every task its input files
+explicitly (``mapf(filename, contents)``), a query's SQL text gets
+its tables as DataFrame arguments (``run_sql``): no query creates,
+replaces or reads a temp view, so nothing a caller binds in its own
+session can change a query's input. ``register_views`` binds the
+fixture views for a caller's own SQL only.
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,7 +96,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if hit is not None and hit[0] is spark and hit[1] == stamp:
         df = hit[2]
     else:
-        df = spark.read.parquet(path)
+        # the footer read's schema job is the memo entry's, like a
+        # slot build's: replaying load_table covers what it read
+        with registry.memo_build(spark):
+            df = spark.read.parquet(path)
         if name == "events" and dict(df.dtypes).get("ts") != "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         _DF_MEMO[(sf_dir, name)] = (spark, stamp, df)
@@ -99,26 +111,31 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-# last (session, sf_dir) whose fixture views were registered — view
-# re-registration is skipped only when BOTH match and every memo'd
-# handle is current (same staleness contract as _DF_MEMO)
-_VIEWS_FOR: list = [None, None]
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view (for the SQL API).
-    Re-registration for the same (session, fixture dir, file stamps)
-    is a no-op: every in-repo createOrReplaceTempView of a
-    fixture-table NAME registers exactly a load_table handle, so the
-    existing views are already the ones this call would create. A
-    rewritten table (stamp change — scale-probe synthesis) forces
-    re-registration because the memo'd handles rebuilt."""
+    """Bind each fixture table as a temp view under its own name, for
+    a caller's own SQL. No engine query reads these views."""
     dfs = load_tables(spark, sf_dir)
-    key = (sf_dir, tuple(_path_stamp(table_path(sf_dir, n)) for n in TABLES))
-    if _VIEWS_FOR[0] is spark and _VIEWS_FOR[1] == key:
-        return dfs
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-    _VIEWS_FOR[0] = spark
-    _VIEWS_FOR[1] = key
     return dfs
+
+
+def _fields(text: str) -> set[str]:
+    return {f for _, f, _, _ in string.Formatter().parse(text) if f}
+
+
+def run_sql(spark: SparkSession, sf_dir: str, text: str, **frames) -> DataFrame:
+    """Run SQL ``text`` whose ``{name}`` fields are its relations: each
+    binds the DataFrame in ``frames``, or else fixture table ``name``.
+    PySpark binds DataFrame arguments as ``_pyspark_<uuid>`` views and
+    drops them once the query is analyzed, so no view outlives the
+    call and none of the caller's views can shadow an input."""
+    for name in _fields(text) - frames.keys():
+        frames[name] = load_table(spark, sf_dir, name)
+    return spark.sql(text, **frames)
+
+
+def plain_sql(text: str) -> str:
+    """``text`` with every field spelled as its name: the oracle's
+    spelling of a ``run_sql`` template."""
+    return text.format(**{n: n for n in _fields(text)})

@@ -121,14 +121,19 @@ def minhash_sig_rowwise(docs: DataFrame) -> DataFrame:
             for s in range(_N_SALTS)
         ],
     )
+    # md5 hex is fixed-width lowercase, so string order is numeric
+    # order: take the minimum slice on the hex strings and convert only
+    # it. The min digest's first 8 characters are the min first slice.
     min_exprs = []
     for j in range(N_HASHES):
         s, off = _slice(j)
+        low = (
+            f"substring(array_min(m{s}), 1, 8)"
+            if off == 1
+            else f"array_min(transform(m{s}, x -> substring(x, {off}, 8)))"
+        )
         min_exprs.append(
-            F.expr(
-                f"array_min(transform(m{s}, "
-                f"x -> cast(conv(substring(x, {off}, 8), 16, 10) as bigint)))"
-            ).alias(f"h{j}")
+            F.expr(f"cast(conv({low}, 16, 10) as bigint)").alias(f"h{j}")
         )
     return salted.select("doc_id", *min_exprs)
 

@@ -26,6 +26,8 @@ spelling (Spark ``conv(substring(md5(..)))`` vs DuckDB
 same single-source-of-truth discipline as recursion.py's integer
 division) — the filter keeps the output audit-sized (1 of 16
 md5 buckets of customers) without losing any per-key semantics.
+Spark binds customer and orders as DataFrame arguments
+(``catalog.run_sql``); DuckDB reads the plain names.
 
 Reference parity: the reference has no join surface at all (word
 count only, /root/reference/src/worker/worker.go:270-288);
@@ -36,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import run_sql
 from dist_map_reduce_spark.registry import query
 
 TOP_N = 2
@@ -53,9 +55,10 @@ _DUCK_HASH = (
 
 
 def _lateral_sql(cust: str, orders: str, hash_expr: str) -> str:
-    """Shared text; ``cust``/``orders`` are the relation names and
-    ``hash_expr`` the dialect's hex-parse of the customer md5 (the
-    ONLY dialect differences)."""
+    """Shared text; ``cust``/``orders`` are the relations (plain names
+    for DuckDB, ``run_sql`` fields for Spark) and ``hash_expr`` the
+    dialect's hex-parse of the customer md5 (the ONLY dialect
+    differences)."""
     return f"""
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice, t.rk
     FROM {cust} c, LATERAL (
@@ -70,12 +73,6 @@ def _lateral_sql(cust: str, orders: str, hash_expr: str) -> str:
     """
 
 
-# query-private view names (the recursion.py discipline — never
-# shadow the shared fixture view names in a long-lived session)
-_CUST_VIEW = "lateral_customer_v"
-_ORD_VIEW = "lateral_orders_v"
-
-
 @query(
     "lateral_topn_orders_per_customer",
     oracle=_lateral_sql("customer", "orders", _DUCK_HASH),
@@ -87,8 +84,6 @@ def lateral_topn_orders_per_customer(
     customer's top-2 orders by price via a correlated LATERAL
     subquery with LIMIT — decorrelated by Spark into WindowGroupLimit
     + one equi-join (plan-pinned)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        _CUST_VIEW
+    return run_sql(
+        spark, sf_dir, _lateral_sql("{customer}", "{orders}", _SPARK_HASH)
     )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(_ORD_VIEW)
-    return spark.sql(_lateral_sql(_CUST_VIEW, _ORD_VIEW, _SPARK_HASH))

@@ -32,7 +32,9 @@ root count, and exact DECIMAL-accumulated revenue per depth
 (money.sum_money — the engine-order-independent sum). The SQL text
 is shared between engines except for the integer-division spelling
 (Spark ``DIV`` vs DuckDB ``//``), the single-source-of-truth
-discipline of money.py.
+discipline of money.py. DuckDB reads the orders table by name; Spark
+binds the persisted (key, price) projection of it as a DataFrame
+argument (``catalog.run_sql``), so no view is created.
 
 Reference parity: the reference has no recursion or iteration
 surface at all (one-shot map/reduce word count,
@@ -47,14 +49,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from dist_map_reduce_spark.caching import get_or_build
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, run_sql
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
 
 
 def _lineage_sql(table: str, intdiv: str, hint: str = "MERGE(l)") -> str:
     """The shared recursive-traversal text: ``table`` is the orders
-    relation name, ``intdiv`` the dialect's integer-division operator
+    relation (the plain name for DuckDB, a ``run_sql`` field for
+    Spark), ``intdiv`` the dialect's integer-division operator
     (the ONLY dialect difference). ``hint`` pins the recursive arm's
     join strategy on the Spark side (DuckDB reads any hint as a plain
     comment); an empty string drops the hint clause entirely."""
@@ -119,9 +122,6 @@ def _orders_rows(sf_dir: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-_VIEW = "recursion_orders_v"  # query-private temp view name
-
-
 @query(
     "recursive_order_lineage",
     oracle=_lineage_sql("orders", "//"),
@@ -161,12 +161,14 @@ def recursive_order_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-paid the parquet scan; a persisted (key, price) projection
     # turns those into in-memory scans (r16, guide §2.4/§5 — reuse
     # across ~36 reads easily clears the caching bar)
-    get_or_build(
+    narrow = get_or_build(
         spark,
         "recursion_orders_narrow",
         sf_dir,
         lambda: load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         ),
-    ).createOrReplaceTempView(_VIEW)
-    return spark.sql(_lineage_sql(_VIEW, "DIV", hint=hint))
+    )
+    return run_sql(
+        spark, sf_dir, _lineage_sql("{orders}", "DIV", hint=hint), orders=narrow
+    )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, plain_sql, run_sql
 from dist_map_reduce_spark.money import (
     sum_charge,
     sum_disc_price,
@@ -401,25 +401,18 @@ def cube_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grouping_sets_orders",
-    oracle="""
+_GROUPING_SETS = """
     SELECT o_orderstatus, o_orderpriority, count(*) AS n
-    FROM orders
+    FROM {orders}
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-    """,
-)
+    """
+
+
+@query("grouping_sets_orders", oracle=plain_sql(_GROUPING_SETS))
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API (same Catalyst Expand
     operator as rollup/cube)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
-    )
+    return run_sql(spark, sf_dir, _GROUPING_SETS)
 
 
 @query(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, run_sql
 from dist_map_reduce_spark.money import sum_money
 from dist_map_reduce_spark.registry import query
 
@@ -162,9 +162,9 @@ def events_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE pass: GROUPING SETS over (day) and (hour) — Catalyst's Expand
     reads the fact table once and feeds both rollups, vs. the oracle's
     two-scan UNION ALL."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("events")
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         f"""
         SELECT date_trunc('day', ts)  AS day,
                date_trunc('hour', ts) AS hour,
@@ -172,7 +172,7 @@ def events_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
                     THEN 'day' ELSE 'hour' END AS grain,
                count(*) AS n,
                {sum_money("value", "sum_value")}
-        FROM events
+        FROM {{events}}
         GROUP BY GROUPING SETS ((date_trunc('day', ts)), (date_trunc('hour', ts)))
         """
     )

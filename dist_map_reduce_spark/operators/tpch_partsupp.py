@@ -14,10 +14,12 @@ per observed (partkey, suppkey) pair with
 — and runs the five canonical plans on top. The Spark side builds
 partsupp ONCE per (session, fixture dir) as a DataFrame persisted
 through the bounded ``caching.get_or_build`` slot (the same
-build-once/reuse contract as the ANN indexes) and exposes it as a
-temp view; the DuckDB oracle re-derives it from scratch with an
-equivalent CTE, so the check stays engine-vs-engine with zero
-shared text evaluation.
+build-once/reuse contract as the ANN indexes) and binds it, with the
+fixture tables, into each query's text as a DataFrame argument
+(``catalog.run_sql``); the DuckDB oracle reads the same template with
+plain names and re-derives partsupp from scratch with an equivalent
+CTE, so the check stays engine-vs-engine with zero shared text
+evaluation.
 
 Scale shape (all five): partsupp is one groupBy over lineitem (hash
 partial-agg, one shuffle, output bounded by |part|×|supplier|
@@ -51,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import get_or_build
-from dist_map_reduce_spark.catalog import load_table, register_views
+from dist_map_reduce_spark.catalog import load_table, plain_sql, run_sql
 from dist_map_reduce_spark.registry import query
 
 # Synthetic partsupp as a DuckDB CTE — the oracle-side derivation.
@@ -68,17 +70,17 @@ _PS = """
 
 
 def _with_ps(body: str) -> str:
-    """Oracle text: prepend the partsupp CTE to a query body."""
+    """Oracle text: a query template with plain table names, after the
+    partsupp CTE."""
+    body = plain_sql(body)
     if body.lstrip().startswith("WITH"):
         return body.replace("WITH", f"WITH {_PS},", 1)
     return f"WITH {_PS}\n{body}"
 
 
-def _prepare(spark: SparkSession, sf_dir: str) -> None:
-    """Register fixture views plus the partsupp temp view (built
-    once per (session, sf_dir) via the bounded persist slot —
-    subsequent queries reuse the cached aggregate)."""
-    register_views(spark, sf_dir)
+def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthetic partsupp, built once per (session, sf_dir) in the
+    bounded slot; later queries reuse the cached aggregate."""
 
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
@@ -92,26 +94,28 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
             F.min("l_extendedprice").alias("ps_supplycost"),
         )
 
-    get_or_build(spark, "tpch_partsupp", sf_dir, build).createOrReplaceTempView(
-        "partsupp"
-    )
+    return get_or_build(spark, "tpch_partsupp", sf_dir, build)
+
+
+def _run(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    return run_sql(spark, sf_dir, text, partsupp=_partsupp(spark, sf_dir))
 
 
 _Q2 = """
 SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_name,
        ps.ps_supplycost
-FROM part p
-JOIN partsupp ps ON p.p_partkey = ps.ps_partkey
-JOIN supplier s ON s.s_suppkey = ps.ps_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
+FROM {part} p
+JOIN {partsupp} ps ON p.p_partkey = ps.ps_partkey
+JOIN {supplier} s ON s.s_suppkey = ps.ps_suppkey
+JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+JOIN {region} r ON n.n_regionkey = r.r_regionkey
 WHERE p.p_size <= 15 AND p.p_type = 'ECONOMY' AND r.r_name = 'EUROPE'
   AND ps.ps_supplycost = (
     SELECT min(ps2.ps_supplycost)
-    FROM partsupp ps2
-    JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
-    JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+    FROM {partsupp} ps2
+    JOIN {supplier} s2 ON s2.s_suppkey = ps2.ps_suppkey
+    JOIN {nation} n2 ON s2.s_nationkey = n2.n_nationkey
+    JOIN {region} r2 ON n2.n_regionkey = r2.r_regionkey
     WHERE ps2.ps_partkey = p.p_partkey AND r2.r_name = 'EUROPE'
   )
 ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
@@ -126,8 +130,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part aggregate + equi-join. The ORDER BY chain
     (acctbal DESC, nation, supplier, part) is a unique total order,
     so LIMIT 100 selects the same set in both engines."""
-    _prepare(spark, sf_dir)
-    return spark.sql(_Q2)
+    return _run(spark, sf_dir, _Q2)
 
 
 _Q9 = """
@@ -138,13 +141,13 @@ SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
          - CAST(ps.ps_supplycost AS DECIMAL(18,2))
            * CAST(l.l_quantity AS DECIMAL(18,2))
        ), 2) AS DOUBLE) AS sum_profit
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN partsupp ps
+FROM {lineitem} l
+JOIN {part} p ON p.p_partkey = l.l_partkey
+JOIN {partsupp} ps
   ON ps.ps_partkey = l.l_partkey AND ps.ps_suppkey = l.l_suppkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
+JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+JOIN {orders} o ON o.o_orderkey = l.l_orderkey
+JOIN {nation} n ON n.n_nationkey = s.s_nationkey
 WHERE p.p_name LIKE '%widget%'
 GROUP BY n.n_name, year(o.o_orderdate)
 """
@@ -156,8 +159,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a LIKE filter on the part dimension; profit (revenue minus
     supply cost × quantity) accumulated in DECIMAL so the sum is
     exact and engine-independent, rounded to cents once."""
-    _prepare(spark, sf_dir)
-    return spark.sql(_Q9)
+    return _run(spark, sf_dir, _Q9)
 
 
 _Q11 = """
@@ -165,9 +167,9 @@ WITH nation_ps AS (
   SELECT ps.ps_partkey,
          CAST(ps.ps_supplycost AS DECIMAL(18,2))
            * CAST(ps.ps_availqty AS DECIMAL(18,2)) AS stock_value
-  FROM partsupp ps
-  JOIN supplier s ON s.s_suppkey = ps.ps_suppkey
-  JOIN nation n ON n.n_nationkey = s.s_nationkey
+  FROM {partsupp} ps
+  JOIN {supplier} s ON s.s_suppkey = ps.ps_suppkey
+  JOIN {nation} n ON n.n_nationkey = s.s_nationkey
   WHERE n.n_name IN ('NATION_3', 'NATION_7', 'NATION_11')
 )
 SELECT ps_partkey,
@@ -195,15 +197,16 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     ungrouped total by associativity) as a 1-row broadcast scalar —
     the literal SQL form would evaluate the nation_ps CTE twice, one
     full pass per branch."""
-    _prepare(spark, sf_dir)
-    vals = spark.sql(
+    vals = _run(
+        spark,
+        sf_dir,
         """
         SELECT ps.ps_partkey,
                sum(CAST(ps.ps_supplycost AS DECIMAL(18,2))
                    * CAST(ps.ps_availqty AS DECIMAL(18,2))) AS sv
-        FROM partsupp ps
-        JOIN supplier s ON s.s_suppkey = ps.ps_suppkey
-        JOIN nation n ON n.n_nationkey = s.s_nationkey
+        FROM {partsupp} ps
+        JOIN {supplier} s ON s.s_suppkey = ps.ps_suppkey
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
         WHERE n.n_name IN ('NATION_3', 'NATION_7', 'NATION_11')
         GROUP BY ps.ps_partkey
         """
@@ -224,13 +227,13 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q16 = """
 SELECT p.p_brand, p.p_type, p.p_size,
        count(DISTINCT ps.ps_suppkey) AS supplier_cnt
-FROM partsupp ps
-JOIN part p ON p.p_partkey = ps.ps_partkey
+FROM {partsupp} ps
+JOIN {part} p ON p.p_partkey = ps.ps_partkey
 WHERE p.p_brand <> 'Brand#2'
   AND p.p_type NOT LIKE 'PROMO%'
   AND p.p_size IN (1, 4, 7, 10, 14, 19, 23, 36, 45, 49)
   AND ps.ps_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+    SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0
   )
 GROUP BY p.p_brand, p.p_type, p.p_size
 """
@@ -243,25 +246,24 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans as a left-anti join (the blacklist predicate adapts the
     original's comment-LIKE to s_acctbal < 0, the fixture's only
     supplier-quality column)."""
-    _prepare(spark, sf_dir)
-    return spark.sql(_Q16)
+    return _run(spark, sf_dir, _Q16)
 
 
 _Q20 = """
 SELECT s.s_name, n.n_name
-FROM supplier s
-JOIN nation n ON n.n_nationkey = s.s_nationkey
+FROM {supplier} s
+JOIN {nation} n ON n.n_nationkey = s.s_nationkey
 WHERE n.n_name IN ('NATION_1', 'NATION_2', 'NATION_3', 'NATION_4',
                    'NATION_5')
   AND s.s_suppkey IN (
     SELECT ps.ps_suppkey
-    FROM partsupp ps
+    FROM {partsupp} ps
     WHERE ps.ps_partkey IN (
-        SELECT p_partkey FROM part WHERE p_name LIKE 'small%'
+        SELECT p_partkey FROM {part} WHERE p_name LIKE 'small%'
       )
       AND ps.ps_availqty > 2 * (
         SELECT CAST(sum(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        FROM lineitem l
+        FROM {lineitem} l
         WHERE l.l_partkey = ps.ps_partkey
           AND l.l_suppkey = ps.ps_suppkey
           AND l.l_shipdate >= TIMESTAMP '1996-01-01'
@@ -281,5 +283,4 @@ def q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     as semi joins. (part, supplier) pairs with no shipments in the
     window yield a NULL sum and are excluded — standard TPC-H
     comparison semantics, identical in both engines."""
-    _prepare(spark, sf_dir)
-    return spark.sql(_Q20)
+    return _run(spark, sf_dir, _Q20)

@@ -40,9 +40,11 @@ these hold:
 
 A construction is never stored if it touched ``scratch_path`` (a sink
 write), started a stream, took a ``key=None`` slot, or launched a
-Spark job outside a ``get_or_build`` miss. What happens inside a miss
-is the slot's business, since the slot is already the cached
-materialisation: its jobs, tables and artifacts are not the query's.
+Spark job outside a memo miss. A memo miss is a ``get_or_build`` miss
+or a ``load_table`` miss. What happens inside one is the memo entry's
+business, since the entry is already the cached result: a slot's
+jobs, tables and artifacts are not the query's, and the schema job of
+a table read is covered by replaying ``load_table``.
 ``caching.clear()`` drops every plan.
 """
 
@@ -86,8 +88,8 @@ class _Construction:
     tables: dict = field(default_factory=dict)
     slots: dict = field(default_factory=dict)
     storable: bool = True
-    slot_jobs: int = 0  # jobs run inside get_or_build misses
-    depth: int = 0  # get_or_build misses entered and not yet left
+    memo_jobs: int = 0  # jobs run inside memo misses
+    depth: int = 0  # memo misses entered and not yet left
 
 
 # the constructions running now, outermost first (a query may call
@@ -97,7 +99,7 @@ _OPEN: list[_Construction] = []
 
 def _recording() -> list[_Construction]:
     """The running constructions a dependency counts for: those not
-    inside a slot build."""
+    inside a memo miss."""
     return [c for c in _OPEN if c.depth == 0]
 
 
@@ -121,9 +123,10 @@ def note_unstorable() -> None:
 
 
 @contextlib.contextmanager
-def slot_build(spark: SparkSession):
-    """Scope of a ``get_or_build`` miss: its jobs and dependencies are
-    the slot's, not the running constructions'."""
+def memo_build(spark: SparkSession):
+    """Scope of a memo miss (``get_or_build`` or ``load_table``): its
+    jobs and dependencies are the memo entry's, not the running
+    constructions'."""
     outer = _recording()
     if not outer:
         yield
@@ -137,7 +140,7 @@ def slot_build(spark: SparkSession):
         ran = _jobs(spark) - jobs0
         for c in outer:
             c.depth -= 1
-            c.slot_jobs += ran
+            c.memo_jobs += ran
 
 
 def _jobs(spark: SparkSession) -> int:
@@ -184,7 +187,7 @@ def _cached(name: str, fn: QueryFn) -> QueryFn:
             df = fn(spark, sf_dir)
         finally:
             _OPEN.pop()
-        if c.storable and _jobs(spark) - c.jobs0 == c.slot_jobs:
+        if c.storable and _jobs(spark) - c.jobs0 == c.memo_jobs:
             PLANS[name] = Plan(
                 spark, sf_dir, c.tables, c.slots, _conf_hash(spark),
                 df._jdf.logicalPlan(),

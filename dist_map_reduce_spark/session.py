@@ -78,10 +78,6 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        # let AQE re-plan partitioning for persisted subtrees too
-        # (dedup/similarity persist small intermediates; without this
-        # their shuffles keep the raw shuffle-partition count)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # InferFiltersFromGenerate rewrites explode(expr) into
         # Filter(size(expr) > 0 AND isnotnull(expr)) + explode(expr)

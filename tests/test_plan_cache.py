@@ -173,3 +173,21 @@ def test_resample_interp_warm_path_ignores_session_zone(spark, duck):
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         caching.clear()
+
+
+def test_first_read_of_a_table_is_stored(spark, tmp_path):
+    """A construction that is the first to read a table is stored on
+    its first call: the footer read's schema job counts as the table
+    memo's, like a slot build's, not the query's."""
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf_dir)  # a new dir: a load_table miss
+    try:
+        jobs = _jobs(spark)
+        first = registry.QUERIES["wordcount"](spark, sf_dir)
+        assert _jobs(spark) > jobs  # the schema job ran
+        plan = registry.PLANS["wordcount"]
+        second = registry.QUERIES["wordcount"](spark, sf_dir)
+        assert registry.PLANS["wordcount"] is plan
+        assert _same_plan(first, second)
+    finally:
+        caching.clear()
